@@ -105,7 +105,7 @@ object TableManifest {
     * never need to know writer ids exist. */
   val DefaultWriter = "default"
 
-  private def fsOf(spark: SparkSession, dir: String) =
+  private[graft] def fsOf(spark: SparkSession, dir: String) =
     new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
 
   private def manifestSeq(name: String): Long =
@@ -591,6 +591,27 @@ object TableManifest {
         HeadInfo(manifestSeq(p.getName), parseSnapshot(spark, p), ops + 1)
       }
     }
+  }
+
+  /** The head now, probed up from `known`, a head seen earlier at
+    * `tableDir`, through `fs` alone: `exists` on `known + 1`, `known +
+    * 2`, … until the first missing manifest, then on `known` once more.
+    * No hint, no checkpoint, no parse — an idle table costs exactly two
+    * calls. Sound by the same rules [[resolveHead]]'s probe uses: commit
+    * seqs are dense and truncation removes only a prefix, so `known`
+    * still present AFTER the first miss means every seq from `known` to
+    * the last one found was present at that miss, which makes it the
+    * head at that instant. Returns the head and the calls it cost, or
+    * None when `known` is gone (truncated) — the caller then resolves
+    * the head from scratch. */
+  private[graft] def probeHeadFrom(fs: org.apache.hadoop.fs.FileSystem,
+                                   tableDir: String,
+                                   known: Long): Option[(Long, Int)] = {
+    var seq = known
+    while (fs.exists(manifestPath(tableDir, seq + 1))) seq += 1
+    if (fs.exists(manifestPath(tableDir, known)))
+      Some((seq, (seq - known).toInt + 2))
+    else None
   }
 
   /** The test seam for the flat-resolution contract: the op count one
@@ -3574,13 +3595,30 @@ object TableManifest {
     val seed = read(spark, tableDir).limit(0)
       .withColumn(ChangeOpCol, lit(""))
       .withColumn(ChangeVersionCol, lit(0L))
+    val stamps = new org.apache.spark.sql.types.MetadataBuilder()
+      .putLongArray(StampVersionsKey, batches.map(_.version).toArray)
+      .putStringArray(StampOpsKey, batches.map(_.op).toArray)
+      .build()
     batches.foldLeft(seed) { (acc, b) =>
       acc.unionByName(
         b.rows.withColumn(ChangeOpCol, lit(b.op))
           .withColumn(ChangeVersionCol, lit(b.version)),
         allowMissingColumns = true)
-    }
+    }.withMetadata(ChangeVersionCol, stamps)
   }
+
+  /** Metadata keys on [[ChangeVersionCol]] under which [[changeFrame]]
+    * records the frame's (version, op) list, in version order. */
+  private val StampVersionsKey = "graft.change_versions"
+  private val StampOpsKey = "graft.change_ops"
+
+  /** The (version, op) list a change frame's schema names, if stamped. */
+  private[graft] def changeStamps(schema: org.apache.spark.sql.types.StructType)
+      : Option[Seq[(Long, String)]] =
+    schema.find(_.name == ChangeVersionCol).map(_.metadata)
+      .filter(m => m.contains(StampVersionsKey) && m.contains(StampOpsKey))
+      .map(m => m.getLongArray(StampVersionsKey).toSeq
+        .zip(m.getStringArray(StampOpsKey)))
 
   /** The CHANGEFEED-mode streaming source's matching SINK: a
     * `foreachBatch` function applying each op-coded version of the
@@ -3597,73 +3635,65 @@ object TableManifest {
     * commit order within the batch. This is [[relayChanges]] driven
     * through Structured Streaming instead of a poll loop (q263 pins
     * the whole pipeline against the DuckDB oracle). ONE sink per
-    * (destination, writerId). */
-  /** The (version, op) pairs a changefeed micro-batch carries, read
-    * from the batch's OWN PLAN instead of a distinct+collect job:
-    * [[changeFrame]] stamps every union branch with
-    * `lit(op) as _change_op` / `lit(version) as _change_version`, so
-    * the analyzed plan holds the full list as literals — one branch,
-    * one pair, in branch order (the seed branch's ("", 0) sentinel is
-    * dropped). Returns None when the plan does not carry the expected
-    * shape (a caller built the frame some other way) — the sink then
-    * falls back to the collect, so correctness never depends on plan
-    * walking. Saves one Spark job (a full scan of the batch's files)
-    * per micro-batch. */
-  private[graft] def changeVersionsFromPlan(batch: DataFrame)
-      : Option[Seq[(Long, String)]] = {
-    import org.apache.spark.sql.catalyst.expressions.{Alias, Literal}
-    import org.apache.spark.sql.catalyst.plans.logical.Project
-    val plan = batch.queryExecution.analyzed
-    val versions = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val ops = scala.collection.mutable.ArrayBuffer.empty[String]
-    plan.foreach {
-      case p: Project => p.projectList.foreach {
-        case a: Alias => a.child match {
-          case Literal(v: Long, _) if a.name == ChangeVersionCol =>
-            versions += v
-          case Literal(s: org.apache.spark.unsafe.types.UTF8String, _)
-              if a.name == ChangeOpCol =>
-            ops += s.toString
-          case _ => ()
-        }
-        case _ => ()
-      }
-      case _ => ()
-    }
-    if (versions.isEmpty || versions.size != ops.size) None
-    else Some(versions.zip(ops).toSeq
-      .filterNot { case (v, op) => v == 0L && op.isEmpty } // seed sentinel
-      .distinct.sortBy(_._1))
-  }
-
+    * (destination, writerId).
+    *
+    * The batch's (version, op) list comes from its schema:
+    * [[changeFrame]] records it in the metadata of [[ChangeVersionCol]],
+    * which survives the engine's micro-batch aliasing and the
+    * `LogicalRDD` that `foreachBatch` wraps the batch in — no job. A
+    * frame without stamps (built some other way) pays one
+    * `distinct().collect()` for the list. A stamped frame must hold no
+    * version its stamps do not name — two change frames unioned keep
+    * only the first one's stamps — so every row is checked against the
+    * list inside each applied version's own pass over the batch, and an
+    * unnamed version fails the first such pass before it commits; when
+    * every version replay-skips, one check of its own does it. The
+    * previous form (commit 0b0a144) read the list from the analyzed
+    * plan's literal stamps; under `foreachBatch` the plan is a
+    * `LogicalRDD`, so that walk never matched and every micro-batch
+    * paid the collect. */
   def changefeedSink(dstDir: String, keys: Seq[String], tsCol: String,
                      tieCol: String, numBuckets: Int = 16,
                      writerId: String = "cfs")
       : (DataFrame, Long) => Unit =
     (batch: DataFrame, _: Long) => {
-      import org.apache.spark.sql.functions.col
+      import org.apache.spark.sql.functions.{col, lit, raise_error, when}
       val s = batch.sparkSession
-      val vs = changeVersionsFromPlan(batch).getOrElse(batch
+      val stamped = changeStamps(batch.schema).filter(_.nonEmpty)
+      val vs = stamped.getOrElse(batch
         .select(col(ChangeVersionCol), col(ChangeOpCol))
         .distinct().collect()
         .map(r => (r.getLong(0), r.getString(1))).toSeq.sortBy(_._1))
-      vs.foreach { case (v, op) =>
-        val rows = batch.filter(col(ChangeVersionCol) === v)
+      val named = col(ChangeVersionCol).isin(vs.map(_._1): _*)
+      val unnamed = s"changefeedSink: the batch holds a version its " +
+        s"stamps (${vs.map(_._1).mkString(",")}) do not name — a union " +
+        "of change frames? Apply each frame on its own."
+      val version =
+        if (stamped.isEmpty) col(ChangeVersionCol)
+        else when(named, col(ChangeVersionCol))
+          .otherwise(raise_error(lit(unnamed)))
+      val ran = vs.map { case (v, op) =>
+        val rows = batch.filter(version === v)
           .drop(ChangeVersionCol, ChangeOpCol)
         op match {
           case "insert" =>
-            append(s, dstDir, rows, Some(v), writerId = writerId)
+            append(s, dstDir, rows, Some(v), writerId = writerId).isDefined
           case "upsert" =>
             upsertDelta(s, dstDir, rows, keys, tsCol, tieCol,
-              numBuckets, Some(v), writerId = writerId)
+              numBuckets, Some(v), writerId = writerId).isDefined
           case "delete" =>
             deleteRows(s, dstDir,
               rows.select(keys.map(col): _*).distinct(), keys,
-              Some(v), writerId = writerId)
+              Some(v), writerId = writerId).isDefined
           case other => throw new IllegalStateException(
             s"changefeedSink: unknown change op '$other' — corrupt feed?")
         }
       }
+      // every version replay-skipped, so no pass read a row: check the
+      // stamps here, or an unnamed version would go unapplied silently
+      if (stamped.isDefined && !ran.contains(true) &&
+          !batch.filter(!named).isEmpty)
+        throw new IllegalStateException(unnamed)
       ()
     }
 

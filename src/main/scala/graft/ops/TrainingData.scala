@@ -1000,7 +1000,13 @@ object TrainingData {
     * Determinism: scores are the q131 recipe (idf/tf tree mirrored
     * token-for-token in the oracle, DECIMAL(28,12) order-free sum, cast
     * double) — bit-equal cross-engine, so rank comparisons and the
-    * 1.0/rank IEEE divide are hash-exact. */
+    * 1.0/rank IEEE divide are hash-exact.
+    *
+    * Caching: the tokenized corpus is persisted and NOT unpersisted
+    * here — the returned frame is lazy and still reads it. The caller
+    * releases it with `spark.catalog.clearCache()` after consuming the
+    * result, as `graft.Bench` and `graft.Verify` do per query; a library
+    * caller that skips this keeps one cached token frame per call. */
   def retrievalEval(docs: DataFrame, textCol: String = "text",
                     idCol: String = "doc_id", k: Int = 10): DataFrame = {
     val toks = graft.functions.wordTokens(col(textCol))

@@ -126,11 +126,37 @@ class GraftManifestSource(spark: SparkSession, tableDir: String,
     case other => other.json().trim.toLong // engine-recovered offset
   }
 
+  /** One filesystem handle for every poll: resolving it per poll copies
+    * the session's Hadoop configuration each time. */
+  private lazy val fs = TableManifest.fsOf(spark, tableDir)
+
+  /** The head the last poll reported — the next poll probes up from it
+    * ([[graft.ops.TableManifest.probeHeadFrom]]: two `exists` calls on
+    * an idle table) and resolves from scratch only when it is gone. */
+  @volatile private var lastHead: Option[Long] = None
+
+  /** Test seams: the filesystem calls the last poll made, and how many
+    * polls resolved the head from scratch (each parses a manifest). */
+  @volatile private[graft] var lastPollOps: Int = 0
+  @volatile private[graft] var headResolutions: Int = 0
+
   override def getOffset: Option[Offset] = {
-    val head = TableManifest.resolveHead(spark, tableDir).getOrElse(
+    val (head, ops) =
+      lastHead.flatMap(TableManifest.probeHeadFrom(fs, tableDir, _))
+        .getOrElse {
+          headResolutions += 1
+          val h = TableManifest.resolveHead(spark, tableDir).getOrElse(
+            throw new IllegalStateException(
+              s"GraftManifestSource: no manifest at $tableDir — the " +
+                "table was never published or its log vanished"))
+          (h.seq, h.ops)
+        }
+    lastHead.foreach(prev => if (head < prev)
       throw new IllegalStateException(
-        s"GraftManifestSource: no manifest at $tableDir — the table " +
-          "was never published or its log vanished")).seq
+        s"GraftManifestSource: head of $tableDir went back from $prev " +
+          s"to $head — the table was replaced under the stream"))
+    lastHead = Some(head)
+    lastPollOps = ops
     if (head > startVersion) Some(LongOffset(head)) else None
   }
 

@@ -128,12 +128,11 @@ object Jobs {
         val backup = s"$workDir/backup"
         // seed destination on first run so backup has something to validate
         val extracted = graft.ops.Relational.q03FlagshipSql(spark, cfg.sfDir)
+        // the backup's main count is the previous run's output count
         val prev =
           if (graft.sources.TableCatalog.exists(spark, main, "pah_out"))
-            graft.sources.TableCatalog.load(spark, main, "pah_out").count()
+            Pipeline.backupAndValidate(spark, main, "pah_out", backup)
           else 0L
-        if (prev > 0)
-          Pipeline.backupAndValidate(spark, main, "pah_out", backup)
         val loaded = Pipeline.loadAndVerify(extracted, main, "pah_out")
         val variance = Pipeline.validateVariance(loaded, prev)
         JobResult(cfg.id, cfg.name, "success", loaded,

@@ -1,7 +1,8 @@
 package graft.workflow
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.{col, count, lit}
 
 import graft.sources.TableCatalog
 
@@ -51,25 +52,42 @@ object Pipeline {
   /** W3 — backup-and-validate: truncate backup, copy main→backup, assert
     * counts match (hard fail, mirroring
     * /root/reference/services/jcap_pa_etl_service.py:157-163). Empty main
-    * skips the copy (`:143-145`). Returns rows backed up. */
+    * skips the copy (`:143-145`). Returns rows backed up, which is main's
+    * row count — callers that need that count take it from here. The
+    * count and the copy read the same load of main, so both see the same
+    * files. */
   def backupAndValidate(spark: SparkSession, mainDir: String, table: String,
                         backupDir: String): Long = {
-    val mainCount = TableCatalog.load(spark, mainDir, table).count()
+    val main = TableCatalog.load(spark, mainDir, table)
+    val mainCount = main.count()
     if (mainCount == 0) return 0L
-    val backedUp =
-      copyTable(spark, mainDir, table, backupDir, SaveMode.Overwrite)
+    TableCatalog.write(main, backupDir, table, SaveMode.Overwrite)
+    val backedUp = TableCatalog.load(spark, backupDir, table).count()
     require(backedUp == mainCount,
       s"backup validation failed: main=$mainCount backup=$backedUp")
     backedUp
   }
 
-  /** W4/W6 — load-and-verify: overwrite destination with `df`, re-count,
+  /** Writes `df` and returns the rows that write produced, observed on
+    * the write action itself (`Dataset.observe`): `df` runs once, and
+    * the count is exactly what landed even if a live source gains files
+    * mid-call. */
+  private def writeCounted(df: DataFrame, dir: String, table: String,
+                           mode: SaveMode): Long = {
+    val written = Observation()
+    TableCatalog.write(df.observe(written, count(lit(1)).as("rows")),
+      dir, table, mode)
+    written.get("rows").asInstanceOf[Long]
+  }
+
+  /** W4/W6 — load-and-verify: overwrite destination with `df`, counting
+    * the rows that write produced, re-count the destination (the
+    * reference's read-back verification),
     * fail on zero rows, warn (alert) on count mismatch
     * (/root/reference/services/jcap_pa_etl_service.py:322-355). */
   def loadAndVerify(df: DataFrame, dstDir: String, table: String,
                     alerter: Alerter = LogAlerter): Long = {
-    val expected = df.count()
-    TableCatalog.write(df, dstDir, table, SaveMode.Overwrite)
+    val expected = writeCounted(df, dstDir, table, SaveMode.Overwrite)
     val actual =
       TableCatalog.load(df.sparkSession, dstDir, table).count()
     require(actual > 0 || expected == 0,
@@ -87,7 +105,11 @@ object Pipeline {
     * reprocess the full source every cycle. Reading max(watermark) from
     * the sink is one column-pruned scan; the source filter pushes down to
     * its scan, so a daily increment touches only new partitions at 100 TB.
-    * First run (no destination) loads everything. Returns rows appended. */
+    * First run (no destination) loads everything. Returns rows appended,
+    * counted by the append itself: one pass over the new rows, no cache.
+    * A run with no new rows adds no file: Spark's append of an empty
+    * frame still writes one schema-only file, so the files this run
+    * added are deleted again. */
   def incrementalLoad(spark: org.apache.spark.sql.SparkSession,
                       src: DataFrame, dstDir: String, table: String,
                       watermarkCol: String): Long = {
@@ -96,22 +118,28 @@ object Pipeline {
     // runs — loading them only on run one would be silently inconsistent);
     // stamp the column before calling this
     val stamped = src.filter(col(watermarkCol).isNotNull)
-    val newRows = (
-      if (!TableCatalog.exists(spark, dstDir, table)) stamped
-      else {
-        val row = TableCatalog.load(spark, dstDir, table)
-          .agg(org.apache.spark.sql.functions.max(watermarkCol)).head
-        if (row.isNullAt(0)) stamped
-        else stamped.filter(col(watermarkCol) > lit(row.get(0)))
-      })
-      // pin one snapshot: count and write must see the SAME rows even if
-      // the live source gains files between the two jobs
-      .persist()
-    try {
-      val n = newRows.count()
-      if (n > 0) TableCatalog.write(newRows, dstDir, table, SaveMode.Append)
-      n
-    } finally newRows.unpersist()
+    val dst =
+      if (!TableCatalog.exists(spark, dstDir, table)) None
+      else Some(TableCatalog.load(spark, dstDir, table))
+    val newRows = dst.fold(stamped) { d =>
+      val row = d.agg(org.apache.spark.sql.functions.max(watermarkCol)).head
+      if (row.isNullAt(0)) stamped
+      else stamped.filter(col(watermarkCol) > lit(row.get(0)))
+    }
+    val before = dst.map(_.inputFiles.map(f => new Path(f).getName).toSet)
+    val n = writeCounted(newRows, dstDir, table, SaveMode.Append)
+    if (n == 0) {
+      val out = new Path(TableCatalog.path(dstDir, table))
+      val fs = out.getFileSystem(spark.sessionState.newHadoopConf())
+      before match {
+        case None => fs.delete(out, true)
+        case Some(kept) => fs.listStatus(out).map(_.getPath)
+          .filter(p => !p.getName.startsWith("_") &&
+            !p.getName.startsWith(".") && !kept(p.getName))
+          .foreach(fs.delete(_, false))
+      }
+    }
+    n
   }
 
   /** W5 — run-over-run variance with the reference's divide-by-zero guard

@@ -1,23 +1,18 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.TableManifest
+import graft.streaming.GraftManifestSource
 
 /** The `graft-manifest` Structured Streaming SOURCE: offsets are
   * manifest versions owned by the ENGINE's checkpoint, micro-batches
   * are generation-set diffs, restarts replay the checkpointed range
   * exactly, and history mutation surfaces as a stream error. */
-class GraftManifestSourceSpec extends AnyFunSuite {
+class GraftManifestSourceSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
-
-  private def tmpDir(prefix: String): String =
-    Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), prefix).toString
 
   private def rows(ids: Range, tag: String): DataFrame = {
     import spark.implicits._
@@ -174,5 +169,104 @@ class GraftManifestSourceSpec extends AnyFunSuite {
         .as[String].collect().sorted
     assert(canon(dst).sameElements(canon(src)))
     assert(canon(dst).length == 20)
+  }
+
+  private def source(tbl: String): GraftManifestSource =
+    new GraftManifestSource(spark, tbl, 1L,
+      TableManifest.read(spark, tbl).schema)
+
+  private def offsetOf(src: GraftManifestSource): Long =
+    src.getOffset.map(_.json().trim.toLong).getOrElse(0L)
+
+  test("an idle poll costs two filesystem calls and no head resolution; " +
+      "a poll after commits probes only the new seqs") {
+    val tbl = tmpDir("msrcidle") + "/t"
+    TableManifest.publish(spark, tbl, rows(0 until 0, "seed"))
+    TableManifest.append(spark, tbl, rows(0 until 3, "a"))
+    val src = source(tbl)
+    val head = offsetOf(src) // first poll: resolved from scratch
+    assert(head == TableManifest.versions(spark, tbl).last)
+    assert(src.headResolutions == 1)
+    (1 to 3).foreach { _ =>
+      assert(offsetOf(src) == head)
+      assert(src.lastPollOps <= 2, s"idle poll made ${src.lastPollOps} calls")
+    }
+    TableManifest.append(spark, tbl, rows(3 until 5, "b"))
+    TableManifest.append(spark, tbl, rows(5 until 7, "c"))
+    assert(offsetOf(src) == head + 2)
+    assert(src.lastPollOps == 4) // head+1, head+2, head+3 (missing), head
+    assert(src.headResolutions == 1, "no poll parsed a manifest")
+  }
+
+  test("the reported offset never goes backwards: it follows commits up, " +
+      "and a table replaced under the stream is a loud error") {
+    val tbl = tmpDir("msrcmono") + "/t"
+    TableManifest.publish(spark, tbl, rows(0 until 0, "seed"))
+    val src = source(tbl)
+    val seen = (0 until 6).map { i =>
+      if (i % 2 == 0) TableManifest.append(spark, tbl, rows(i until i + 1, "a"))
+      offsetOf(src)
+    }
+    assert(seen == seen.sorted && seen.last == 4L, seen)
+    // the log replaced by a fresh, shorter one
+    val fs = TableManifest.fsOf(spark, tbl)
+    fs.delete(new org.apache.hadoop.fs.Path(tbl), true)
+    TableManifest.publish(spark, tbl, rows(0 until 0, "seed"))
+    val e = intercept[IllegalStateException](src.getOffset)
+    assert(e.getMessage.contains("went back"), e.getMessage)
+  }
+
+  test("a truncateLog that removes the remembered seq falls back to " +
+      "resolving the head from scratch") {
+    val tbl = tmpDir("msrctrunc") + "/t"
+    TableManifest.publish(spark, tbl, rows(0 until 0, "seed"))
+    val src = source(tbl)
+    val remembered = TableManifest.versions(spark, tbl).last
+    src.getOffset
+    (0 until 10).foreach(i =>
+      TableManifest.append(spark, tbl, rows(i until i + 1, "a")))
+    assert(TableManifest.truncateLog(spark, tbl, keepVersions = 8) > 0)
+    assert(!TableManifest.versions(spark, tbl).contains(remembered))
+    assert(offsetOf(src) == TableManifest.versions(spark, tbl).last)
+    assert(src.headResolutions == 2)
+    assert(offsetOf(src) == TableManifest.versions(spark, tbl).last)
+    assert(src.headResolutions == 2 && src.lastPollOps <= 2)
+  }
+
+  test("a live changefeed stream into changefeedSink runs no collect: the " +
+      "(version, op) list comes from the batch schema's stamps") {
+    import spark.implicits._
+    val src = tmpDir("msrcstamp") + "/src"
+    val dst = tmpDir("msrcstamp") + "/dst"
+    val ckpt = tmpDir("msrcstampckpt")
+    def r(ids: Range, ts: Long, tag: String): DataFrame =
+      ids.map(i => (i.toLong, ts, tag)).toDF("id", "ts", "tag")
+    TableManifest.publish(spark, src, r(0 until 0, 0, "seed"))
+    TableManifest.publish(spark, dst, r(0 until 0, 0, "seed"))
+    val (_, actions) = Actions.during(spark) {
+      val q = spark.readStream.format("graft-manifest")
+        .option("changefeed", "true").load(src)
+        .writeStream
+        .option("checkpointLocation", ckpt)
+        .foreachBatch(TableManifest.changefeedSink(dst, Seq("id"), "ts",
+          "id", numBuckets = 4))
+        .start()
+      try {
+        TableManifest.append(spark, src, r(0 until 6, 1, "a"))
+        q.processAllAvailable()
+        TableManifest.upsertDelta(spark, src, r(3 until 9, 2, "b"),
+          Seq("id"), "ts", "id", numBuckets = 4)
+        TableManifest.deleteRows(spark, src, Seq(0L).toDF("id"), Seq("id"))
+        q.processAllAvailable()
+        assert(q.recentProgress.count(_.numInputRows > 0) >= 2)
+      } finally { q.stop(); q.awaitTermination() }
+    }
+    assert(!actions.exists(_.name == "collect"),
+      s"collects: ${actions.count(_.name == "collect")}")
+    def canon(dir: String): Array[String] =
+      TableManifest.read(spark, dir)
+        .select(concat_ws("|", col("id"), col("ts"), col("tag")))
+        .as[String].collect().sorted
+    assert(canon(dst).sameElements(canon(src)) && canon(dst).length == 8)
   }
 }

@@ -1,14 +1,12 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.Streams
 
-class StreamingSpec extends AnyFunSuite {
+class StreamingSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
 
   private def ts(min: Int): java.sql.Timestamp =
@@ -25,8 +23,7 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[Streams.Event]
     input.addData(sampleEvents: _*)
-    val dir = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "strm").toString
+    val dir = tmpDir("strm")
     val q = Streams.tumblingCounts(input.toDF(), windowLen = "30 minutes")
       .writeStream.format("memory").queryName("tumbling_test")
       .outputMode("update")
@@ -64,8 +61,7 @@ class StreamingSpec extends AnyFunSuite {
     input.addData((0L, "apple banana apple cherry"),
       (2L, "dog elephant fox dog"),
       (4L, "banana dog")) // mixed + an unseen-token-free doc
-    val dir = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "strm").toString
+    val dir = tmpDir("strm")
     val q = Streams.classifyStream(
         input.toDF().toDF("doc_id", "text"), model)
       .writeStream.format("memory").queryName("classify_test")
@@ -93,8 +89,7 @@ class StreamingSpec extends AnyFunSuite {
       .toDF("event_type", "weight")
     val input = MemoryStream[Streams.Event]
     input.addData(sampleEvents: _*)
-    val dir = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "strm").toString
+    val dir = tmpDir("strm")
     val q = Streams.enrichWithDim(input.toDF(), dim, "event_type")
       .select(col("event_id"), col("weight") * col("value"))
       .writeStream.format("memory").queryName("enrich_test")
@@ -114,8 +109,7 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[Streams.Event]
-    val dir = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "upsert").toString
+    val dir = tmpDir("upsert")
     val q = Streams.upsertSnapshotSink(input.toDF(), Seq("user_id"), "ts",
       "event_id", s"$dir/snapshot", s"$dir/ckpt")
     try {
@@ -141,8 +135,7 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[Streams.Event]
     input.addData(sampleEvents: _*)
-    val dir = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "strm").toString
+    val dir = tmpDir("strm")
     val q = Streams.runningUserTotals(input.toDS())
       .writeStream.format("memory").queryName("state_test")
       .outputMode("update")
@@ -161,8 +154,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("file-source stream over the corpus matches the batch aggregation") {
-    val dir = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "strm").toString
+    val dir = tmpDir("strm")
     val q = Streams.tumblingCounts(
         Streams.eventsFileStream(spark, TestSpark.sfDir))
       .writeStream.format("memory").queryName("file_stream_test")
@@ -187,8 +179,7 @@ class StreamingSpec extends AnyFunSuite {
   test("checkpointed parquet sink is exactly-once across restart") {
     import org.apache.spark.sql.functions.col
     import org.apache.spark.sql.streaming.Trigger
-    val base = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "strm").toString
+    val base = tmpDir("strm")
     val in = s"$base/in"; val out = s"$base/out"; val ckpt = s"$base/ckpt"
     new java.io.File(in).mkdirs()
     val src = new java.io.File(s"${TestSpark.sfDir}/events.parquet").toPath
@@ -234,8 +225,7 @@ class StreamingSpec extends AnyFunSuite {
       (2L, ts(1), "a second distinct document"),
       (3L, ts(2), "the first document body"), // re-delivery of 1's content
       (4L, ts(3), "a third distinct document"))
-    val dir = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "strm").toString
+    val dir = tmpDir("strm")
     val q = Streams.dedupStream(
         input.toDF().toDF("doc_id", "ts", "text"), "text")
       .writeStream.format("memory").queryName("dedup_test")
@@ -275,8 +265,7 @@ class StreamingSpec extends AnyFunSuite {
       Streams.Event(101L, ts(5), 10L, "click", 0.0),  // in horizon
       Streams.Event(102L, ts(50), 20L, "click", 0.0), // beyond 30 min
       Streams.Event(103L, ts(2), 30L, "click", 0.0))  // no view at all
-    val dir = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "strm").toString
+    val dir = tmpDir("strm")
     val q = Streams.joinViewsToClicks(views.toDF(), clicks.toDF())
       .writeStream.format("memory").queryName("ssjoin_test")
       .outputMode("append")
@@ -311,8 +300,7 @@ class StreamingSpec extends AnyFunSuite {
     val b0 = burst(0, 10); val b1 = burst(1, 16); val b2 = burst(2, 16)
     val b3 = burst(3, 1)
     input.addData(b2 ++ b0 ++ b3 ++ b1: _*)
-    val dir = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "strm").toString
+    val dir = tmpDir("strm")
     val q = Streams.varianceMonitor(input.toDF(), "event_type", "ts",
         windowSeconds = 60, thresholdPct = 5.0)
       .writeStream.format("memory").queryName("varmon_test")
@@ -344,8 +332,7 @@ class StreamingSpec extends AnyFunSuite {
       "eleven twelve thirteen fourteen fifteen sixteen"
     val input = MemoryStream[(Long, String)]
     input.addData((1L, base), (3L, distinct))
-    val dir = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "strm").toString
+    val dir = tmpDir("strm")
     val q = Streams.nearDupStream(
         input.toDF().toDF("doc_id", "text"), "text", "doc_id",
         bands = 8, minEstJaccard = 0.4, stateTtlMs = -1L)
@@ -389,8 +376,7 @@ class StreamingSpec extends AnyFunSuite {
     val t0 = 1700000000000L
     def doc(id: Long, text: String, tMs: Long) =
       (id, text, new java.sql.Timestamp(tMs))
-    val dir = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "ettl").toString
+    val dir = tmpDir("ettl")
 
     // the whole 3-event-hour history replays in milliseconds of wall
     // clock — the backfill case where the two TTL semantics diverge
@@ -458,8 +444,7 @@ class StreamingSpec extends AnyFunSuite {
     val t0 = 1700000000000L
     def doc(id: Long, text: String, dSec: Long) =
       (id, text, new java.sql.Timestamp(t0 + dSec * 1000))
-    val dir = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "etanchor").toString
+    val dir = tmpDir("etanchor")
     val input = MemoryStream[(Long, String, java.sql.Timestamp)]
     // ttl 30 min, watermark delay 1 min
     val q = Streams.nearDupStreamEventTime(
@@ -531,8 +516,7 @@ class StreamingSpec extends AnyFunSuite {
     // the watermark advances between arrivals): same hit set — the
     // watermark-granular eviction agrees with the exact fold here
     val input = MemoryStream[(Long, String, java.sql.Timestamp)]
-    val dir = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "etbatch").toString
+    val dir = tmpDir("etbatch")
     val q = Streams.nearDupStreamEventTime(
         input.toDF().toDF("doc_id", "text", "ts"), "text", "doc_id", "ts",
         watermark = "1 minute", ttlMs = 30 * 60000L,
@@ -558,8 +542,7 @@ class StreamingSpec extends AnyFunSuite {
     val confs = GraftSession.rocksDbStateConfigs
     val prev = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
     confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    val dir = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "rocksm").toString
+    val dir = tmpDir("rocksm")
     def assertRocks(q: org.apache.spark.sql.streaming.StreamingQuery,
                     name: String): Unit = {
       val metrics = q.lastProgress.stateOperators.toSeq
@@ -679,8 +662,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(confs.keySet.exists(_.endsWith("stateStore.providerClass")))
     val prev = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
     confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    val dir = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "rocks").toString
+    val dir = tmpDir("rocks")
     val input = MemoryStream[Streams.Event]
     val q = Streams.runningUserTotals(input.toDS())
       .writeStream.format("memory").queryName("rocks_test")
@@ -720,8 +702,7 @@ class StreamingSpec extends AnyFunSuite {
     def ev(id: Long, uid: Long, sec: Long) = Streams.Event(id,
       new java.sql.Timestamp(1700000000000L + sec * 1000), uid, "click", 1.0)
     val input = MemoryStream[Streams.Event]
-    val dir = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "burst").toString
+    val dir = tmpDir("burst")
     val q = Streams.burstMonitor(input.toDS(), windowMs = 60000L,
         minEvents = 3)
       .writeStream.format("memory").queryName("burst_test")
@@ -761,8 +742,7 @@ class StreamingSpec extends AnyFunSuite {
         "click", 1.0)
     }
     val input = MemoryStream[Streams.Event]
-    val dir = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "hh").toString
+    val dir = tmpDir("hh")
     // one shard so the hot user and the noise contend for ONE summary
     val q = Streams.heavyHittersMonitor(input.toDS(), capacity = 10,
         minCount = 40L, nShards = 1)
@@ -808,8 +788,7 @@ class StreamingSpec extends AnyFunSuite {
         "click", 1.0)
     }
     val input = MemoryStream[Streams.Event]
-    val dir = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "hhev").toString
+    val dir = tmpDir("hhev")
     // capacity 2, threshold 3: easy to alert and easy to evict
     val q = Streams.heavyHittersMonitor(input.toDS(), capacity = 2,
         minCount = 3L, nShards = 1)
@@ -852,8 +831,7 @@ class StreamingSpec extends AnyFunSuite {
         "click", 1.0)
     }
     val input = MemoryStream[Streams.Event]
-    val dir = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "strm").toString
+    val dir = tmpDir("strm")
     // capacity 1 -> alertedCap = 64; minCount 1 so every distinct user
     // alerts (each inherits the evicted floor +1, always >= 1)
     val q = Streams.heavyHittersMonitor(input.toDS(), capacity = 1,
@@ -886,8 +864,7 @@ class StreamingSpec extends AnyFunSuite {
       "accumulated before the stop decide the alert after it") {
     import spark.implicits._
     import org.apache.spark.sql.streaming.Trigger
-    val base = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "hhr").toString
+    val base = tmpDir("hhr")
     val in = s"$base/in"; val out = s"$base/out"; val ckpt = s"$base/ckpt"
     new java.io.File(in).mkdirs()
     var id = 0L
@@ -957,8 +934,7 @@ class StreamingSpec extends AnyFunSuite {
       .toSet
     val input = MemoryStream[Streams.Event]
     input.addData(evs.toSeq: _*)
-    val dir = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "hhpar").toString
+    val dir = tmpDir("hhpar")
     val q = Streams.heavyHittersMonitor(input.toDS(), capacity = 3,
         minCount = 5L, nShards = 3)
       .writeStream.format("memory").queryName("hh_parity_test")
@@ -1005,8 +981,7 @@ class StreamingSpec extends AnyFunSuite {
         w.variance_pct, w.alert)).toSet
     val input = MemoryStream[Streams.Event]
     input.addData(evs.toSeq: _*)
-    val dir = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "varpar").toString
+    val dir = tmpDir("varpar")
     val q = Streams.varianceMonitor(input.toDF(), "event_type", "ts",
         windowSeconds = 60, thresholdPct = 5.0)
       .writeStream.format("memory").queryName("var_parity_test")
@@ -1056,8 +1031,7 @@ class StreamingSpec extends AnyFunSuite {
       .map(a => (a.user_id, a.at.getTime, a.n_in_window)).toSet
     val input = MemoryStream[Streams.Event]
     input.addData(evs.toSeq: _*)
-    val dir = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "burstpar").toString
+    val dir = tmpDir("burstpar")
     val q = Streams.burstMonitor(input.toDS(), windowMs = 60000L,
         minEvents = 3)
       .writeStream.format("memory").queryName("burst_parity_test")
@@ -1093,8 +1067,7 @@ class StreamingSpec extends AnyFunSuite {
       .toSet
     val input = MemoryStream[(Long, String)]
     input.addData(base ++ dups: _*)
-    val dir = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "ndpar").toString
+    val dir = tmpDir("ndpar")
     val q = Streams.nearDupStream(
         input.toDF().toDF("doc_id", "text"), "text", "doc_id",
         stateTtlMs = 0L)

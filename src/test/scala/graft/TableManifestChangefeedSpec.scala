@@ -70,30 +70,51 @@ class TableManifestChangefeedSpec extends AnyFunSuite {
     assert(again.isEmpty && head3 == head)
   }
 
-  test("changeVersionsFromPlan reads the batch's (version, op) list from " +
-      "the plan's literal stamps — matching the collect it replaces — and " +
-      "returns None for frames without the changefeed shape") {
+  test("changefeedSink applies a change frame by its schema stamps, and " +
+      "refuses a frame holding versions its stamps do not name (two " +
+      "change frames unioned) loudly, before any commit") {
     import spark.implicits._
-    val tbl = tmpTable("planvs")
+    val tbl = tmpTable("stamps")
+    val dst = tmpTable("stampsdst")
     TableManifest.publish(spark, tbl, rows(0 until 0, 0, "seed"))
+    TableManifest.publish(spark, dst, rows(0 until 0, 0, "seed"))
     val v0 = TableManifest.versions(spark, tbl).last
     TableManifest.append(spark, tbl, rows(0 until 10, 1, "a"), Some(0L))
     TableManifest.upsertDelta(spark, tbl, rows(5 until 15, 2, "b"),
       Seq("id"), "ts", "id", numBuckets = 4, batchId = Some(1L))
+    val v2 = TableManifest.versions(spark, tbl).last
     TableManifest.deleteRows(spark, tbl,
       Seq(7L, 8L).toDF("id"), Seq("id"), Some(2L))
     val head = TableManifest.versions(spark, tbl).last
-    val frame = TableManifest.changesBetween(spark, tbl, v0, head)
-    val collected = frame
-      .select(col(TableManifest.ChangeVersionCol),
-        col(TableManifest.ChangeOpCol))
-      .distinct().collect()
-      .map(r => (r.getLong(0), r.getString(1))).toSeq.sortBy(_._1)
-    assert(collected.map(_._2) == Seq("insert", "upsert", "delete"))
-    assert(TableManifest.changeVersionsFromPlan(frame).contains(collected))
-    // no stamps, no walk: the sink then falls back to the collect
-    assert(TableManifest.changeVersionsFromPlan(
-      rows(0 until 3, 1, "x")).isEmpty)
+    val early = TableManifest.changesBetween(spark, tbl, v0, v2)
+    val late = TableManifest.changesBetween(spark, tbl, v2, head)
+    assert(TableManifest.changeStamps(early.schema)
+      .contains(Seq((v0 + 1, "insert"), (v0 + 2, "upsert"))))
+    assert(TableManifest.changeStamps(late.schema)
+      .contains(Seq((head, "delete"))))
+    assert(TableManifest.changeStamps(rows(0 until 3, 1, "x").schema).isEmpty)
+    val sink = TableManifest.changefeedSink(dst, Seq("id"), "ts", "id",
+      numBuckets = 4)
+    def refused(first: DataFrame): Unit = {
+      val before = TableManifest.versions(spark, dst).last
+      val e = intercept[Exception](sink(first.union(late), 9L))
+      val chain = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).map(x => String.valueOf(x.getMessage)).toSeq
+      assert(chain.exists(_.contains("do not name")), chain.mkString(" | "))
+      assert(TableManifest.versions(spark, dst).last == before,
+        "part of the unioned batch was applied")
+    }
+    refused(early)
+    sink(early, 0L)
+    // the last applied version again: its stamped version replay-skips,
+    // so no pass reads a row, and the frame is still refused
+    refused(TableManifest.changesBetween(spark, tbl, v2 - 1, v2))
+    sink(late, 1L)
+    def canon(dir: String): Array[String] =
+      TableManifest.read(spark, dir)
+        .select(concat_ws("|", col("id"), col("ts"), col("tag")))
+        .as[String].collect().sorted
+    assert(canon(dst).sameElements(canon(tbl)) && canon(dst).length == 13)
   }
 
   test("enableColumnMapping's merged name list is manifest-priced and " +

@@ -8,13 +8,11 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.TableCatalog
 import graft.workflow.{Jobs, Pipeline}
 
-class WorkflowSpec extends AnyFunSuite {
+class WorkflowSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
   private val sf = TestSpark.sfDir
 
-  private def tmpDir(): String =
-    Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "wf").toString
+  private def tmpDir(): String = tmpDir("wf")
 
   test("truncate leaves an empty table with the source schema") {
     val work = tmpDir()
@@ -59,14 +57,61 @@ class WorkflowSpec extends AnyFunSuite {
     val n1 = Pipeline.incrementalLoad(spark, first, work, "orders_inc",
       "o_orderdate")
     assert(n1 == first.count(), "first run loads the full source")
-    // re-running with the same source is a no-op
+    // re-running with the same source is a no-op: it appends no file,
+    // not even the schema-only one Spark writes for an empty frame
+    def files =
+      new java.io.File(s"$work/orders_inc.parquet").list().sorted.toSeq
+    val filesBefore = files
     assert(Pipeline.incrementalLoad(spark, first, work, "orders_inc",
       "o_orderdate") == 0)
+    assert(files == filesBefore)
     // the full source appends exactly the rows past the watermark
     val n3 = Pipeline.incrementalLoad(spark, o, work, "orders_inc",
       "o_orderdate")
     assert(n1 + n3 == o.count())
     assert(TableCatalog.load(spark, work, "orders_inc").count() == o.count())
+  }
+
+  test("incrementalLoad runs its new rows once — one write, no count, no " +
+      "cache — and returns exactly the rows it appended") {
+    import org.apache.spark.sql.functions.{col, lit}
+    val work = tmpDir()
+    val o = TableCatalog.load(spark, sf, "orders")
+    val old = col("o_orderdate") < "1996-01-01"
+    // an empty source on the first run leaves no destination behind
+    assert(Pipeline.incrementalLoad(spark, o.filter(lit(false)), work,
+      "orders_inc", "o_orderdate") == 0)
+    assert(!TableCatalog.exists(spark, work, "orders_inc"))
+    Pipeline.incrementalLoad(spark, o.filter(old), work, "orders_inc",
+      "o_orderdate")
+    spark.catalog.clearCache()
+    val (n, actions) = Actions.during(spark) {
+      Pipeline.incrementalLoad(spark, o, work, "orders_inc", "o_orderdate")
+    }
+    val overSource = actions.filter(_.reads("/orders.parquet"))
+    assert(overSource.map(_.name) == Seq("command"),
+      s"actions over the source: ${overSource.map(_.name)}")
+    assert(!actions.exists(_.name == "count"), actions.map(_.name))
+    assert(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager.isEmpty, "incrementalLoad left a cache")
+    assert(n == o.filter(!old).count())
+    assert(TableCatalog.load(spark, work, "orders_inc").count() == o.count())
+  }
+
+  test("full_etl counts main once for backup and variance, reads back the " +
+      "backup and the destination, and runs the q03 extract once") {
+    val reg = Jobs.builtinRegistry(tmpDir())
+    val cfg = Jobs.JobConfig("wf", "full_etl", "full_etl", "2026-01-01",
+      sfDir = sf)
+    val seeded = Jobs.execute(spark, reg, cfg) // first run: no backup
+    assert(seeded.status == "success", seeded.error)
+    val (r, actions) = Actions.during(spark)(Jobs.execute(spark, reg, cfg))
+    assert(r.status == "success", r.error)
+    assert(actions.count(_.name == "count") == 3, actions.map(_.name))
+    assert(actions.count(_.reads("/lineitem.parquet")) == 1,
+      "the q03 extract ran more than once")
+    assert(r.rowsProcessed == seeded.rowsProcessed && r.rowsProcessed > 0)
+    assert(r.variancePct.contains(0.0))
   }
 
   test("loadEvolved merges schema versions; old files read new columns null") {
@@ -146,8 +191,7 @@ class WorkflowSpec extends AnyFunSuite {
       """{"type":"poc_etl","id":"j7","limit":5,"load_date":"2026-02-03"}""")
     assert(inline == Map("type" -> "poc_etl", "id" -> "j7",
       "limit" -> "5", "load_date" -> "2026-02-03"))
-    val f = Files.createTempFile(
-      java.nio.file.Paths.get("/root/repo/target"), "cfg", ".json")
+    val f = java.nio.file.Paths.get(tmpDir("cfg"), "job.json")
     Files.writeString(f,
       s"""{"type":"poc_etl","id":"file1","limit":3,"sf_dir":"$sf"}""")
     val cfg = RunJob.buildConfig(Map("job-config-file" -> f.toString,
@@ -166,8 +210,7 @@ class WorkflowSpec extends AnyFunSuite {
   }
 
   test("config-file job runs end-to-end through the registry") {
-    val f = Files.createTempFile(
-      java.nio.file.Paths.get("/root/repo/target"), "cfg", ".json")
+    val f = java.nio.file.Paths.get(tmpDir("cfg"), "job.json")
     Files.writeString(f,
       s"""{"type":"poc_etl","id":"e2e","limit":7,"sf_dir":"$sf"}""")
     val cfg = RunJob.buildConfig(Map("job-config-file" -> f.toString))
