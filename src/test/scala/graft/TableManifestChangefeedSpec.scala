@@ -104,6 +104,14 @@ class TableManifestChangefeedSpec extends AnyFunSuite {
       assert(TableManifest.versions(spark, dst).last == before,
         "part of the unioned batch was applied")
     }
+    // a frame without stamps is refused loudly, before any commit
+    val unstamped = rows(0 until 3, 1, "x")
+      .withColumn(TableManifest.ChangeOpCol, lit("insert"))
+      .withColumn(TableManifest.ChangeVersionCol, lit(v0 + 1))
+    val before = TableManifest.versions(spark, dst).last
+    val e = intercept[IllegalArgumentException](sink(unstamped, 8L))
+    assert(e.getMessage.contains("no change stamps"), e.getMessage)
+    assert(TableManifest.versions(spark, dst).last == before)
     refused(early)
     sink(early, 0L)
     // the last applied version again: its stamped version replay-skips,
@@ -613,8 +621,8 @@ class TableManifestChangefeedSpec extends AnyFunSuite {
       Seq("id"), "ts", "id", numBuckets = 4)
     TableManifest.compactDeltas(spark, tbl)
     val snap = TableManifest.resolveHead(spark, tbl).get.snap
-    assert(snap.merge.isEmpty && snap.buckets.contains(4))
-    assert(snap.bucketKeys.contains(Seq("id")))
+    assert(snap.merge.isEmpty &&
+      snap.buckets.contains(TableManifest.BucketLayout(4, Seq("id"))))
     // the CoW verb under different keys refuses loudly (pre-fix it
     // silently reused buckets hashed under the OLD keys, stranding
     // stale rows in buckets the new hash never reads)
@@ -637,7 +645,7 @@ class TableManifestChangefeedSpec extends AnyFunSuite {
     TableManifest.upsertDelta(spark, tbl, mk(0L until 5L, 3, "c"),
       Seq("tag"), "ts", "id", numBuckets = 4)
     val snap2 = TableManifest.resolveHead(spark, tbl).get.snap
-    assert(snap2.buckets.isEmpty && snap2.bucketKeys.isEmpty)
+    assert(snap2.buckets.isEmpty)
     // winners still exact: the 5 delta rows carry FRESH tag keys, so
     // under keys=(tag) nothing collides — 40 old + 5 new rows resolve
     // over the whole table
@@ -743,8 +751,7 @@ class TableManifestChangefeedSpec extends AnyFunSuite {
     assert(e2.getMessage.contains("reserved column"))
   }
 
-  test("retention barrier is monotonic under competing publications " +
-      "and interops with the legacy replace-file form") {
+  test("retention barrier is monotonic under competing publications") {
     val tbl = tmpTable("barrier")
     TableManifest.publish(spark, tbl, rows(0 until 2, 0, "s"))
     (1 to 11).foreach(i =>
@@ -762,11 +769,6 @@ class TableManifestChangefeedSpec extends AnyFunSuite {
     val out = fs.create(low, true)
     out.write("""{"seq":1}""".getBytes("UTF-8")); out.close()
     assert(TableManifest.readBarrier(spark, tbl) == b)
-    // legacy single-file form still reads (max semantics)
-    val legacy = new org.apache.hadoop.fs.Path(tbl, "_graft_min_seq")
-    val out2 = fs.create(legacy, true)
-    out2.write(s"""{"seq":${b + 5}}""".getBytes("UTF-8")); out2.close()
-    assert(TableManifest.readBarrier(spark, tbl) == b + 5)
   }
 
   test("INSERT INTO … VALUES aligns positionally (arity-checked); a " +

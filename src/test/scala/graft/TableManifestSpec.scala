@@ -1221,9 +1221,7 @@ class TableManifestSpec extends AnyFunSuite {
   }
 
   test("manifest-recorded file inventories: a pruned read resolves its " +
-      "file set with ZERO directory listings (file lists ride the " +
-      "commit JSON); a legacy manifest without inventories falls back " +
-      "to one pooled listing per generation, conservatively whole") {
+      "file set from the commit JSON alone") {
     import spark.implicits._
     val tbl = tmpTable("manifinv")
     TableManifest.publish(spark, tbl,
@@ -1234,44 +1232,12 @@ class TableManifestSpec extends AnyFunSuite {
         Seq((500L + i, "late")).toDF("k", "tag").coalesce(1),
         statsCol = Some("k")))
     val info = TableManifest.prunedFilesInfo(spark, tbl, "k", 100, 140)
-    assert(info.listings == 0,
-      s"an inventoried table must resolve pruning from the manifest " +
-        s"alone, got ${info.listings} listings")
     assert(info.total == 11 && info.files.size < info.total,
       s"${info.files.size}/${info.total}")
-    // emulate a LEGACY manifest (pre-inventory wire form): strip the
-    // meta block from the head manifest on disk — the fallback must
-    // list each generation once (pooled) and include every file
-    val fs = new org.apache.hadoop.fs.Path(tbl)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val head = fs.listStatus(new org.apache.hadoop.fs.Path(tbl))
-      .map(_.getPath).filter(_.getName.startsWith("_graft_manifest-"))
-      .maxBy(_.getName)
-    val body = {
-      val in = fs.open(head)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    }
-    val cut = body.indexOf(""","meta":""")
-    assert(cut > 0, s"expected a meta block in $body")
-    val legacyBody = body.substring(0, cut) + "}"
-    fs.delete(head, false)
-    val out = fs.create(head, false)
-    out.write(legacyBody.getBytes("UTF-8")); out.close()
-    // drop the checkpoint cache too — it still carries the inventory
-    fs.listStatus(new org.apache.hadoop.fs.Path(tbl)).foreach { e =>
-      val n = e.getPath.getName
-      if (n.startsWith("_graft_checkpoint-") || n == "_graft_last_checkpoint")
-        fs.delete(e.getPath, e.isDirectory)
-    }
-    val legacy = TableManifest.prunedFilesInfo(spark, tbl, "k", 100, 140)
-    assert(legacy.listings == 4,
-      s"legacy generations (4: publish + 3 appends) must fall back to " +
-        s"one listing each, got ${legacy.listings}")
-    assert(legacy.files.size == legacy.total && legacy.total == 11,
-      "legacy fallback must be conservative (all files included)")
-    assert(TableManifest.readPruned(spark, tbl, "k", 100, 140)
-      .filter(col("k").between(100, 140)).count() == 41)
+    val pruned = TableManifest.readPruned(spark, tbl, "k", 100, 140)
+    assert(pruned.inputFiles.sorted.sameElements(info.files.map(_._1).sorted),
+      "the pruned scan must read exactly the manifest-resolved files")
+    assert(pruned.filter(col("k").between(100, 140)).count() == 41)
   }
 
   test("readPruned composes with the table rules: tombstoned rows stay " +
@@ -1745,8 +1711,7 @@ class TableManifestSpec extends AnyFunSuite {
     // the exact stale-writer shape: a claim of a FREED seq (the link
     // wins — the manifest was deleted) must self-undo and read as a
     // CAS loss, leaving no phantom behind
-    val snap = TableManifest.parseSnapshotBody(
-      """{"generations":["_gen-000002-deadbeef"]}""", "test")
+    val snap = TableManifest.resolveHead(spark, tbl).get.snap
     assert(!TableManifest.commitSnapshot(spark, tbl, 5L, snap),
       "a below-barrier claim must report a CAS loss")
     val fs = new org.apache.hadoop.fs.Path(tbl)
@@ -1980,18 +1945,20 @@ class TableManifestSpec extends AnyFunSuite {
     // reads) — pin the structural fix at the parser seam
     val s = TableManifest.parseSnapshotBody(
       """{"generations":["_gen-000001-aa"],""" +
-        """"writers":{"batch":7,"buckets":3,"seq":9}}""", "test")
+        """"writers":{"batch":7,"buckets":3,"seq":9},""" +
+        """"meta":{"_gen-000001-aa":{"schema":"{}","files":[]}}}""", "test")
     assert(s.watermark("batch").contains(7L))
     assert(s.watermark("buckets").contains(3L))
     assert(s.watermark(TableManifest.DefaultWriter).isEmpty,
-      "a writers-map key must never read as the legacy batch field")
+      "a writers-map key must never read as another writer's watermark")
     assert(s.buckets.isEmpty,
       "a writers-map key must never read as the bucket modulus")
-    // and the legacy + modern fields still parse from the top level
-    val legacy = TableManifest.parseSnapshotBody(
-      """{"generations":["g"],"batch":4,"buckets":16}""", "test")
-    assert(legacy.watermark(TableManifest.DefaultWriter).contains(4L))
-    assert(legacy.buckets.contains(16))
+    // and the layout fields still parse from the top level
+    val bucketed = TableManifest.parseSnapshotBody(
+      """{"generations":["_gen-000001-b0-aa"],"buckets":16,""" +
+        """"bucketkeys":["id"],"meta":{"_gen-000001-b0-aa":""" +
+        """{"schema":"{}","files":[]}}}""", "test")
+    assert(bucketed.buckets.contains(TableManifest.BucketLayout(16, Seq("id"))))
     // belt and braces: the reserved names are refused before they can
     // ever be rendered into a manifest
     val tbl = tmpTable("manifresv")
@@ -2105,6 +2072,16 @@ class TableManifestSpec extends AnyFunSuite {
       .select(col("*"), col("k").as("md",
         new org.apache.spark.sql.types.MetadataBuilder()
           .putString("comment", "carried caller metadata").build()))
+    def checkHead(t: String): Unit = {
+      val head = TableManifest.resolveHead(spark, t).get
+      head.snap.generations.foreach { g =>
+        val rec = head.snap.meta(g).schemaJson
+        val inferred = spark.read.parquet(s"$t/$g").schema.json
+        assert(rec == inferred,
+          s"generation $g recorded schema != footer inference:\n" +
+            s"  recorded: $rec\n  inferred: $inferred")
+      }
+    }
     val tbl = tmpTable("manifschema")
     TableManifest.publish(spark, tbl, rows(0, 64), statsCol = Some("k"))
     TableManifest.append(spark, tbl, rows(64, 96))
@@ -2112,16 +2089,12 @@ class TableManifestSpec extends AnyFunSuite {
       Seq("k"), "v", "tag", numBuckets = 4)
     TableManifest.upsertBucketedDelta(spark, tbl, rows(8, 12),
       Seq("k"), "v", "tag", numBuckets = 4)
+    checkHead(tbl) // bucketed upsert + delta staging
+    TableManifest.compactDeltas(spark, tbl)
     TableManifest.deleteRows(spark, tbl, Seq(63L).toDF("k"), Seq("k"))
-    val head = TableManifest.resolveHead(spark, tbl).get
-    head.snap.generations.foreach { g =>
-      val rec = head.snap.meta(g).schemaJson
-      assert(rec.isDefined, s"generation $g lost its recorded schema")
-      val inferred = spark.read.parquet(s"$tbl/$g").schema.json
-      assert(rec.contains(inferred),
-        s"generation $g recorded schema != footer inference:\n" +
-          s"  recorded: ${rec.get}\n  inferred: $inferred")
-    }
+    TableManifest.upsertDelta(spark, tbl, rows(12, 16),
+      Seq("k"), "v", "tag", numBuckets = 4)
+    checkHead(tbl) // folded buckets, tombstone, upsertDelta staging
     // the partition-staged writer too (separate table: partition rules
     // and merge rules don't mix)
     val tbl2 = tmpTable("manifschemap")
@@ -2129,12 +2102,6 @@ class TableManifestSpec extends AnyFunSuite {
       rows(0, 4).withColumn("part", col("k") % 2))
     TableManifest.appendPartitioned(spark, tbl2,
       rows(4, 32).withColumn("part", col("k") % 2), "part")
-    val head2 = TableManifest.resolveHead(spark, tbl2).get
-    head2.snap.generations.foreach { g =>
-      val rec = head2.snap.meta(g).schemaJson
-      assert(rec.isDefined, s"generation $g lost its recorded schema")
-      assert(rec.contains(spark.read.parquet(s"$tbl2/$g").schema.json),
-        s"partition generation $g recorded schema != footer inference")
-    }
+    checkHead(tbl2)
   }
 }
