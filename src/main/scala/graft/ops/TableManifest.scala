@@ -290,7 +290,7 @@ object TableManifest {
     * that regex field extraction let WRITER IDS alias protocol fields —
     * a writer named "buckets" fed [[readKeyBuckets]] the wrong modulus.
     * With the parse structural, a writers-map key can never be read as
-    * a field ([[requireWriterId]] additionally refuses the reserved
+    * a field ([[batchOf]] additionally refuses the reserved
     * names outright — belt and braces).
     *
     * The body must meet the invariants every writer maintains; a
@@ -591,6 +591,15 @@ object TableManifest {
     }
   }
 
+  /** The resolved head of a manifested table, failing loudly when the
+    * table has none — the one "no manifest" lookup every verb and read
+    * shares. */
+  private def headOf(spark: SparkSession, tableDir: String): HeadInfo =
+    resolveHead(spark, tableDir).getOrElse(
+      throw new IllegalArgumentException(
+        s"TableManifest: no manifest at $tableDir — not a manifested " +
+          "table (publish() first)"))
+
   /** The head now, probed up from `known`, a head seen earlier at
     * `tableDir`, through `fs` alone: `exists` on `known + 1`, `known +
     * 2`, … until the first missing manifest, then on `known` once more.
@@ -669,15 +678,6 @@ object TableManifest {
         .rename(tmp, new Path(root, name),
           org.apache.hadoop.fs.Options.Rename.OVERWRITE)
     }
-  }
-
-  /** [[commitSnapshot]] + [[maybeCheckpoint]] — every commit site goes
-    * through this so no winner can forget its checkpoint duty. */
-  private def commitAndCheckpoint(spark: SparkSession, tableDir: String,
-                                  seq: Long, snapshot: Snapshot): Boolean = {
-    val won = commitSnapshot(spark, tableDir, seq, snapshot)
-    if (won) maybeCheckpoint(spark, tableDir, seq, snapshot)
-    won
   }
 
   private def newestSnapshot(spark: SparkSession,
@@ -770,11 +770,7 @@ object TableManifest {
     * per-generation schemas, with no footer read. */
   def read(spark: SparkSession, tableDir: String,
            mergeSchema: Boolean): DataFrame = retryOnce {
-    val head = resolveHead(spark, tableDir).getOrElse(
-      throw new IllegalArgumentException(
-        s"TableManifest: no manifest at $tableDir — not a manifested " +
-          "table (publish() first)"))
-    readSnapshot(spark, tableDir, head.snap, mergeSchema)
+    readSnapshot(spark, tableDir, headOf(spark, tableDir).snap, mergeSchema)
   }
 
   /** One version's content: the data-generation union, with the
@@ -994,27 +990,85 @@ object TableManifest {
     readSnapshot(spark, tableDir, snap)
   }
 
-  /** Write `df` as one complete new generation directory (not yet
-    * referenced by any manifest) and return its name, seq-stamped from
-    * the caller's intended commit seq. */
-  private def newGenName(seq: Long): String =
-    f"$GenPrefix$seq%06d-${java.util.UUID.randomUUID.toString.take(8)}"
+  /** A fresh generation name, seq-stamped from the caller's intended
+    * commit seq, with an optional marker (`b<k>-`, `b<k>-d-`, `p<k>-`,
+    * `x-`) before the uuid8. */
+  private def newGenName(seq: Long, marker: String = ""): String =
+    f"$GenPrefix$seq%06d-$marker${java.util.UUID.randomUUID.toString.take(8)}"
 
-  /** Run a post-write step for a freshly-written, not-yet-referenced
-    * generation; on failure delete the generation before rethrowing —
-    * the rewriteBatch discipline ("instead of leaving recover() an
-    * orphan") applied to every writer path that stages work after the
-    * generation write (e.g. the manifest inventory's footer-stats
-    * collection, whose loud non-numeric failure would otherwise strand
-    * a full table copy). */
-  private def withGenReapedOnFailure[T](spark: SparkSession,
-      tableDir: String, gen: String)(step: => T): T =
-    try step
-    catch {
+  /** Write `df` as the complete generation directory `gen` (not yet
+    * referenced by any manifest) and collect its inventory. On any
+    * failure — building `df`, the write, or the inventory's footer-stats
+    * pass, whose loud non-numeric failure would otherwise strand a full
+    * table copy — the partial generation is deleted before rethrowing,
+    * instead of leaving recover() an orphan. */
+  private def stageGeneration(spark: SparkSession, tableDir: String,
+                              gen: String, statsCol: Option[String])
+                             (df: => DataFrame): GenMeta =
+    try {
+      val d = df
+      d.write.mode("errorifexists").parquet(s"$tableDir/$gen")
+      collectGenMeta(spark, tableDir, gen, statsCol,
+        writtenSchemaJson(d.schema))
+    } catch {
       case scala.util.control.NonFatal(e) =>
         fsOf(spark, tableDir).delete(new Path(s"$tableDir/$gen"), true)
         throw e
     }
+
+  /** Write `df` split by the value of `split` — one generation per value:
+    * `partitionBy` into a hidden `._stage-*` directory (repartitioned on
+    * the split first, to `pinned` partitions when given), then each
+    * value's directory moves into place as the generation
+    * `name(value, index)` (a metadata rename) and its inventory is
+    * collected. Returns (value, generation, inventory) in directory-name
+    * order. On failure the generations already moved are reaped; the
+    * stage directory always is. The one split-write site of the bucketed
+    * upsert, delta staging, delta fold and partitioned append. */
+  private def stageSplit(spark: SparkSession, tableDir: String,
+                         df: DataFrame, splitCol: String, split: Column,
+                         pinned: Option[Int], statsCol: Option[String])
+                        (name: (String, Int) => String)
+      : Seq[(String, String, GenMeta)] = {
+    import org.apache.spark.sql.functions.col
+    val fs = fsOf(spark, tableDir)
+    val stage = new Path(tableDir,
+      s"._stage-${java.util.UUID.randomUUID.toString.take(8)}")
+    val schemaJson = writtenSchemaJson(df.schema)
+    val moved = scala.collection.mutable.Buffer.empty[String]
+    try {
+      val withSplit = df.withColumn(splitCol, split)
+      // a pinned count: AQE coalesces a keyed repartition of a small
+      // batch to ONE task, which then writes every bucket directory
+      // serially (measured 200-350 ms/commit at tiny scale: 16
+      // sequential parquet opens+footers); one task per hash-slot keeps
+      // per-bucket writer overhead parallel, and one writer per bucket
+      // is the intended layout at scale anyway
+      pinned.fold(withSplit.repartition(col(splitCol)))(n =>
+          withSplit.repartition(n, col(splitCol)))
+        .write.mode("errorifexists")
+        .partitionBy(splitCol).parquet(stage.toString)
+      fs.listStatus(stage)
+        .filter(e => e.isDirectory &&
+          e.getPath.getName.startsWith(s"$splitCol="))
+        .sortBy(_.getPath.getName).toSeq.zipWithIndex
+        .map { case (d, i) =>
+          val value =
+            org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+              .unescapePathName(d.getPath.getName.stripPrefix(s"$splitCol="))
+          val gen = name(value, i)
+          require(fs.rename(d.getPath, new Path(tableDir, gen)),
+            s"TableManifest: staging rename failed for '$value' at $tableDir")
+          moved += gen
+          (value, gen, collectGenMeta(spark, tableDir, gen, statsCol,
+            schemaJson))
+        }
+    } catch {
+      case scala.util.control.NonFatal(e) =>
+        moved.foreach(g => fs.delete(new Path(tableDir, g), true))
+        throw e
+    } finally fs.delete(stage, true)
+  }
 
   /** Collect a freshly-written generation's manifest inventory: one
     * directory listing (write path — the writer just created these
@@ -1128,11 +1182,7 @@ object TableManifest {
   private[graft] def prunedFilesInfo(spark: SparkSession, tableDir: String,
                                      statsCol: String, lo: Double,
                                      hi: Double): PruneInfo = {
-    val head = resolveHead(spark, tableDir).getOrElse(
-      throw new IllegalArgumentException(
-        s"TableManifest: no manifest at $tableDir — not a manifested " +
-          "table (publish() first)"))
-    prunedFilesInfo(tableDir, head.snap, statsCol, lo, hi)
+    prunedFilesInfo(tableDir, headOf(spark, tableDir).snap, statsCol, lo, hi)
   }
 
   /** Whether a recorded file may hold a `statsCol` value in `[lo, hi]`:
@@ -1178,11 +1228,7 @@ object TableManifest {
     * same one re-resolve on the stalled-reader race. */
   def readPruned(spark: SparkSession, tableDir: String, statsCol: String,
                  lo: Double, hi: Double): DataFrame = retryOnce {
-    val head = resolveHead(spark, tableDir).getOrElse(
-      throw new IllegalArgumentException(
-        s"TableManifest: no manifest at $tableDir — not a manifested " +
-          "table (publish() first)"))
-    val snap = head.snap
+    val snap = headOf(spark, tableDir).snap
     // a COLUMN-MAPPING rule defeats file-level pruning (mapped reads
     // select per generation, not per file list) — read whole,
     // correctness before pruning, same conservative stance as every
@@ -1248,13 +1294,6 @@ object TableManifest {
       gm.files.exists(mayMatch(gm, _, statsCol, lo, hi))
     }.flatMap(bucketOf).toSet
     Some(snap.dataGens.filter(g => bucketOf(g).exists(surviving)))
-  }
-
-  private def writeGeneration(spark: SparkSession, tableDir: String,
-                              seq: Long, df: DataFrame): String = {
-    val next = newGenName(seq)
-    df.write.mode("errorifexists").parquet(s"$tableDir/$next")
-    next
   }
 
   /** Stage-then-publish an immutable small file under `dst` through the
@@ -1385,66 +1424,147 @@ object TableManifest {
   private def manifestPath(tableDir: String, seq: Long): Path =
     new Path(tableDir, f"$ManifestPrefix$seq%06d.json")
 
+  /** What one [[commitLoop]] attempt decided against the head it was
+    * handed: commit nothing and return `result` ([[Skip]]), or commit
+    * `snap` and return `result` ([[Commit]]) — `fresh` being the
+    * generations this attempt wrote, derived from that head. A refusal
+    * is a throw. */
+  private[graft] sealed trait Step[+R]
+  private[graft] case class Skip[R](result: R) extends Step[R]
+  private[graft] case class Commit[R](snap: Snapshot, result: R,
+                                      fresh: Seq[String] = Seq.empty)
+      extends Step[R]
+
+  /** A watermark-only step: with a batch identity, commit the head's
+    * snapshot unchanged so the loop records the writer's watermark
+    * (replay bookkeeping never stalls); without one, commit nothing. */
+  private def watermarkOnly[R](head: HeadInfo, batched: Boolean,
+                               result: R): Step[R] =
+    if (batched) Commit(head.snap, result) else Skip(result)
+
+  /** THE commit point of every mutating verb — one optimistic retry loop
+    * (Delta's `OptimisticTransaction`). Each attempt:
+    *   1. takes the head (`first` for attempt one when the caller already
+    *      resolved it for its pre-stage gate, else [[headOf]]) and, with
+    *      a `batch` identity (writerId, batchId), runs [[replayGate]]: a
+    *      covered replay reaps `staged` and returns None;
+    *   2. renames the `staged` generations — written before the loop from
+    *      the batch alone — to the seq this attempt commits at
+    *      ([[alignGenSeq]]: the name seq is the delete rule's ordering);
+    *   3. runs `next(head, staged names)`: the verb checks its
+    *      preconditions against THIS head, stages whatever derives from
+    *      it, and returns a [[Step]];
+    *   4. a [[Commit]] publishes its snapshot, with the writer's
+    *      watermark merged in, as version `head.seq + 1` through the CAS
+    *      ([[commitSnapshot]]; a below-barrier win is undone and reads
+    *      as a loss) and a winner writes its checkpoint duty
+    *      ([[maybeCheckpoint]]);
+    *   5. a win vacuums with keepGens = the head's generations ∪ the new
+    *      ones — skipped when the generation set is unchanged
+    *      (watermark and mapping commits supersede nothing); a loss
+    *      deletes the attempt's `fresh` generations, derived from a
+    *      superseded head, and the next attempt starts over at 1.
+    * So a verb that derives from the head RE-DERIVES after a loss, and a
+    * batch-derived verb REBASES its staged generations without rewriting
+    * data; a verb that must REFUSE ON LOSS passes `maxRetries = 0`.
+    *
+    * A failure in the replay gate, the alignment or `next` is rethrown,
+    * after reaping `staged`, when the head has not moved since the
+    * attempt resolved it — a refusal or a deterministic bug, which a
+    * retry would only bury under a "writer storm"; when the head moved,
+    * the failure is a plausibly-stale read and the attempt is retried. After `maxRetries + 1` attempts every
+    * staged generation is reaped and one writer-storm error is raised,
+    * chaining the last staging failure. Returns None exactly on a
+    * covered replay. */
+  private[graft] def commitLoop[R](spark: SparkSession, verb: String,
+                                   tableDir: String, maxRetries: Int,
+                                   batch: Option[(String, Long)] = None,
+                                   staged: Seq[String] = Seq.empty,
+                                   first: Option[HeadInfo] = None)
+                                  (next: (HeadInfo, Seq[String]) => Step[R])
+      : Option[R] = {
+    def reap(gens: Seq[String]): Unit = gens.foreach(g =>
+      fsOf(spark, tableDir).delete(new Path(tableDir, g), true))
+    var gens = staged
+    var known = first
+    var attempts = 0
+    var lastRace = ""
+    var lastCause: Throwable = null
+    while (attempts <= maxRetries) {
+      attempts += 1
+      val head = known.getOrElse(headOf(spark, tableDir))
+      known = None
+      val step =
+        try {
+          if (batch.exists { case (w, b) =>
+              replayGate(head.snap, w, Some(b), tableDir) }) {
+            reap(gens)
+            return None
+          }
+          gens.indices.foreach(i => gens =
+            gens.updated(i, alignGenSeq(spark, tableDir, gens(i), head.seq + 1)))
+          Some(next(head, gens))
+        } catch {
+          case scala.util.control.NonFatal(e) =>
+            if (resolveHead(spark, tableDir).map(_.seq).contains(head.seq)) {
+              reap(gens)
+              throw e
+            }
+            lastRace = e.toString; lastCause = e; None
+        }
+      step match {
+        case Some(Skip(r)) =>
+          reap(gens)
+          return Some(r)
+        case Some(Commit(snap, r, fresh)) =>
+          val committed =
+            snap.copy(writers = mergeWriters(snap.writers, batch.toMap))
+          if (commitSnapshot(spark, tableDir, head.seq + 1, committed)) {
+            maybeCheckpoint(spark, tableDir, head.seq + 1, committed)
+            if (committed.generations != head.snap.generations)
+              vacuum(spark, tableDir, head.seq + 1,
+                keepGens = head.snap.generations.toSet ++ committed.generations,
+                dropFutureSeq = false)
+            return Some(r)
+          }
+          reap(fresh)
+          lastRace = s"version ${head.seq + 1} taken by a concurrent commit"
+        case None => // a staging failure under a moved head: retry
+      }
+    }
+    reap(gens)
+    val storm = new java.io.IOException(
+      s"TableManifest: $verb at $tableDir did not commit in $attempts " +
+        s"attempts (last: $lastRace) — writer storm?")
+    if (lastCause != null) storm.initCause(lastCause)
+    throw storm
+  }
+
   /** Publish `df` as the table's next version, REPLACING the current
     * generation set (its first version, when the table is new). The
     * exactly-once batch watermark carries forward — compacting between
     * ingest batches must not re-open the door to a replay. Returns the
     * new generation's name.
     *
-    * Concurrency: REPLACE racing a concurrent commit is a LOGICAL
-    * conflict (which rows should the head hold?), so a lost CAS deletes
-    * this call's staged generation and fails loudly — the table is
-    * unchanged, the caller re-runs against the new head. A silent rebase
-    * here would drop the concurrent append's rows while carrying its
-    * watermark, suppressing the exactly-once replay: the one loss this
-    * log exists to prevent. For transforms DERIVED from the current
-    * table (compaction, re-clustering), use [[rewrite]] — it re-derives
-    * from the new head and can therefore retry safely. */
+    * Concurrency: refuse-on-loss — REPLACE racing a concurrent commit is
+    * a logical conflict (a rebase would drop the concurrent append's
+    * rows while carrying its watermark), so the table stays unchanged
+    * and the caller re-runs against the new head, or uses [[rewrite]]
+    * for transforms derived from the table. */
   def publish(spark: SparkSession, tableDir: String, df: DataFrame,
               statsCol: Option[String] = None): String = {
-    val fs = fsOf(spark, tableDir)
-    fs.mkdirs(new Path(tableDir))
+    fsOf(spark, tableDir).mkdirs(new Path(tableDir))
     val cur = resolveHead(spark, tableDir)
-    val nextSeq = cur.map(_.seq + 1).getOrElse(1L)
-    val next = writeGeneration(spark, tableDir, nextSeq, df)
-    val nextMeta = withGenReapedOnFailure(spark, tableDir, next) {
-      collectGenMeta(spark, tableDir, next, statsCol,
-        writtenSchemaJson(df.schema))
-    }
-    val snap = Snapshot(Seq(next),
-      cur.map(_.snap.writers).getOrElse(Map.empty),
-      meta = Map(next -> nextMeta))
-    if (!commitAndCheckpoint(spark, tableDir, nextSeq, snap)) {
-      fs.delete(new Path(s"$tableDir/$next"), true) // ours, unreferenced
-      throw new java.io.IOException(
-        s"TableManifest: publish of version $nextSeq at $tableDir lost " +
-          "to a concurrent commit — the table is UNCHANGED by this call " +
-          "(REPLACE vs a concurrent append is a logical conflict; " +
-          "re-run against the new head, or use rewrite() for " +
-          "table-derived transforms, which retries safely)")
-    }
-    vacuum(spark, tableDir, nextSeq,
-      keepGens = cur.map(_.snap.generations).getOrElse(Seq.empty).toSet + next,
-      dropFutureSeq = false)
-    next
+      .getOrElse(HeadInfo(0L, Snapshot(Seq.empty, Map.empty), 0))
+    val gen = newGenName(cur.seq + 1)
+    val gm = stageGeneration(spark, tableDir, gen, statsCol)(df)
+    commitLoop(spark, "publish", tableDir, maxRetries = 0,
+        staged = Seq(gen), first = Some(cur)) { (head, gens) =>
+      Commit(Snapshot(gens, head.snap.writers, meta = Map(gens.head -> gm)),
+        gens.head)
+    }.get
   }
 
-  /** Append `df` as one more generation — O(batch) data cost, the table
-    * is never rewritten. Returns the committed generation's name, or
-    * None when (`writerId`, `batchId`) is a replay the writer's
-    * watermark already covers (exactly-once ingest: nothing is written,
-    * nothing committed); a batch id BELOW the watermark fails loudly —
-    * see the per-writer watermark contract on [[rewriteBatch]].
-    *
-    * Concurrency: the fail-if-exists commit is a compare-and-swap — on a
-    * lost race the append REBASES (re-reads the winner's generation set,
-    * re-commits `winner ++ ours` on the next seq) without touching its
-    * already-written data. Appends commute, so the rebase is always
-    * safe. `maxRetries` bounds pathological writer storms; a single
-    * streaming writer never retries. Head resolution and the winner's
-    * vacuum probe direct seq paths from the checkpoint hint
-    * ([[resolveHead]]) — per-commit metadata cost is O(window), flat in
-    * table age, with writers live. */
   /** The exactly-once gate for (`writerId`, `batchId`) against a
     * snapshot: true = covered replay, skip. A batch id BELOW the
     * writer's watermark is an ID REGRESSION and fails LOUDLY — under
@@ -1482,7 +1602,10 @@ object TableManifest {
     "batch", "buckets", "writers", "generations", "generation", "seq",
     "meta", "merge", "delete", "parts", "partcol", "files", "columns")
 
-  private def requireWriterId(writerId: String): Unit = {
+  /** Check `writerId` and pair it with `batchId` — the batch identity
+    * [[commitLoop]] gates replays on and records the watermark of. */
+  private def batchOf(writerId: String,
+                      batchId: Option[Long]): Option[(String, Long)] = {
     require(writerId.nonEmpty &&
       writerId.forall(c => c.isLetterOrDigit || c == '.' || c == '_' ||
         c == '-'),
@@ -1491,96 +1614,61 @@ object TableManifest {
       s"TableManifest: writerId '$writerId' is a reserved manifest " +
         s"field name (${ReservedWriterIds.toSeq.sorted.mkString(", ")}) " +
         "— pick a non-protocol identity")
+    batchId.map(writerId -> _)
   }
 
   /** Commit a WATERMARK-ONLY version: the generation set (and every
     * rule) unchanged, only `writerId`'s batch watermark advanced to
     * `batchId` — how a consumer records "I have covered through here"
     * with no data moved (the changefeed relay's cursor advance over
-    * trailing watermark-only source commits; [[dropPartitions]]' replay
-    * bookkeeping when no generation carries the values). Same replay
-    * and regression semantics as [[append]]'s batch gate; a covered
-    * batch id is a silent no-op. */
+    * trailing watermark-only source commits). Same replay and
+    * regression semantics as [[append]]'s batch gate; a covered batch
+    * id is a silent no-op. */
   private[graft] def commitWatermark(spark: SparkSession, tableDir: String,
                                      writerId: String, batchId: Long,
-                                     maxRetries: Int = 5): Unit = {
-    requireWriterId(writerId)
-    var attempts = 0
-    while (attempts <= maxRetries) {
-      val head = resolveHead(spark, tableDir).getOrElse(
-        throw new IllegalArgumentException(
-          s"TableManifest: no manifest at $tableDir — publish() first"))
-      if (replayGate(head.snap, writerId, Some(batchId), tableDir)) return
-      attempts += 1
-      if (commitAndCheckpoint(spark, tableDir, head.seq + 1,
-          head.snap.copy(writers = mergeWriters(head.snap.writers,
-            Map(writerId -> batchId)))))
-        return // metadata-only: generations unchanged, nothing vacuumed
-    }
-    throw new java.io.IOException(
-      s"TableManifest: commitWatermark at $tableDir lost the commit " +
-        s"race on all $attempts attempts — writer storm?")
-  }
+                                     maxRetries: Int = 5): Unit =
+    commitLoop(spark, "commitWatermark", tableDir, maxRetries,
+      batchOf(writerId, Some(batchId)))((head, _) => Commit(head.snap, ()))
 
+  /** Append `df` as one more generation — O(batch) data cost, the table
+    * is never rewritten. Returns the committed generation's name, or
+    * None when (`writerId`, `batchId`) is a replay the writer's
+    * watermark already covers (exactly-once ingest: nothing is written,
+    * nothing committed); a batch id BELOW the watermark fails loudly —
+    * see the per-writer watermark contract on [[rewriteBatch]]. Head
+    * resolution and the winner's vacuum probe direct seq paths from the
+    * checkpoint hint ([[resolveHead]]) — per-commit metadata cost is
+    * O(window), flat in table age, with writers live.
+    *
+    * Concurrency: rebase — appends commute, so a lost race re-commits
+    * `winner ++ ours` on the next seq without touching the written data. */
   def append(spark: SparkSession, tableDir: String, df: DataFrame,
              batchId: Option[Long] = None,
              maxRetries: Int = 5,
              writerId: String = DefaultWriter,
              statsCol: Option[String] = None): Option[String] = {
-    requireWriterId(writerId)
-    var base = resolveHead(spark, tableDir).getOrElse(
-      throw new IllegalArgumentException(
-        s"TableManifest: no manifest at $tableDir — publish() the " +
-          "table before appending"))
+    val batch = batchOf(writerId, batchId)
+    val base = headOf(spark, tableDir)
     if (replayGate(base.snap, writerId, batchId, tableDir))
       return None // replay: skip before writing
-    var gen = writeGeneration(spark, tableDir, base.seq + 1, df)
-    val genMeta = withGenReapedOnFailure(spark, tableDir, gen) {
-      collectGenMeta(spark, tableDir, gen, statsCol,
-        writtenSchemaJson(df.schema))
-    }
-    var attempts = 0
-    while (attempts <= maxRetries) {
-      val (seq, snap) = (base.seq, base.snap)
-      if (replayGate(snap, writerId, batchId, tableDir)) {
-        // a concurrent commit of this very batch won while we wrote —
-        // our generation is unreferenced by construction, drop it
-        fsOf(spark, tableDir).delete(new Path(s"$tableDir/$gen"), true)
-        return None
-      }
-      gen = alignGenSeq(spark, tableDir, gen, seq + 1)
-      val (carriedParts, carriedPartCol) = snap.partsFor(snap.generations)
+    val gen = newGenName(base.seq + 1)
+    val genMeta = stageGeneration(spark, tableDir, gen, statsCol)(df)
+    commitLoop(spark, "append", tableDir, maxRetries, batch, Seq(gen),
+        Some(base)) { (head, gens) =>
+      val snap = head.snap
       // under an active column mapping, unknown batch columns take
       // FRESH ids (a re-added dropped name never reclaims its old id)
       // and the new generation records its (id, physical name) binding
       val mapping = snap.columns.map(extendMapping(_, df.columns.toSeq))
-      val boundMeta = mapping match {
-        case Some(m) => genMeta.copy(cols =
-          m.cols.filter { case (_, n) => df.columns.contains(n) })
-        case None => genMeta
-      }
-      val merged = Snapshot(snap.generations :+ gen,
-        mergeWriters(snap.writers,
-          batchId.map(b => Map(writerId -> b)).getOrElse(Map.empty)),
-        meta = snap.metaFor(snap.generations) + (gen -> boundMeta),
-        merge = mergeFor(snap.generations :+ gen, snap.merge),
-        parts = carriedParts, partCol = carriedPartCol,
-        delete = deleteFor(snap.generations :+ gen, snap.delete),
-        columns = mapping)
-      attempts += 1
-      if (commitAndCheckpoint(spark, tableDir, seq + 1, merged)) {
-        vacuum(spark, tableDir, seq + 1,
-          keepGens = merged.generations.toSet, dropFutureSeq = false)
-        return Some(gen)
-      }
-      base = resolveHead(spark, tableDir).get // rebase on the winner
+      val boundMeta = mapping.fold(genMeta)(m => genMeta.copy(cols =
+        m.cols.filter { case (_, n) => df.columns.contains(n) }))
+      val all = snap.generations ++ gens
+      Commit(snap.copy(generations = all, buckets = None,
+        meta = snap.meta + (gens.head -> boundMeta),
+        merge = mergeFor(all, snap.merge),
+        delete = deleteFor(all, snap.delete), columns = mapping), gens.head)
     }
-    throw new java.io.IOException(
-      s"TableManifest: append at $tableDir lost the commit race on all " +
-        s"$attempts attempts — writer storm? (orphan generation $gen " +
-        "left for recover())")
   }
-
   /** Rewrite the table in place, reader-safely: read the current
     * generation set, apply `transform`, commit the result as the next
     * version (collapsing an appended table back to ONE generation —
@@ -1588,23 +1676,31 @@ object TableManifest {
     * reader-safe compaction; a Z-order sort is a reader-safe
     * re-clustering.
     *
-    * Concurrency: the version read and the CAS base are THE SAME
-    * snapshot — resolving the data and then committing against a
-    * re-read head would let an append land in the gap and vanish from
-    * the rewritten table while its watermark carried forward (the
-    * silent-loss TOCTOU a review of this file caught). On a lost race
-    * the stale transform result is DELETED and the whole
-    * read→transform→commit cycle re-runs against the new head — safe
-    * because the transform re-derives from whatever it reads, so the
-    * interleaved commit's rows flow into the retry. A transient write
-    * failure (e.g. the base generation vacuumed mid-read by two faster
-    * rewrites) retries the same way; `maxRetries` bounds the loop. */
+    * Concurrency: re-derive — the version read IS the CAS base (a
+    * re-read head would let an append landing in the gap vanish while
+    * its watermark carried forward), so a lost race or a read of a
+    * vacuumed base re-runs read→transform→commit against the new head. */
   def rewrite(spark: SparkSession, tableDir: String, maxRetries: Int = 3,
               statsCol: Option[String] = None)
              (transform: DataFrame => DataFrame): String =
     rewriteBatch(spark, tableDir, batchId = None, maxRetries,
       statsCol = statsCol)(transform)
       .get // never a replay without a batch id
+
+  /** One [[rewrite]] attempt against `head`: `transform` over the head's
+    * content (merge and delete rules applied, so a rewrite doubles as
+    * their fold and commits rule-free) written as ONE generation that
+    * replaces the whole set. */
+  private def rewriteStep[R](spark: SparkSession, tableDir: String,
+                             head: HeadInfo, statsCol: Option[String])
+                            (transform: DataFrame => DataFrame)
+                            (result: String => R): Step[R] = {
+    val g = newGenName(head.seq + 1)
+    val gm = stageGeneration(spark, tableDir, g, statsCol)(
+      transform(readSnapshot(spark, tableDir, head.snap)))
+    Commit(Snapshot(Seq(g), head.snap.writers, meta = Map(g -> gm)),
+      result(g), fresh = Seq(g))
+  }
 
   /** [[rewrite]] carrying an exactly-once batch watermark — the REPLACE
     * half of what [[append]]'s `batchId` is to the add half: a
@@ -1634,66 +1730,11 @@ object TableManifest {
                    batchId: Option[Long], maxRetries: Int = 3,
                    writerId: String = DefaultWriter,
                    statsCol: Option[String] = None)
-                  (transform: DataFrame => DataFrame): Option[String] = {
-    requireWriterId(writerId)
-    var attempts = 0
-    var lastRace: String = ""
-    var lastCause: Throwable = null
-    while (attempts <= maxRetries) {
-      val head = resolveHead(spark, tableDir).getOrElse(
-        throw new IllegalArgumentException(
-          s"TableManifest: no manifest at $tableDir — not a manifested " +
-            "table (publish() first)"))
-      val (seq, snap) = (head.seq, head.snap)
-      if (replayGate(snap, writerId, batchId, tableDir))
-        return None // replay: the watermark already covers this batch
-      attempts += 1
-      val name = newGenName(seq + 1)
-      val gen =
-        try {
-          // the transform sees MERGED content (readSnapshot applies the
-          // winner rule when deltas are live), so a rewrite doubles as
-          // the fold: its output is plain rows and commits merge-free
-          val df = transform(readSnapshot(spark, tableDir, snap))
-          df.write.mode("errorifexists").parquet(s"$tableDir/$name")
-          Some(name -> collectGenMeta(spark, tableDir, name, statsCol,
-            writtenSchemaJson(df.schema)))
-        } catch {
-          case scala.util.control.NonFatal(e) =>
-            // A failed attempt's partial write is ours and unreferenced —
-            // reap it here instead of leaving recover() an orphan.
-            fsOf(spark, tableDir).delete(new Path(s"$tableDir/$name"), true)
-            // Retry ONLY a plausibly-stale base read: the head moved
-            // under the transform (our resolved generations vacuumed or
-            // superseded mid-read). A failure with the head UNCHANGED
-            // cannot be staleness — a deterministic transform bug would
-            // be re-executed maxRetries more times and surface as a
-            // "writer storm" that buries the real error.
-            val headNow = resolveHead(spark, tableDir).map(_.seq)
-            if (headNow.contains(seq)) throw e
-            lastRace = e.toString; lastCause = e; None
-        }
-      gen.foreach { case (g, gm) =>
-        val next = Snapshot(Seq(g), mergeWriters(snap.writers,
-          batchId.map(b => Map(writerId -> b)).getOrElse(Map.empty)),
-          meta = Map(g -> gm))
-        if (commitAndCheckpoint(spark, tableDir, seq + 1, next)) {
-          vacuum(spark, tableDir, seq + 1,
-            keepGens = snap.generations.toSet + g, dropFutureSeq = false)
-          return Some(g)
-        }
-        // lost the CAS: the transform result is STALE (derived from a
-        // superseded version) — never commit it later, re-derive
-        fsOf(spark, tableDir).delete(new Path(s"$tableDir/$g"), true)
-        lastRace = s"version ${seq + 1} taken by a concurrent commit"
-      }
+                  (transform: DataFrame => DataFrame): Option[String] =
+    commitLoop(spark, "rewrite", tableDir, maxRetries,
+        batchOf(writerId, batchId)) { (head, _) =>
+      rewriteStep(spark, tableDir, head, statsCol)(transform)(g => g)
     }
-    val storm = new java.io.IOException(
-      s"TableManifest: rewrite at $tableDir did not commit in " +
-        s"$attempts attempts (last: $lastRace) — writer storm?")
-    if (lastCause != null) storm.initCause(lastCause)
-    throw storm
-  }
 
   /** A `foreachBatch` CDC-upsert sink materializing the LATEST row per
     * key through the manifest — [[graft.streaming.Streams.upsertSnapshotSink]]'s
@@ -1843,186 +1884,130 @@ object TableManifest {
     * so replay bookkeeping never stalls. Returns the new generation
     * names (empty for watermark-only), or None on a covered replay.
     *
-    * Concurrency: same rebase discipline as [[rewriteBatch]] — the
-    * head read is the CAS base; a lost race deletes the staged bucket
-    * generations and re-derives against the new head (an append
-    * landing mid-merge flows into the retry; its rows in touched
-    * buckets merge, others stay). */
+    * Concurrency: re-derive — the head read is the CAS base, so a lost
+    * race re-merges the touched buckets from the new head (an append
+    * landing mid-merge flows into the retry). */
   def upsertBucketed(spark: SparkSession, tableDir: String,
                      batch: DataFrame, keyCols: Seq[String], tsCol: String,
                      tieCol: String, numBuckets: Int,
                      batchId: Option[Long] = None,
                      writerId: String = DefaultWriter,
                      maxRetries: Int = 3): Option[Seq[String]] = {
-    import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
-    requireWriterId(writerId)
-    require(numBuckets >= 1 && numBuckets <= (1 << 20),
-      s"upsertBucketed: numBuckets out of range: $numBuckets")
-    require(keyCols.nonEmpty, "upsertBucketed: no key columns")
-    require(!batch.columns.contains(BucketCol),
-      s"upsertBucketed: input must not carry reserved column $BucketCol")
-    val fs = fsOf(spark, tableDir)
-    val bucketExpr =
-      pmod(xxhash64(keyCols.map(col): _*), lit(numBuckets.toLong))
-        .cast("int")
+    requireBucketArgs("upsertBucketed", batch, keyCols, numBuckets)
     // the one batch scan the routing needs — LAZY so a covered replay
     // skips before any Spark job runs ("nothing read" means it)
-    lazy val touched: Set[Int] = batch.select(bucketExpr.as("b")).distinct()
-      .collect().map(_.getInt(0)).toSet
-    var attempts = 0
-    var lastRace: String = ""
-    var lastCause: Throwable = null
-    while (attempts <= maxRetries) {
-      val head = resolveHead(spark, tableDir).getOrElse(
-        throw new IllegalArgumentException(
-          s"TableManifest: no manifest at $tableDir — publish() the " +
-            "table (e.g. updates.limit(0)) before upserting"))
-      val (seq, snap) = (head.seq, head.snap)
-      if (replayGate(snap, writerId, batchId, tableDir))
-        return None // covered replay: nothing read, written, committed
-      attempts += 1
-      require(snap.tombstoneGens.isEmpty,
-        s"upsertBucketed: row tombstones live at $tableDir — a bucket " +
-          "rewrite would re-commit deleted rows above the tombstone " +
-          "seq and resurrect them. Fold deletes first (rewrite() / " +
-          "optimizeManifested), then upsert.")
-      requireNoMapping(snap, tableDir, "upsertBucketed")
-      // migrate (one whole-table re-bucket) when any generation is
-      // untagged
-      val migrate = snap.generations.exists(g => bucketOf(g).isEmpty)
-      if (!migrate) snap.buckets.foreach(b => require(b.n == numBuckets,
-        s"upsertBucketed: table at $tableDir is bucketed ${b.n}-way; " +
-          s"refusing a $numBuckets-way upsert (stale rows would strand " +
-          "in unread buckets). Re-bucket explicitly via rewrite() " +
-          "first."))
-      // a live merge rule (delta generations present) must match this
-      // call's — merging touched buckets under a different key would
-      // resolve winners by the wrong rule and silently drop rows
-      snap.merge.foreach(m => require(
-        m == MergeSpec(keyCols, tsCol, tieCol),
-        s"upsertBucketed: table at $tableDir carries merge rule " +
-          s"(keys=${m.keys.mkString(",")}, ts=${m.ts}, tie=${m.tie}); " +
-          s"refusing an upsert keyed (${keyCols.mkString(",")}, " +
-          s"$tsCol, $tieCol) — fold deltas first (compactDeltas) to " +
-          "change the rule"))
-      // a recorded key-provenance mismatch is the same stranding hazard
-      // with the bucket COUNT right and NO merge rule live: a key's
-      // stale row sits in a bucket hashed under the OLD keys, which a
-      // touched-bucket read under the NEW keys never opens (a review
-      // pass found the post-fold shape: compactDeltas clears the merge
-      // rule but keeps the layout, so the merge-rule equality check
-      // alone cannot catch this)
-      if (!migrate) snap.buckets.foreach(b => require(b.keys == keyCols,
-        s"upsertBucketed: table at $tableDir is bucketed by keys " +
-          s"(${b.keys.mkString(",")}); refusing an upsert keyed " +
-          s"(${keyCols.mkString(",")}) — stale rows would strand in " +
-          "buckets the new key hash never reads. Re-bucket explicitly " +
-          "via rewrite() first."))
-      val readGens =
-        if (migrate) snap.generations
-        else snap.generations.filter(g => bucketOf(g).exists(touched))
-      // nothing data-bearing to commit: advance the writer's watermark
-      // on the UNCHANGED generation set so replay bookkeeping keeps
-      // moving (no vacuum — a gens-unchanged commit supersedes nothing)
-      def watermarkOnly(): Boolean =
-        batchId.isEmpty ||
-          commitAndCheckpoint(spark, tableDir, seq + 1,
-            Snapshot(snap.generations,
-              mergeWriters(snap.writers, Map(writerId -> batchId.get)),
-              snap.buckets, snap.metaFor(snap.generations), snap.merge,
-              snap.parts, snap.partCol))
-      if (!migrate && touched.isEmpty) {
-        if (watermarkOnly()) return Some(Seq.empty)
-        lastRace = s"version ${seq + 1} taken by a concurrent commit"
-      } else {
-        val stage = new Path(tableDir,
-          s"._stage-upsert-${java.util.UUID.randomUUID.toString.take(8)}")
-        val staged: Option[Seq[(String, GenMeta)]] =
-          try {
-            val cur =
-              if (readGens.isEmpty) batch.toDF().limit(0) // schema only
-              else scanGens(spark, tableDir, snap, readGens)
-            val merged = Temporal.latestSnapshot(
-              cur.unionByName(batch.toDF()), keyCols, tsCol, tieCol)
-            val schemaJson = writtenSchemaJson(merged.schema)
-            merged.withColumn(BucketCol, bucketExpr)
-              // explicit partition count: AQE coalesces a keyed
-              // repartition of a small batch to ONE task, which then
-              // writes every bucket directory serially (measured
-              // 200-350 ms/commit at tiny scale: 16 sequential parquet
-              // opens+footers); a pinned count keeps one task per
-              // hash-slot so per-bucket writer overhead parallelizes —
-              // and one writer per bucket is the intended layout at
-              // scale anyway
-              .repartition(numBuckets, col(BucketCol))
-              .write.mode("errorifexists")
-              .partitionBy(BucketCol).parquet(stage.toString)
-            val moved = fs.listStatus(stage)
-              .filter(e => e.isDirectory &&
-                e.getPath.getName.startsWith(s"$BucketCol="))
-              .sortBy(_.getPath.getName)
-              .map { d =>
-                val b = d.getPath.getName.stripPrefix(s"$BucketCol=").toInt
-                val gname = f"$GenPrefix${seq + 1}%06d-b$b-" +
-                  java.util.UUID.randomUUID.toString.take(8)
-                require(fs.rename(d.getPath, new Path(tableDir, gname)),
-                  s"upsertBucketed: staging rename failed for bucket $b")
-                gname -> collectGenMeta(spark, tableDir, gname,
-                  inheritedStatsCol(snap, batch.columns.toSeq), schemaJson)
-              }.toSeq
-            Some(moved)
-          } catch {
-            case scala.util.control.NonFatal(e) =>
-              // retry only plausibly-stale base reads — rewriteBatch's
-              // discipline (a deterministic merge bug rethrows with the
-              // head unchanged instead of re-running maxRetries times)
-              val headNow = resolveHead(spark, tableDir).map(_.seq)
-              if (headNow.contains(seq)) throw e
-              lastRace = e.toString; lastCause = e; None
-          } finally fs.delete(stage, true)
-        staged.foreach { movedMeta =>
-          val moved = movedMeta.map(_._1)
-          val keepOld =
-            if (migrate) Seq.empty
-            else snap.generations.filterNot(readGens.contains)
-          // an all-empty merge (empty table × empty batch on the
-          // migration path) must NEVER commit a zero-generation
-          // snapshot — read() would refuse the table until the next
-          // data-bearing commit. Keep the current generations and
-          // commit watermark-only bookkeeping (or nothing at all).
-          if (keepOld.isEmpty && moved.isEmpty) {
-            if (watermarkOnly()) return Some(Seq.empty)
-            // lost CAS with nothing staged: fall through to the loop's
-            // re-resolve, same as the normal lost-race path
-            lastRace = s"version ${seq + 1} taken by a concurrent commit"
-          } else {
-            val (keepParts, keepPartCol) = snap.partsFor(keepOld)
-            val next = Snapshot(keepOld ++ moved,
-              mergeWriters(snap.writers,
-                batchId.map(b => Map(writerId -> b)).getOrElse(Map.empty)),
-              Some(BucketLayout(numBuckets, keyCols)),
-              snap.metaFor(keepOld) ++ movedMeta,
-              mergeFor(keepOld ++ moved, snap.merge),
-              keepParts, keepPartCol)
-            if (commitAndCheckpoint(spark, tableDir, seq + 1, next)) {
-              vacuum(spark, tableDir, seq + 1,
-                keepGens = snap.generations.toSet ++ next.generations,
-                dropFutureSeq = false)
-              return Some(moved)
-            }
-            // lost the CAS: the staged buckets were derived from a
-            // superseded version — delete, re-derive against the new head
-            moved.foreach(g => fs.delete(new Path(tableDir, g), true))
-            lastRace = s"version ${seq + 1} taken by a concurrent commit"
-          }
-        }
-      }
+    lazy val touched = touchedBuckets(batch, keyCols, numBuckets)
+    commitLoop(spark, "upsertBucketed", tableDir, maxRetries,
+        batchOf(writerId, batchId)) { (head, _) =>
+      bucketedStep(spark, tableDir, head, batch, keyCols, tsCol, tieCol,
+        numBuckets, batchId.isDefined, touched)
     }
-    val storm = new java.io.IOException(
-      s"TableManifest: upsertBucketed at $tableDir did not commit in " +
-        s"$attempts attempts (last: $lastRace) — writer storm?")
-    if (lastCause != null) storm.initCause(lastCause)
-    throw storm
+  }
+
+  /** The argument checks every bucketed upsert verb shares. */
+  private def requireBucketArgs(verb: String, batch: DataFrame,
+                                keyCols: Seq[String], numBuckets: Int): Unit = {
+    require(numBuckets >= 1 && numBuckets <= (1 << 20),
+      s"$verb: numBuckets out of range: $numBuckets")
+    require(keyCols.nonEmpty, s"$verb: no key columns")
+    require(!batch.columns.contains(BucketCol),
+      s"$verb: input must not carry reserved column $BucketCol")
+  }
+
+  /** The bucket of a row: `pmod(xxhash64(keys), n)` — deterministic
+    * across batches and sessions, the same on the write and read side. */
+  private def bucketExpr(keyCols: Seq[String], n: Int): Column = {
+    import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
+    pmod(xxhash64(keyCols.map(col): _*), lit(n.toLong)).cast("int")
+  }
+
+  /** The buckets `df`'s keys hash into (one small distinct, ≤ n rows). */
+  private def touchedBuckets(df: DataFrame, keyCols: Seq[String],
+                             n: Int): Set[Int] =
+    df.select(bucketExpr(keyCols, n).as("b")).distinct()
+      .collect().map(_.getInt(0)).toSet
+
+  /** A live merge rule must match the caller's — merging under a
+    * different key would resolve winners by the wrong rule and
+    * silently drop rows. */
+  private def requireMergeRule(snap: Snapshot, spec: MergeSpec,
+                               tableDir: String, verb: String): Unit =
+    snap.merge.foreach(m => require(m == spec,
+      s"$verb: table at $tableDir carries merge rule " +
+        s"(keys=${m.keys.mkString(",")}, ts=${m.ts}, tie=${m.tie}); " +
+        s"refusing one keyed (${spec.keys.mkString(",")}, ${spec.ts}, " +
+        s"${spec.tie}) — fold deltas first (compactDeltas) to change the " +
+        "rule"))
+
+  /** One copy-on-write attempt of [[upsertBucketed]] against `head` —
+    * also [[upsertBucketedDelta]]'s layout boot. */
+  private def bucketedStep(spark: SparkSession, tableDir: String,
+                           head: HeadInfo, batch: DataFrame,
+                           keyCols: Seq[String], tsCol: String,
+                           tieCol: String, numBuckets: Int,
+                           batched: Boolean,
+                           touched: => Set[Int]): Step[Seq[String]] = {
+    val snap = head.snap
+    require(snap.tombstoneGens.isEmpty,
+      s"upsertBucketed: row tombstones live at $tableDir — a bucket " +
+        "rewrite would re-commit deleted rows above the tombstone " +
+        "seq and resurrect them. Fold deletes first (rewrite() / " +
+        "optimizeManifested), then upsert.")
+    requireNoMapping(snap, tableDir, "upsertBucketed")
+    // migrate (one whole-table re-bucket) when any generation is
+    // untagged
+    val migrate = snap.generations.exists(g => bucketOf(g).isEmpty)
+    if (!migrate) snap.buckets.foreach(b => require(b.n == numBuckets,
+      s"upsertBucketed: table at $tableDir is bucketed ${b.n}-way; " +
+        s"refusing a $numBuckets-way upsert (stale rows would strand " +
+        "in unread buckets). Re-bucket explicitly via rewrite() " +
+        "first."))
+    requireMergeRule(snap, MergeSpec(keyCols, tsCol, tieCol), tableDir,
+      "upsertBucketed")
+    // a recorded key-provenance mismatch is the same stranding hazard
+    // with the bucket COUNT right and NO merge rule live: a key's
+    // stale row sits in a bucket hashed under the OLD keys, which a
+    // touched-bucket read under the NEW keys never opens (a review
+    // pass found the post-fold shape: compactDeltas clears the merge
+    // rule but keeps the layout, so the merge-rule equality check
+    // alone cannot catch this)
+    if (!migrate) snap.buckets.foreach(b => require(b.keys == keyCols,
+      s"upsertBucketed: table at $tableDir is bucketed by keys " +
+        s"(${b.keys.mkString(",")}); refusing an upsert keyed " +
+        s"(${keyCols.mkString(",")}) — stale rows would strand in " +
+        "buckets the new key hash never reads. Re-bucket explicitly " +
+        "via rewrite() first."))
+    // nothing data-bearing to commit: watermark-only bookkeeping
+    if (!migrate && touched.isEmpty)
+      return watermarkOnly(head, batched, Seq.empty[String])
+    val readGens =
+      if (migrate) snap.generations
+      else snap.generations.filter(g => bucketOf(g).exists(touched))
+    val cur =
+      if (readGens.isEmpty) batch.toDF().limit(0) // schema only
+      else scanGens(spark, tableDir, snap, readGens)
+    val moved = stageSplit(spark, tableDir,
+        Temporal.latestSnapshot(cur.unionByName(batch.toDF()), keyCols,
+          tsCol, tieCol),
+        BucketCol, bucketExpr(keyCols, numBuckets), Some(numBuckets),
+        inheritedStatsCol(snap, batch.columns.toSeq)) { (b, _) =>
+      newGenName(head.seq + 1, s"b$b-")
+    }
+    val movedGens = moved.map(_._2)
+    val keepOld =
+      if (migrate) Seq.empty else snap.generations.filterNot(readGens.contains)
+    // an all-empty merge (empty table × empty batch on the migration
+    // path) must NEVER commit a zero-generation snapshot — read() would
+    // refuse the table until the next data-bearing commit
+    if (keepOld.isEmpty && moved.isEmpty)
+      return watermarkOnly(head, batched, Seq.empty[String])
+    val gens = keepOld ++ movedGens
+    val (keepParts, keepPartCol) = snap.partsFor(keepOld)
+    Commit(snap.copy(generations = gens,
+      buckets = Some(BucketLayout(numBuckets, keyCols)),
+      meta = snap.metaFor(keepOld) ++ moved.map(m => m._2 -> m._3),
+      merge = mergeFor(gens, snap.merge),
+      parts = keepParts, partCol = keepPartCol), movedGens, movedGens)
   }
 
   /** [[upsertSink]]'s bucketed successor as a `foreachBatch` sink: the
@@ -2039,83 +2024,22 @@ object TableManifest {
       ()
     }
 
-  /** MERGE-ON-READ incremental CDC upsert: commit `batch` as
-    * bucket-tagged DELTA generations — O(batch) data cost per call
-    * with ZERO base reads, closing [[upsertBucketed]]'s copy-on-write
-    * degenerate case (a micro-batch with uniformly SPREAD keys touches
-    * ~all buckets and CoW then rewrites the whole table per batch;
-    * the delta path writes the batch and nothing else, whatever its
-    * key spread). The trade is read-side: while deltas are live,
-    * readers resolve the latest row per key ([[Temporal.latestSnapshot]]
-    * over base ∪ deltas — the rule rides the manifest as a
-    * [[MergeSpec]], so reads need no out-of-band key knowledge), and
-    * [[compactDeltas]] folds deltas back into their buckets' base —
-    * run it on the maintenance cadence to bound read amplification
-    * (Iceberg v2 / Delta deletion-vector economics: O(batch) writes,
-    * periodic fold, reads amortize between folds).
-    *
-    * Layout: requires the table to be purely `numBuckets`-bucketed
-    * (an [[upsertBucketed]] table); any other state — fresh seed,
-    * post-append mixed layout — BOOTS via one copy-on-write
-    * [[upsertBucketed]] call (the documented migration path), after
-    * which every call is a delta commit. A live merge rule must match
-    * this call's (pinned like the bucket modulus — loud mismatch).
-    * Within the batch, the winner rule is pre-applied (one batch-sized
-    * shuffle) so a delta generation holds at most one row per key.
-    *
-    * Exactly-once: (`writerId`, `batchId`) under [[rewriteBatch]]'s
-    * per-writer watermark contract; an empty batch commits
-    * watermark-only. Returns the new delta generation names (empty for
-    * watermark-only), or None on a covered replay.
-    *
-    * Concurrency: deltas COMMUTE like appends (they derive from the
-    * batch alone, never the base), so a lost CAS just re-stages
-    * against the new head — cheap, batch-sized. A concurrent commit
-    * that changed the layout mid-flight re-routes through the boot
-    * path on the retry. */
   /** Stage `batch`'s winner-per-key rows as bucket-tagged DELTA
     * generation directories (`_gen-<seq>-b<k>-d-<uuid8>`) for a commit
     * at `seq` — the shared write half of [[upsertBucketedDelta]] and
     * [[upsertDelta]]. Batch-only winner-per-key first (one batch-sized
     * shuffle): a delta generation holds at most one row per key,
-    * bounding delta growth to keys-touched per batch. The stage derives
-    * from the BATCH alone, so a failure here is never base staleness —
-    * callers rethrow rather than retry. */
+    * bounding delta growth to keys-touched per batch. */
   private def stageDeltaGens(spark: SparkSession, tableDir: String,
                              batch: DataFrame, spec: MergeSpec,
                              numBuckets: Int, seq: Long,
                              statsCol: Option[String])
-      : Seq[(String, GenMeta)] = {
-    import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
-    val fs = fsOf(spark, tableDir)
-    val stage = new Path(tableDir,
-      s"._stage-delta-${java.util.UUID.randomUUID.toString.take(8)}")
-    try {
-      val winners =
-        Temporal.latestSnapshot(batch.toDF(), spec.keys, spec.ts, spec.tie)
-      val schemaJson = writtenSchemaJson(winners.schema)
-      winners.withColumn(BucketCol,
-          pmod(xxhash64(spec.keys.map(col): _*), lit(numBuckets.toLong))
-            .cast("int"))
-        // pinned count: see upsertBucketed's staging note (AQE would
-        // serialize the per-bucket writes into one task)
-        .repartition(numBuckets, col(BucketCol))
-        .write.mode("errorifexists")
-        .partitionBy(BucketCol).parquet(stage.toString)
-      fs.listStatus(stage)
-        .filter(e => e.isDirectory &&
-          e.getPath.getName.startsWith(s"$BucketCol="))
-        .sortBy(_.getPath.getName)
-        .map { d =>
-          val b = d.getPath.getName.stripPrefix(s"$BucketCol=").toInt
-          val gname = f"$GenPrefix$seq%06d-b$b-d-" +
-            java.util.UUID.randomUUID.toString.take(8)
-          require(fs.rename(d.getPath, new Path(tableDir, gname)),
-            s"stageDeltaGens: staging rename failed for bucket $b")
-          gname -> collectGenMeta(spark, tableDir, gname, statsCol, schemaJson)
-        }.toSeq
-    } finally fs.delete(stage, true)
-  }
+      : Seq[(String, GenMeta)] =
+    stageSplit(spark, tableDir,
+        Temporal.latestSnapshot(batch.toDF(), spec.keys, spec.ts, spec.tie),
+        BucketCol, bucketExpr(spec.keys, numBuckets), Some(numBuckets),
+        statsCol)((b, _) => newGenName(seq, s"b$b-d-"))
+      .map(m => m._2 -> m._3)
 
   /** HISTORY-PRESERVING merge-on-read upsert — the TAILABLE CDC verb:
     * commit `batch` as bucket-tagged delta generations over WHATEVER
@@ -2141,115 +2065,95 @@ object TableManifest {
     * honest to its every-generation-tagged contract: it is only kept
     * when the table was already purely bucketed under `numBuckets`.
     *
-    * Exactly-once, concurrency, and the pinned merge rule: exactly
+    * Exactly-once and the pinned merge rule: exactly
     * [[upsertBucketedDelta]]'s contract (per-writer watermarks; an
     * empty batch commits watermark-only; a different merge rule fails
-    * loudly; lost CAS re-stages against the new head). Returns the new
-    * generation names, or None on a covered replay. */
+    * loudly). Returns the new generation names, or None on a covered
+    * replay.
+    *
+    * Concurrency: re-derive — the deltas are re-staged from the batch
+    * against the new head, since the winner may have changed the layout
+    * or the rule (batch-sized, cheap). */
   def upsertDelta(spark: SparkSession, tableDir: String,
                   batch: DataFrame, keyCols: Seq[String],
                   tsCol: String, tieCol: String, numBuckets: Int = 16,
                   batchId: Option[Long] = None,
                   writerId: String = DefaultWriter,
                   maxRetries: Int = 5): Option[Seq[String]] = {
-    requireWriterId(writerId)
-    require(numBuckets >= 1 && numBuckets <= (1 << 20),
-      s"upsertDelta: numBuckets out of range: $numBuckets")
-    require(keyCols.nonEmpty, "upsertDelta: no key columns")
-    require(!batch.columns.contains(BucketCol),
-      s"upsertDelta: input must not carry reserved column " + BucketCol)
-    val fs = fsOf(spark, tableDir)
+    requireBucketArgs("upsertDelta", batch, keyCols, numBuckets)
     val spec = MergeSpec(keyCols, tsCol, tieCol)
-    var attempts = 0
-    var lastRace: String = ""
-    while (attempts <= maxRetries) {
-      val head = resolveHead(spark, tableDir).getOrElse(
-        throw new IllegalArgumentException(
-          s"TableManifest: no manifest at $tableDir — publish() the " +
-            "table (e.g. updates.limit(0)) before upserting"))
-      val (seq, snap) = (head.seq, head.snap)
-      if (replayGate(snap, writerId, batchId, tableDir))
-        return None // covered replay: nothing read, written, committed
+    commitLoop(spark, "upsertDelta", tableDir, maxRetries,
+        batchOf(writerId, batchId)) { (head, _) =>
+      val snap = head.snap
       requireNoMapping(snap, tableDir, "upsertDelta")
-      snap.merge.foreach(m => require(m == spec,
-        s"upsertDelta: table at $tableDir carries merge rule " +
-          s"(keys=${m.keys.mkString(",")}, ts=${m.ts}, tie=${m.tie}); " +
-          s"refusing a delta keyed (${keyCols.mkString(",")}, $tsCol, " +
-          s"$tieCol) — fold first (compactDeltas) to change the rule"))
-      attempts += 1
-      val movedMeta = stageDeltaGens(spark, tableDir, batch, spec,
-        numBuckets, seq + 1, inheritedStatsCol(snap, batch.columns.toSeq))
-      val moved = movedMeta.map(_._1)
-      if (moved.isEmpty) {
-        // empty batch: watermark-only bookkeeping, generations unchanged
-        if (batchId.isEmpty ||
-            commitAndCheckpoint(spark, tableDir, seq + 1,
-              snap.copy(writers = mergeWriters(snap.writers,
-                Map(writerId -> batchId.get)))))
-          return Some(Seq.empty)
-        lastRace = s"version ${seq + 1} taken by a concurrent commit"
-      } else {
-        val gens = snap.generations ++ moved
+      requireMergeRule(snap, spec, tableDir, "upsertDelta")
+      val moved = stageDeltaGens(spark, tableDir, batch, spec, numBuckets,
+        head.seq + 1, inheritedStatsCol(snap, batch.columns.toSeq))
+      val movedGens = moved.map(_._1)
+      if (moved.isEmpty) watermarkOnly(head, batchId.isDefined, movedGens)
+      else {
         // the layout survives only when count AND recorded key
         // provenance both match this delta's hash — a post-fold table
         // bucketed under OTHER keys must drop the field (mixed layout),
         // or bucket-locality consumers (prunedMergeBuckets, bounded
         // folds, point reads) would prune under a false assumption
         val layout = BucketLayout(numBuckets, keyCols)
-        val bucketsAfter =
-          if (snap.buckets.contains(layout) &&
-              snap.dataGens.forall(g => bucketOf(g).isDefined))
-            Some(layout)
-          else None // mixed layout: the field's contract is every-tagged
-        val next = Snapshot(gens,
-          mergeWriters(snap.writers,
-            batchId.map(b => Map(writerId -> b)).getOrElse(Map.empty)),
-          bucketsAfter,
-          snap.metaFor(snap.generations) ++ movedMeta,
-          Some(spec), snap.parts, snap.partCol,
-          deleteFor(gens, snap.delete))
-        if (commitAndCheckpoint(spark, tableDir, seq + 1, next)) {
-          vacuum(spark, tableDir, seq + 1,
-            keepGens = snap.generations.toSet ++ next.generations,
-            dropFutureSeq = false)
-          return Some(moved)
-        }
-        moved.foreach(g => fs.delete(new Path(tableDir, g), true))
-        lastRace = s"version ${seq + 1} taken by a concurrent commit"
+        val pure = snap.buckets.contains(layout) &&
+          snap.dataGens.forall(g => bucketOf(g).isDefined)
+        val gens = snap.generations ++ movedGens
+        Commit(snap.copy(generations = gens,
+          buckets = if (pure) Some(layout) else None,
+          meta = snap.meta ++ moved, merge = Some(spec),
+          delete = deleteFor(gens, snap.delete)), movedGens, movedGens)
       }
     }
-    throw new java.io.IOException(
-      s"TableManifest: upsertDelta at $tableDir did not commit in " +
-        s"$attempts attempts (last: $lastRace) — writer storm?")
   }
 
+  /** MERGE-ON-READ incremental CDC upsert: commit `batch` as
+    * bucket-tagged DELTA generations — O(batch) data cost per call
+    * with ZERO base reads, closing [[upsertBucketed]]'s copy-on-write
+    * degenerate case (a micro-batch with uniformly SPREAD keys touches
+    * ~all buckets and CoW then rewrites the whole table per batch;
+    * the delta path writes the batch and nothing else, whatever its
+    * key spread). The trade is read-side: while deltas are live,
+    * readers resolve the latest row per key ([[Temporal.latestSnapshot]]
+    * over base ∪ deltas — the rule rides the manifest as a
+    * [[MergeSpec]], so reads need no out-of-band key knowledge), and
+    * [[compactDeltas]] folds deltas back into their buckets' base —
+    * run it on the maintenance cadence to bound read amplification
+    * (Iceberg v2 / Delta deletion-vector economics: O(batch) writes,
+    * periodic fold, reads amortize between folds).
+    *
+    * Layout: requires the table to be purely `numBuckets`-bucketed
+    * (an [[upsertBucketed]] table); any other state — fresh seed,
+    * post-append mixed layout — BOOTS via one copy-on-write
+    * [[upsertBucketed]] attempt (the documented migration path), after
+    * which every call is a delta commit. A live merge rule must match
+    * this call's (pinned like the bucket modulus — loud mismatch).
+    * Within the batch, the winner rule is pre-applied (one batch-sized
+    * shuffle) so a delta generation holds at most one row per key.
+    *
+    * Exactly-once: (`writerId`, `batchId`) under [[rewriteBatch]]'s
+    * per-writer watermark contract; an empty batch commits
+    * watermark-only. Returns the new delta generation names (empty for
+    * watermark-only), or None on a covered replay.
+    *
+    * Concurrency: re-derive — the deltas are re-staged against the new
+    * head, and a winner that changed the layout routes the retry
+    * through the boot. */
   def upsertBucketedDelta(spark: SparkSession, tableDir: String,
                           batch: DataFrame, keyCols: Seq[String],
                           tsCol: String, tieCol: String, numBuckets: Int,
                           batchId: Option[Long] = None,
                           writerId: String = DefaultWriter,
                           maxRetries: Int = 5): Option[Seq[String]] = {
-    import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
-    requireWriterId(writerId)
-    require(numBuckets >= 1 && numBuckets <= (1 << 20),
-      s"upsertBucketedDelta: numBuckets out of range: $numBuckets")
-    require(keyCols.nonEmpty, "upsertBucketedDelta: no key columns")
-    require(!batch.columns.contains(BucketCol),
-      s"upsertBucketedDelta: input must not carry reserved column " +
-        BucketCol)
-    val fs = fsOf(spark, tableDir)
+    requireBucketArgs("upsertBucketedDelta", batch, keyCols, numBuckets)
     val spec = MergeSpec(keyCols, tsCol, tieCol)
-    var attempts = 0
-    var lastRace: String = ""
-    var lastCause: Throwable = null
-    while (attempts <= maxRetries) {
-      val head = resolveHead(spark, tableDir).getOrElse(
-        throw new IllegalArgumentException(
-          s"TableManifest: no manifest at $tableDir — publish() the " +
-            "table (e.g. updates.limit(0)) before upserting"))
-      val (seq, snap) = (head.seq, head.snap)
-      if (replayGate(snap, writerId, batchId, tableDir))
-        return None // covered replay: nothing read, written, committed
+    val layout = BucketLayout(numBuckets, keyCols)
+    lazy val touched = touchedBuckets(batch, keyCols, numBuckets)
+    commitLoop(spark, "upsertBucketedDelta", tableDir, maxRetries,
+        batchOf(writerId, batchId)) { (head, _) =>
+      val snap = head.snap
       require(snap.tombstoneGens.isEmpty,
         s"upsertBucketedDelta: row tombstones live at $tableDir — fold " +
           "deletes first (rewrite() / optimizeManifested), then " +
@@ -2261,66 +2165,20 @@ object TableManifest {
       // witness that the tags were hashed under THIS call's keys (a
       // mismatched layout boots — the copy-on-write pass re-buckets the
       // whole table under the new keys once)
-      val pure = snap.buckets.contains(BucketLayout(numBuckets, keyCols)) &&
-        snap.generations.forall(g => bucketOf(g).isDefined)
-      if (!pure)
-        // boot/migrate: one copy-on-write pass establishes the layout
-        // (and, below, the merge rule); every later call is a delta
-        return upsertBucketed(spark, tableDir, batch, keyCols, tsCol,
-          tieCol, numBuckets, batchId, writerId, maxRetries)
-      snap.merge.foreach(m => require(m == spec,
-        s"upsertBucketedDelta: table at $tableDir carries merge rule " +
-          s"(keys=${m.keys.mkString(",")}, ts=${m.ts}, tie=${m.tie}); " +
-          s"refusing a delta keyed (${keyCols.mkString(",")}, $tsCol, " +
-          s"$tieCol) — fold first (compactDeltas) to change the rule"))
-      attempts += 1
-      def watermarkOnly(): Boolean =
-        batchId.isEmpty ||
-          commitAndCheckpoint(spark, tableDir, seq + 1,
-            Snapshot(snap.generations,
-              mergeWriters(snap.writers, Map(writerId -> batchId.get)),
-              snap.buckets, snap.metaFor(snap.generations), snap.merge,
-              snap.parts, snap.partCol))
-      // the stage derives from the BATCH alone — a failure here is
-      // never base staleness, so unlike upsertBucketed/compactDeltas
-      // there is no conditional-retry catch: any error rethrows
-      val movedMeta: Seq[(String, GenMeta)] =
-        stageDeltaGens(spark, tableDir, batch, spec, numBuckets, seq + 1,
-          inheritedStatsCol(snap, batch.columns.toSeq))
-      locally {
-        val moved = movedMeta.map(_._1)
-        if (moved.isEmpty) {
-          // empty batch: watermark-only bookkeeping, generations
-          // unchanged (no vacuum — nothing superseded)
-          if (watermarkOnly()) return Some(Seq.empty)
-          lastRace = s"version ${seq + 1} taken by a concurrent commit"
-        } else {
-          val next = Snapshot(snap.generations ++ moved,
-            mergeWriters(snap.writers,
-              batchId.map(b => Map(writerId -> b)).getOrElse(Map.empty)),
-            Some(BucketLayout(numBuckets, keyCols)),
-            snap.metaFor(snap.generations) ++ movedMeta,
-            Some(spec), snap.parts, snap.partCol)
-          if (commitAndCheckpoint(spark, tableDir, seq + 1, next)) {
-            vacuum(spark, tableDir, seq + 1,
-              keepGens = snap.generations.toSet ++ next.generations,
-              dropFutureSeq = false)
-            return Some(moved)
-          }
-          // lost the CAS: deltas commute, but the winner may have
-          // changed the layout or covered this batch — drop the staged
-          // generations and re-derive against the new head (batch-
-          // sized, cheap)
-          moved.foreach(g => fs.delete(new Path(tableDir, g), true))
-          lastRace = s"version ${seq + 1} taken by a concurrent commit"
-        }
+      if (!snap.buckets.contains(layout) ||
+          !snap.generations.forall(g => bucketOf(g).isDefined))
+        bucketedStep(spark, tableDir, head, batch, keyCols, tsCol, tieCol,
+          numBuckets, batchId.isDefined, touched)
+      else {
+        requireMergeRule(snap, spec, tableDir, "upsertBucketedDelta")
+        val moved = stageDeltaGens(spark, tableDir, batch, spec,
+          numBuckets, head.seq + 1, inheritedStatsCol(snap, batch.columns.toSeq))
+        val movedGens = moved.map(_._1)
+        if (moved.isEmpty) watermarkOnly(head, batchId.isDefined, movedGens)
+        else Commit(snap.copy(generations = snap.generations ++ movedGens,
+          meta = snap.meta ++ moved, merge = Some(spec)), movedGens, movedGens)
       }
     }
-    val storm = new java.io.IOException(
-      s"TableManifest: upsertBucketedDelta at $tableDir did not commit " +
-        s"in $attempts attempts (last: $lastRace) — writer storm?")
-    if (lastCause != null) storm.initCause(lastCause)
-    throw storm
   }
 
   /** [[upsertBucketedDelta]] as a `foreachBatch` sink: O(batch) data
@@ -2353,108 +2211,51 @@ object TableManifest {
     * single plain generation; the next bucketed upsert re-buckets
     * once.
     *
-    * Concurrency: the fold DERIVES from the base ([[rewriteBatch]]'s
-    * discipline) — the head read is the CAS base, a lost race deletes
-    * the staged buckets and re-derives against the new head; watermarks
-    * carry forward untouched, so folding between batches can never
-    * re-open the exactly-once door. */
+    * Concurrency: re-derive — the fold derives from the head, which is
+    * the CAS base; watermarks carry forward untouched, so folding
+    * between batches can never re-open the exactly-once door. */
   def compactDeltas(spark: SparkSession, tableDir: String,
-                    maxRetries: Int = 3): Option[Seq[String]] = {
-    import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
-    val fs = fsOf(spark, tableDir)
-    var attempts = 0
-    var lastRace: String = ""
-    var lastCause: Throwable = null
-    while (attempts <= maxRetries) {
-      val head = resolveHead(spark, tableDir).getOrElse(
-        throw new IllegalArgumentException(
-          s"TableManifest: no manifest at $tableDir — not a manifested " +
-            "table (publish() first)"))
-      val (seq, snap) = (head.seq, head.snap)
-      if (snap.deltaGens.isEmpty) return None // fully folded already
-      val spec = snap.merge.getOrElse(throw new IllegalStateException(
+                    maxRetries: Int = 3): Option[Seq[String]] =
+    commitLoop(spark, "compactDeltas", tableDir, maxRetries) { (head, _) =>
+      val snap = head.snap
+      lazy val spec = snap.merge.getOrElse(throw new IllegalStateException(
         s"TableManifest: delta generations at $tableDir with no merge " +
           "rule in the manifest — corrupt log?"))
-      attempts += 1
+      if (snap.deltaGens.isEmpty) Skip(None) // fully folded already
       // a bucket-BOUNDED fold (read only delta-touched buckets) is
       // sound only when the tags are hashed under the merge rule's own
       // keys — otherwise a key's stale base row can sit in a bucket the
       // fold never reads while the fold clears the rule that hid it
       // (same family as the pruning hazard a review pass found); a
-      // layout under other keys folds whole-table instead
-      val pure = snap.buckets.exists(_.keys == spec.keys) &&
-        snap.generations.forall(g => bucketOf(g).isDefined)
-      if (!pure)
-        // mixed layout: one whole-table rewrite folds everything (the
-        // transform input is already merge-applied via readSnapshot)
-        return Some(Seq(rewrite(spark, tableDir, maxRetries)(df => df)))
-      val n = snap.buckets.get.n
-      val touched = snap.deltaGens.flatMap(bucketOf).toSet
-      val readGens =
-        snap.generations.filter(g => bucketOf(g).exists(touched))
-      val keepOld = snap.generations.filterNot(readGens.contains)
-      val stage = new Path(tableDir,
-        s"._stage-fold-${java.util.UUID.randomUUID.toString.take(8)}")
-      val staged: Option[Seq[(String, GenMeta)]] =
-        try {
-          val cur = scanGens(spark, tableDir, snap, readGens)
-          val folded =
-            Temporal.latestSnapshot(cur, spec.keys, spec.ts, spec.tie)
-          val schemaJson = writtenSchemaJson(folded.schema)
-          folded.withColumn(BucketCol,
-              pmod(xxhash64(spec.keys.map(col): _*), lit(n.toLong))
-                .cast("int"))
-            // pinned count: see upsertBucketed's staging note
-            .repartition(n, col(BucketCol))
-            .write.mode("errorifexists")
-            .partitionBy(BucketCol).parquet(stage.toString)
-          Some(fs.listStatus(stage)
-            .filter(e => e.isDirectory &&
-              e.getPath.getName.startsWith(s"$BucketCol="))
-            .sortBy(_.getPath.getName)
-            .map { d =>
-              val b = d.getPath.getName.stripPrefix(s"$BucketCol=").toInt
-              val gname = f"$GenPrefix${seq + 1}%06d-b$b-" +
-                java.util.UUID.randomUUID.toString.take(8)
-              require(fs.rename(d.getPath, new Path(tableDir, gname)),
-                s"compactDeltas: staging rename failed for bucket $b")
-              gname -> collectGenMeta(spark, tableDir, gname,
-                inheritedStatsCol(snap, cur.columns.toSeq), schemaJson)
-            }.toSeq)
-        } catch {
-          case scala.util.control.NonFatal(e) =>
-            // retry only plausibly-stale base reads (rewriteBatch's
-            // discipline): head unchanged → deterministic bug, rethrow
-            val headNow = resolveHead(spark, tableDir).map(_.seq)
-            if (headNow.contains(seq)) throw e
-            lastRace = e.toString; lastCause = e; None
-        } finally fs.delete(stage, true)
-      staged.foreach { movedMeta =>
-        val moved = movedMeta.map(_._1)
-        if (keepOld.isEmpty && moved.isEmpty) return None // empty table
-        val (keepParts, keepPartCol) = snap.partsFor(keepOld)
-        val next = Snapshot(keepOld ++ moved, snap.writers,
-          snap.buckets, snap.metaFor(keepOld) ++ movedMeta,
-          mergeFor(keepOld ++ moved, snap.merge),
-          keepParts, keepPartCol)
-        if (commitAndCheckpoint(spark, tableDir, seq + 1, next)) {
-          vacuum(spark, tableDir, seq + 1,
-            keepGens = snap.generations.toSet ++ next.generations,
-            dropFutureSeq = false)
-          return Some(moved)
+      // layout under other keys folds whole-table instead (the
+      // transform input is already merge-applied via readSnapshot)
+      else if (!snap.buckets.exists(_.keys == spec.keys) ||
+          !snap.generations.forall(g => bucketOf(g).isDefined))
+        rewriteStep(spark, tableDir, head, None)(df => df)(g => Some(Seq(g)))
+      else {
+        val n = snap.buckets.get.n
+        val touched = snap.deltaGens.flatMap(bucketOf).toSet
+        val readGens =
+          snap.generations.filter(g => bucketOf(g).exists(touched))
+        val keepOld = snap.generations.filterNot(readGens.contains)
+        val cur = scanGens(spark, tableDir, snap, readGens)
+        val moved = stageSplit(spark, tableDir,
+            Temporal.latestSnapshot(cur, spec.keys, spec.ts, spec.tie),
+            BucketCol, bucketExpr(spec.keys, n), Some(n),
+            inheritedStatsCol(snap, cur.columns.toSeq)) { (b, _) =>
+          newGenName(head.seq + 1, s"b$b-")
         }
-        // lost the CAS: the fold derived from a superseded version —
-        // delete, re-derive against the new head
-        moved.foreach(g => fs.delete(new Path(tableDir, g), true))
-        lastRace = s"version ${seq + 1} taken by a concurrent commit"
+        val movedGens = moved.map(_._2)
+        val gens = keepOld ++ movedGens
+        val (keepParts, keepPartCol) = snap.partsFor(keepOld)
+        if (gens.isEmpty) Skip(None) // empty table
+        else Commit(snap.copy(generations = gens,
+          meta = snap.metaFor(keepOld) ++ moved.map(m => m._2 -> m._3),
+          merge = mergeFor(gens, snap.merge),
+          parts = keepParts, partCol = keepPartCol), Some(movedGens),
+          movedGens)
       }
-    }
-    val storm = new java.io.IOException(
-      s"TableManifest: compactDeltas at $tableDir did not commit in " +
-        s"$attempts attempts (last: $lastRace) — writer storm?")
-    if (lastCause != null) storm.initCause(lastCause)
-    throw storm
-  }
+    }.flatten
 
   /** The partition-staging column [[appendPartitioned]] splits by — a
     * CAST-TO-STRING COPY of the declared partition value, so the data
@@ -2583,19 +2384,19 @@ object TableManifest {
     * manifested twin of [[graft.sources.TableCatalog.writePartitioned]]'s
     * contract, with reader isolation and exactly-once on top.
     *
-    * Exactly-once and concurrency: [[append]]'s contract — per-writer
-    * watermarks, commuting commits, rebase on a lost CAS (the staged
-    * generations derive from the batch alone, so a retry re-commits
-    * them against the new head without rewriting data). Returns the
-    * new generation names keyed by partition value, or None on a
-    * covered replay. */
+    * Exactly-once: [[append]]'s per-writer watermark contract. Returns
+    * the new generation names keyed by partition value, or None on a
+    * covered replay.
+    *
+    * Concurrency: rebase — the staged generations derive from the batch
+    * alone, so a lost race re-commits them against the new head without
+    * rewriting data. */
   def appendPartitioned(spark: SparkSession, tableDir: String,
                         df: DataFrame, partCol: String,
                         batchId: Option[Long] = None,
                         writerId: String = DefaultWriter,
                         maxRetries: Int = 5): Option[Map[String, String]] = {
-    import org.apache.spark.sql.functions.col
-    requireWriterId(writerId)
+    val batch = batchOf(writerId, batchId)
     partSpecComponents(partCol).zip(partSourceCols(partCol)).foreach {
       case (component, src) =>
         require(df.columns.contains(src),
@@ -2625,94 +2426,34 @@ object TableManifest {
     require(!df.columns.contains(PartStageCol),
       s"appendPartitioned: input must not carry reserved column " +
         PartStageCol)
-    val fs = fsOf(spark, tableDir)
-    var base = resolveHead(spark, tableDir).getOrElse(
-      throw new IllegalArgumentException(
-        s"TableManifest: no manifest at $tableDir — publish() the " +
-          "table before appending"))
+    def check(snap: Snapshot): Unit = {
+      requireNoMapping(snap, tableDir, "appendPartitioned")
+      snap.partCol.foreach(c => require(c == partCol,
+        s"TableManifest: table at $tableDir is partitioned by '$c'; " +
+          s"refusing an append partitioned by '$partCol' (one value " +
+          "map, one column). Rewrite the table to change the partition " +
+          "spec."))
+    }
+    val base = headOf(spark, tableDir)
     if (replayGate(base.snap, writerId, batchId, tableDir))
       return None // replay: skip before writing
-    requireNoMapping(base.snap, tableDir, "appendPartitioned")
-    base.snap.partCol.foreach(c => require(c == partCol,
-      s"TableManifest: table at $tableDir is partitioned by '$c'; " +
-        s"refusing an append partitioned by '$partCol' (one value map, " +
-        "one column). Rewrite the table to change the partition spec."))
-    // stage once: the generations derive from the batch alone, so the
-    // rebase loop re-commits the same staged set (append discipline;
-    // names re-align to each attempt's seq below)
-    val stage = new Path(tableDir,
-      s"._stage-part-${java.util.UUID.randomUUID.toString.take(8)}")
-    val schemaJson = writtenSchemaJson(df.schema)
-    var staged: Seq[(String, String, GenMeta)] =
-      try {
-        df.withColumn(PartStageCol, partValueExpr(partCol))
-          .repartition(col(PartStageCol))
-          .write.mode("errorifexists")
-          .partitionBy(PartStageCol).parquet(stage.toString)
-        fs.listStatus(stage)
-          .filter(e => e.isDirectory &&
-            e.getPath.getName.startsWith(s"$PartStageCol="))
-          .sortBy(_.getPath.getName)
-          .zipWithIndex
-          .map { case (d, i) =>
-            val value =
-              org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-                .unescapePathName(
-                  d.getPath.getName.stripPrefix(s"$PartStageCol="))
-            val gname = f"$GenPrefix${base.seq + 1}%06d-p$i-" +
-              java.util.UUID.randomUUID.toString.take(8)
-            require(fs.rename(d.getPath, new Path(tableDir, gname)),
-              s"appendPartitioned: staging rename failed for '$value'")
-            (value, gname,
-              collectGenMeta(spark, tableDir, gname, None, schemaJson))
-          }.toSeq
-      } finally fs.delete(stage, true)
-    def reapStaged(): Unit =
-      staged.foreach(s => fs.delete(new Path(tableDir, s._2), true))
-    var attempts = 0
-    while (attempts <= maxRetries) {
-      val (seq, snap) = (base.seq, base.snap)
-      if (replayGate(snap, writerId, batchId, tableDir)) {
-        reapStaged() // a concurrent commit of this very batch won
-        return None
-      }
-      snap.partCol.foreach { c =>
-        if (c != partCol) {
-          reapStaged()
-          throw new IllegalArgumentException(
-            s"TableManifest: table at $tableDir became partitioned by " +
-              s"'$c' mid-commit; refusing '$partCol'")
-        }
-      }
-      if (snap.columns.isDefined) {
-        reapStaged() // a column mapping appeared mid-commit
-        requireNoMapping(snap, tableDir, "appendPartitioned")
-      }
-      staged = staged.map(s =>
-        (s._1, alignGenSeq(spark, tableDir, s._2, seq + 1), s._3))
-      val newGens = staged.map(_._2)
-      val (carriedParts, _) = snap.partsFor(snap.generations)
-      val merged = Snapshot(snap.generations ++ newGens,
-        mergeWriters(snap.writers,
-          batchId.map(b => Map(writerId -> b)).getOrElse(Map.empty)),
-        meta = snap.metaFor(snap.generations) ++
-          staged.map(s => s._2 -> s._3),
-        merge = mergeFor(snap.generations ++ newGens, snap.merge),
-        parts = carriedParts ++ staged.map(s => s._2 -> s._1),
-        partCol = Some(partCol),
-        delete = deleteFor(snap.generations ++ newGens, snap.delete))
-      attempts += 1
-      if (commitAndCheckpoint(spark, tableDir, seq + 1, merged)) {
-        vacuum(spark, tableDir, seq + 1,
-          keepGens = merged.generations.toSet, dropFutureSeq = false)
-        return Some(staged.map(s => s._1 -> s._2).toMap)
-      }
-      base = resolveHead(spark, tableDir).get // rebase on the winner
+    check(base.snap)
+    val staged = stageSplit(spark, tableDir, df, PartStageCol,
+        partValueExpr(partCol), None, None) { (_, i) =>
+      newGenName(base.seq + 1, s"p$i-")
     }
-    reapStaged()
-    throw new java.io.IOException(
-      s"TableManifest: appendPartitioned at $tableDir lost the commit " +
-        s"race on all $attempts attempts — writer storm?")
+    commitLoop(spark, "appendPartitioned", tableDir, maxRetries, batch,
+        staged.map(_._2), Some(base)) { (head, gens) =>
+      val snap = head.snap
+      check(snap)
+      val all = snap.generations ++ gens
+      val values = staged.map(_._1)
+      Commit(snap.copy(generations = all, buckets = None,
+        meta = snap.meta ++ gens.zip(staged.map(_._3)),
+        merge = mergeFor(all, snap.merge),
+        parts = snap.parts ++ gens.zip(values), partCol = Some(partCol),
+        delete = deleteFor(all, snap.delete)), values.zip(gens).toMap)
+    }
   }
 
   /** Read ONLY the generations whose recorded partition value is in
@@ -2729,11 +2470,7 @@ object TableManifest {
   def readPartitions(spark: SparkSession, tableDir: String,
                      partCol: String, values: Seq[String]): DataFrame =
     retryOnce {
-      val head = resolveHead(spark, tableDir).getOrElse(
-        throw new IllegalArgumentException(
-          s"TableManifest: no manifest at $tableDir — not a manifested " +
-            "table (publish() first)"))
-      val snap = head.snap
+      val snap = headOf(spark, tableDir).snap
       val want = values.toSet
       // a live MERGE rule defeats partition-value pruning the same way
       // it defeats file pruning (readPruned's guard): a key's WINNER
@@ -2768,11 +2505,7 @@ object TableManifest {
         "a multi-column composite value is URL-encoded and not " +
         "lexically ordered, so a range over it would prune wrong. Ask " +
         "for exact values via readPartitions().")
-    val head = resolveHead(spark, tableDir).getOrElse(
-      throw new IllegalArgumentException(
-        s"TableManifest: no manifest at $tableDir — not a manifested " +
-          "table (publish() first)"))
-    val snap = head.snap
+    val snap = headOf(spark, tableDir).snap
     val gens =
       if (snap.merge.isDefined ||
           !snap.partCol.contains(partCol)) snap.dataGens
@@ -2804,24 +2537,22 @@ object TableManifest {
     * toward [[deleteRows]]/[[rewrite]] (the common unvalued generation
     * is the empty publish seed, so the probe is metadata-priced in
     * practice). Exactly-once under [[append]]'s per-writer watermark
-    * contract. Returns the dropped generation names (empty when no
-    * generation carries the values), or None on a covered replay. */
+    * contract; with nothing recorded under the values the drop commits
+    * watermark-only. Returns the dropped generation names (empty when
+    * no generation carries the values), or None on a covered replay.
+    *
+    * Concurrency: re-derive — the drop set and the probe derive from
+    * the head, so a lost race re-runs them against the new head. */
   def dropPartitions(spark: SparkSession, tableDir: String,
                      partCol: String, values: Seq[String],
                      batchId: Option[Long] = None,
                      writerId: String = DefaultWriter,
                      maxRetries: Int = 5): Option[Seq[String]] = {
-    requireWriterId(writerId)
     require(values.nonEmpty, "dropPartitions: no partition values")
-    var base = resolveHead(spark, tableDir).getOrElse(
-      throw new IllegalArgumentException(
-        s"TableManifest: no manifest at $tableDir — not a manifested " +
-          "table (publish() first)"))
     val want = values.toSet
-    var attempts = 0
-    while (attempts <= maxRetries) {
-      val (seq, snap) = (base.seq, base.snap)
-      if (replayGate(snap, writerId, batchId, tableDir)) return None
+    commitLoop(spark, "dropPartitions", tableDir, maxRetries,
+        batchOf(writerId, batchId)) { (head, _) =>
+      val snap = head.snap
       requireNoMapping(snap, tableDir, "dropPartitions")
       require(snap.merge.isEmpty,
         s"TableManifest: dropPartitions at $tableDir refused while " +
@@ -2835,54 +2566,32 @@ object TableManifest {
           s"by '$partCol'")
       val dropped = snap.dataGens.filter(g => snap.parts.get(g).exists(want))
       val unvalued = snap.dataGens.filterNot(snap.parts.contains)
-      if (unvalued.nonEmpty) {
-        // one probe scan over ONLY the unvalued generations, filter
-        // pushed: rows of the dropped values there are invisible to a
-        // metadata drop — refuse loudly instead of leaving them live
-        val probe = scanGens(spark, tableDir, snap, unvalued)
-        val hit = !probe
-          .filter(partValueExpr(partCol).isin(values: _*))
-          .isEmpty
-        if (hit) throw new IllegalStateException(
+      // one probe scan over ONLY the unvalued generations, filter
+      // pushed: rows of the dropped values there are invisible to a
+      // metadata drop — refuse loudly instead of leaving them live
+      if (unvalued.nonEmpty && !scanGens(spark, tableDir, snap, unvalued)
+          .filter(partValueExpr(partCol).isin(values: _*)).isEmpty)
+        throw new IllegalStateException(
           s"TableManifest: dropPartitions at $tableDir found rows of " +
             s"the dropped values in UNVALUED generations " +
             s"(${unvalued.mkString(",")}) — a metadata-only drop " +
             "cannot remove them. deleteRows() the keys, or rewrite() " +
             "the table partitioned.")
-      }
       val remaining = snap.generations.filterNot(dropped.toSet)
-      if (dropped.isEmpty) {
-        // nothing recorded under the values: watermark-only bookkeeping
-        // (exactly-once replay must still advance), no generation moved
-        batchId.foreach(b => commitWatermark(spark, tableDir, writerId, b))
-        return Some(Seq.empty)
+      if (dropped.isEmpty) watermarkOnly(head, batchId.isDefined, dropped)
+      else {
+        require(remaining.exists(g => !isTombstoneGen(g)),
+          s"TableManifest: dropPartitions at $tableDir would drop every " +
+            "data generation — truncate via rewrite(df.limit(0)) instead")
+        val (keepParts, keepPartCol) = snap.partsFor(remaining)
+        // the loop's vacuum keeps the pre-drop version's generations:
+        // time travel inside the retention window still reads them
+        Commit(snap.copy(generations = remaining, buckets = None,
+          meta = snap.metaFor(remaining), parts = keepParts,
+          partCol = keepPartCol, delete = deleteFor(remaining, snap.delete)),
+          dropped)
       }
-      require(remaining.exists(g => !isTombstoneGen(g)),
-        s"TableManifest: dropPartitions at $tableDir would drop every " +
-          "data generation — truncate via rewrite(df.limit(0)) instead")
-      val (keepParts, keepPartCol) = snap.partsFor(remaining)
-      val merged = Snapshot(remaining,
-        mergeWriters(snap.writers,
-          batchId.map(b => Map(writerId -> b)).getOrElse(Map.empty)),
-        buckets = None,
-        meta = snap.metaFor(remaining),
-        merge = mergeFor(remaining, snap.merge),
-        parts = keepParts, partCol = keepPartCol,
-        delete = deleteFor(remaining, snap.delete))
-      attempts += 1
-      if (commitAndCheckpoint(spark, tableDir, seq + 1, merged)) {
-        // keep the pre-drop version's generations: time travel inside
-        // the retention window still reads the dropped partitions
-        vacuum(spark, tableDir, seq + 1,
-          keepGens = snap.generations.toSet ++ merged.generations,
-          dropFutureSeq = false)
-        return Some(dropped)
-      }
-      base = resolveHead(spark, tableDir).get // rebase on the winner
     }
-    throw new java.io.IOException(
-      s"TableManifest: dropPartitions at $tableDir lost the commit " +
-        s"race on all $attempts attempts — writer storm?")
   }
 
   private def extendMapping(m: ColumnMapping,
@@ -2911,50 +2620,45 @@ object TableManifest {
     * stays small and every combination that exists is spec'd) —
     * refuses loudly while any is active, and the bucketed/merge verbs
     * refuse while a mapping is active. Idempotent: an already-mapped
-    * table returns its mapping unchanged. */
+    * table returns its mapping unchanged.
+    *
+    * Concurrency: re-derive — the mapping derives from the head's
+    * schemas, and the exclusion check re-runs against every new head. */
   def enableColumnMapping(spark: SparkSession, tableDir: String,
-                          maxRetries: Int = 3): Unit = {
-    var attempts = 0
-    while (attempts <= maxRetries) {
-      attempts += 1
-      val head = resolveHead(spark, tableDir).getOrElse(
-        throw new IllegalArgumentException(
-          s"TableManifest: no manifest at $tableDir — not a manifested " +
-            "table (publish() first)"))
-      val (seq, snap) = (head.seq, head.snap)
-      if (snap.columns.isDefined) return // idempotent
-      require(snap.merge.isEmpty && snap.delete.isEmpty &&
-        snap.parts.isEmpty && snap.buckets.isEmpty,
-        s"TableManifest: enableColumnMapping at $tableDir refused " +
-          "while merge/delete/partition rules or a bucket layout are " +
-          "active — fold/rewrite first")
-      // mergeSchema semantics: the logical schema must cover columns
-      // present in ONLY SOME generations (the additive-append ingest
-      // contract) — a single-file sample would silently omit them from
-      // the mapping and the next fold would drop their data. The merged
-      // NAME LIST comes from the recorded schemas: first generation's
-      // fields in order, later generations' unseen fields appended in
-      // encounter order, exactly the field order Spark's parquet footer
-      // merge produces (footers merge in path order; generation names
-      // are zero-padded so path order IS commit order)
-      val names = snap.dataGens.sorted
-        .flatMap(snap.meta(_).schema.fieldNames).distinct
-      val mapping = ColumnMapping(names.size + 1,
-        names.zipWithIndex.map { case (n, i) => (i + 1, n) })
-      // bind every generation: its physical names ARE the current
-      // names (no rename has happened yet)
-      val meta = snap.metaFor(snap.generations).map { case (g, gm) =>
-        val genCols = gm.schema.fieldNames.toSet
-        g -> gm.copy(cols = mapping.cols.filter { case (_, n) => genCols(n) })
-      }
-      if (commitAndCheckpoint(spark, tableDir, seq + 1,
-          snap.copy(meta = meta, columns = Some(mapping))))
-        return // metadata-only: generations unchanged, nothing vacuumed
+                          maxRetries: Int = 3): Unit =
+    commitLoop(spark, "enableColumnMapping", tableDir, maxRetries) {
+      (head, _) =>
+        val snap = head.snap
+        if (snap.columns.isDefined) Skip(()) // idempotent
+        else {
+          require(snap.merge.isEmpty && snap.delete.isEmpty &&
+            snap.parts.isEmpty && snap.buckets.isEmpty,
+            s"TableManifest: enableColumnMapping at $tableDir refused " +
+              "while merge/delete/partition rules or a bucket layout are " +
+              "active — fold/rewrite first")
+          // mergeSchema semantics: the logical schema must cover columns
+          // present in ONLY SOME generations (the additive-append ingest
+          // contract) — a single-file sample would silently omit them
+          // from the mapping and the next fold would drop their data.
+          // The merged NAME LIST comes from the recorded schemas: first
+          // generation's fields in order, later generations' unseen
+          // fields appended in encounter order, exactly the field order
+          // Spark's parquet footer merge produces (footers merge in path
+          // order; generation names are zero-padded so path order IS
+          // commit order)
+          val names = snap.dataGens.sorted
+            .flatMap(snap.meta(_).schema.fieldNames).distinct
+          val mapping = ColumnMapping(names.size + 1,
+            names.zipWithIndex.map { case (n, i) => (i + 1, n) })
+          // bind every generation: its physical names ARE the current
+          // names (no rename has happened yet)
+          val meta = snap.metaFor(snap.generations).map { case (g, gm) =>
+            val genCols = gm.schema.fieldNames.toSet
+            g -> gm.copy(cols = mapping.cols.filter { case (_, n) => genCols(n) })
+          }
+          Commit(snap.copy(meta = meta, columns = Some(mapping)), ())
+        }
     }
-    throw new java.io.IOException(
-      s"TableManifest: enableColumnMapping at $tableDir lost the " +
-        s"commit race on all $attempts attempts — writer storm?")
-  }
 
   /** Metadata-only RENAME under an active column mapping: the id keeps
     * its files, the name changes everywhere — old generations read
@@ -2990,29 +2694,19 @@ object TableManifest {
       m.copy(cols = m.cols.filterNot(_._2 == name))
     }
 
+  /** The metadata-only mapping change behind [[renameColumn]] and
+    * [[dropColumn]]. Concurrency: re-derive — `f` re-applies to each
+    * attempt's head mapping. */
   private def updateMapping(spark: SparkSession, tableDir: String,
                             maxRetries: Int, what: String)
-                           (f: ColumnMapping => ColumnMapping): Unit = {
-    var attempts = 0
-    while (attempts <= maxRetries) {
-      attempts += 1
-      val head = resolveHead(spark, tableDir).getOrElse(
-        throw new IllegalArgumentException(
-          s"TableManifest: no manifest at $tableDir — not a manifested " +
-            "table (publish() first)"))
-      val (seq, snap) = (head.seq, head.snap)
-      val mapping = snap.columns.getOrElse(
+                           (f: ColumnMapping => ColumnMapping): Unit =
+    commitLoop(spark, what, tableDir, maxRetries) { (head, _) =>
+      val mapping = head.snap.columns.getOrElse(
         throw new IllegalStateException(
           s"TableManifest: no column mapping at $tableDir — " +
             "enableColumnMapping() first"))
-      if (commitAndCheckpoint(spark, tableDir, seq + 1,
-          snap.copy(columns = Some(f(mapping)))))
-        return // metadata-only commit
+      Commit(head.snap.copy(columns = Some(f(mapping))), ())
     }
-    throw new java.io.IOException(
-      s"TableManifest: $what at $tableDir lost the commit race on all " +
-        s"$attempts attempts — writer storm?")
-  }
 
   /** ROW-LEVEL DELETE through the manifest (the GDPR verb as a table
     * mutation): commit the distinct `keyCols` rows of `keys` as ONE
@@ -3031,28 +2725,35 @@ object TableManifest {
     * The key shape is pinned while tombstones live (one delete rule
     * per table); the tombstone generation holds ONLY key columns, so
     * at 100 TB a purge of k keys costs k rows of write plus one
-    * broadcast-sized join per read until the next fold. Exactly-once
-    * and concurrency: [[append]]'s contract (per-writer watermarks;
-    * tombstones commute with appends, so a lost CAS re-commits the
-    * staged tombstone against the new head). Returns the tombstone
-    * generation's name, or None on a covered replay. */
+    * broadcast-sized join per read until the next fold. Exactly-once:
+    * [[append]]'s per-writer watermark contract. Returns the tombstone
+    * generation's name, or None on a covered replay.
+    *
+    * Concurrency: rebase — tombstones commute with appends, so a lost
+    * race re-commits the staged tombstone against the new head; the
+    * refusals (a column mapping, another delete key) re-check every
+    * head, so a mapping enabled meanwhile is never dropped. */
   def deleteRows(spark: SparkSession, tableDir: String, keys: DataFrame,
                  keyCols: Seq[String], batchId: Option[Long] = None,
                  writerId: String = DefaultWriter,
                  maxRetries: Int = 5): Option[String] = {
     import org.apache.spark.sql.functions.col
-    requireWriterId(writerId)
+    val batch = batchOf(writerId, batchId)
     require(keyCols.nonEmpty, "deleteRows: no key columns")
     keyCols.foreach(k => require(keys.columns.contains(k),
       s"deleteRows: no column '$k' in ${keys.columns.mkString(",")}"))
-    val fs = fsOf(spark, tableDir)
-    var base = resolveHead(spark, tableDir).getOrElse(
-      throw new IllegalArgumentException(
-        s"TableManifest: no manifest at $tableDir — publish() the " +
-          "table before deleting from it"))
+    def check(snap: Snapshot): Unit = {
+      requireNoMapping(snap, tableDir, "deleteRows")
+      snap.delete.foreach(d => require(d.keys == keyCols,
+        s"TableManifest: table at $tableDir carries delete rule " +
+          s"keyed (${d.keys.mkString(",")}); refusing a delete " +
+          s"keyed (${keyCols.mkString(",")}) — fold tombstones " +
+          "first (rewrite/optimizeManifested) to change the rule"))
+    }
+    val base = headOf(spark, tableDir)
     if (replayGate(base.snap, writerId, batchId, tableDir))
       return None // replay: skip before writing
-    requireNoMapping(base.snap, tableDir, "deleteRows")
+    check(base.snap)
     // the key columns must exist in the table, or every read after
     // this commit would fail at the tombstone join — check NOW, loudly
     // (from the already-resolved CAS base: no second head resolution)
@@ -3060,55 +2761,21 @@ object TableManifest {
     keyCols.foreach(k => require(tableCols.contains(k),
       s"deleteRows: table at $tableDir has no column '$k' " +
         s"(columns: ${tableCols.mkString(",")})"))
-    var gname = f"$GenPrefix${base.seq + 1}%06d-x-" +
-      java.util.UUID.randomUUID.toString.take(8)
-    val tomb = keys.select(keyCols.map(col): _*).distinct()
-    tomb.write.mode("errorifexists").parquet(s"$tableDir/$gname")
-    val gm = withGenReapedOnFailure(spark, tableDir, gname) {
-      collectGenMeta(spark, tableDir, gname, None,
-        writtenSchemaJson(tomb.schema))
+    val gen = newGenName(base.seq + 1, "x-")
+    val gm = stageGeneration(spark, tableDir, gen, None)(
+      keys.select(keyCols.map(col): _*).distinct())
+    commitLoop(spark, "deleteRows", tableDir, maxRetries, batch, Seq(gen),
+        Some(base)) { (head, gens) =>
+      val snap = head.snap
+      check(snap)
+      val all = snap.generations ++ gens
+      // the data-generation layout is untouched; the tombstone's name
+      // seq (aligned by the loop) IS its cut point
+      Commit(snap.copy(generations = all,
+        meta = snap.meta + (gens.head -> gm),
+        merge = mergeFor(all, snap.merge),
+        delete = Some(DeleteSpec(keyCols))), gens.head)
     }
-    var attempts = 0
-    while (attempts <= maxRetries) {
-      val (seq, snap) = (base.seq, base.snap)
-      if (replayGate(snap, writerId, batchId, tableDir)) {
-        fs.delete(new Path(s"$tableDir/$gname"), true)
-        return None
-      }
-      // the tombstone's name seq IS its cut point — re-align per retry
-      gname = alignGenSeq(spark, tableDir, gname, seq + 1)
-      snap.delete.foreach { d =>
-        if (d.keys != keyCols) {
-          fs.delete(new Path(s"$tableDir/$gname"), true)
-          throw new IllegalArgumentException(
-            s"TableManifest: table at $tableDir carries delete rule " +
-              s"keyed (${d.keys.mkString(",")}); refusing a delete " +
-              s"keyed (${keyCols.mkString(",")}) — fold tombstones " +
-              "first (rewrite/optimizeManifested) to change the rule")
-        }
-      }
-      val gens = snap.generations :+ gname
-      val (carriedParts, carriedPartCol) = snap.partsFor(snap.generations)
-      val merged = Snapshot(gens,
-        mergeWriters(snap.writers,
-          batchId.map(b => Map(writerId -> b)).getOrElse(Map.empty)),
-        snap.buckets, // data-generation layout is untouched
-        snap.metaFor(snap.generations) + (gname -> gm),
-        mergeFor(gens, snap.merge),
-        carriedParts, carriedPartCol,
-        Some(DeleteSpec(keyCols)))
-      attempts += 1
-      if (commitAndCheckpoint(spark, tableDir, seq + 1, merged)) {
-        vacuum(spark, tableDir, seq + 1,
-          keepGens = merged.generations.toSet, dropFutureSeq = false)
-        return Some(gname)
-      }
-      base = resolveHead(spark, tableDir).get // rebase on the winner
-    }
-    fs.delete(new Path(s"$tableDir/$gname"), true)
-    throw new java.io.IOException(
-      s"TableManifest: deleteRows at $tableDir lost the commit race on " +
-        s"all $attempts attempts — writer storm?")
   }
 
   /** The commit log as a frame — operator-facing introspection over
@@ -3151,10 +2818,7 @@ object TableManifest {
     * append-only table and maintain a derived one. */
   def tailAppends(spark: SparkSession, tableDir: String,
                   sinceVersion: Long): (DataFrame, Long) = {
-    val head = resolveHead(spark, tableDir).getOrElse(
-      throw new IllegalArgumentException(
-        s"TableManifest: no manifest at $tableDir — not a manifested " +
-          "table (publish() first)"))
+    val head = headOf(spark, tableDir)
     if (head.seq == sinceVersion)
       return (read(spark, tableDir).limit(0), head.seq)
     require(sinceVersion < head.seq,
@@ -3278,10 +2942,7 @@ object TableManifest {
                                        tableDir: String,
                                        sinceVersion: Long)
       : (Seq[ChangeBatch], Long) = {
-    val head = resolveHead(spark, tableDir).getOrElse(
-      throw new IllegalArgumentException(
-        s"TableManifest: no manifest at $tableDir — not a manifested " +
-          "table (publish() first)"))
+    val head = headOf(spark, tableDir)
     (changeBatchesBetween(spark, tableDir, sinceVersion, head.seq,
       Some(head.snap)), head.seq)
   }
@@ -3612,14 +3273,10 @@ object TableManifest {
     * old-or-new atomicity as [[read]]. */
   def readKeyBuckets(spark: SparkSession, tableDir: String,
                      keyCols: Seq[String], keys: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
+    import org.apache.spark.sql.functions.col
     require(keyCols.nonEmpty, "readKeyBuckets: no key columns")
     retryOnce {
-      val head = resolveHead(spark, tableDir).getOrElse(
-        throw new IllegalArgumentException(
-          s"TableManifest: no manifest at $tableDir — not a manifested " +
-            "table (publish() first)"))
-      val snap = head.snap
+      val snap = headOf(spark, tableDir).snap
       // the bucket check runs over DATA generations — tombstones are
       // key rows read separately by the resolver, whatever their tag
       val gens = snap.buckets match {
@@ -3628,10 +3285,7 @@ object TableManifest {
         // the same conservative rule as every other pruning site
         case Some(BucketLayout(n, ks)) if ks == keyCols &&
             snap.dataGens.forall(g => bucketOf(g).isDefined) =>
-          val touched = keys
-            .select(pmod(xxhash64(keyCols.map(col): _*), lit(n.toLong))
-              .cast("int").as("b"))
-            .distinct().collect().map(_.getInt(0)).toSet
+          val touched = touchedBuckets(keys, keyCols, n)
           snap.dataGens.filter(g => bucketOf(g).exists(touched))
         case _ => snap.dataGens // not purely bucketed: read everything
       }
@@ -3736,7 +3390,11 @@ object TableManifest {
     * needs no shuffle and preserves the generations' relative order, so
     * an ingest clustered by arrival stays clustered. A clustering
     * rewrite is the same one-liner through [[rewrite]] with a sort —
-    * the verb stays a composition, not a second protocol. */
+    * the verb stays a composition, not a second protocol.
+    *
+    * Concurrency: re-derive — the plan is priced from the head the
+    * attempt commits against, so a lost race re-prices (a plan priced
+    * from a superseded head is never committed against a newer one). */
   def optimizeManifested(spark: SparkSession, tableDir: String,
                          targetBytes: Long,
                          maxRetries: Int = 3,
@@ -3744,43 +3402,22 @@ object TableManifest {
       : (String, Option[String]) = {
     require(targetBytes > 0,
       s"optimizeManifested: targetBytes must be positive: $targetBytes")
-    // The WHOLE decide-then-execute cycle retries together: a plan
-    // priced from a superseded head must not be committed against a
-    // newer one (rewrite would retry the DATA against the new head but
-    // coalesce to the stale plan). Each
-    // attempt re-resolves, re-prices, and commits with rewrite's own
-    // retry disabled so a lost race comes back here.
-    var attempts = 0
-    var last: String = ""
-    while (attempts <= maxRetries) {
-      attempts += 1
-      try {
-        val snap = resolveHead(spark, tableDir).map(_.snap)
-          .filter(_.generations.nonEmpty).getOrElse(
-            throw new IllegalArgumentException(
-              s"TableManifest: no manifest at $tableDir — not a " +
-                "manifested table (publish() first)"))
-        // price from the manifest's file inventory — zero listings on
-        // the decision path
-        val sizes = snap.fileSizes(snap.generations)
-        val planFiles = math.max(1L,
-          (sizes.sum + targetBytes - 1) / targetBytes)
-        // skip covers any plan at or above the current file count, so a
-        // plan that overflows Int (tiny target × huge table) can never
-        // reach the coalesce; the clamp documents that invariant rather
-        // than trusting the branch order
-        return if (sizes.size <= planFiles) ("skip", None)
-        else ("compact", Some(rewrite(spark, tableDir, maxRetries = 0,
-          statsCol = statsCol)(
-          _.coalesce(math.min(planFiles, Int.MaxValue.toLong).toInt))))
-      } catch {
-        case e: IllegalArgumentException => throw e // not-a-table: loud
-        case scala.util.control.NonFatal(e) => last = e.toString
-      }
-    }
-    throw new java.io.IOException(
-      s"TableManifest: optimizeManifested at $tableDir did not settle " +
-        s"in $attempts attempts (last: $last) — writer storm?")
+    commitLoop[(String, Option[String])](spark, "optimizeManifested",
+        tableDir, maxRetries) { (head, _) =>
+      // price from the manifest's file inventory — zero listings on
+      // the decision path
+      val sizes = head.snap.fileSizes(head.snap.generations)
+      val planFiles = math.max(1L,
+        (sizes.sum + targetBytes - 1) / targetBytes)
+      // skip covers any plan at or above the current file count, so a
+      // plan that overflows Int (tiny target × huge table) can never
+      // reach the coalesce; the clamp documents that invariant rather
+      // than trusting the branch order
+      if (sizes.size <= planFiles) Skip(("skip", None))
+      else rewriteStep(spark, tableDir, head, statsCol)(
+        _.coalesce(math.min(planFiles, Int.MaxValue.toLong).toInt))(
+        g => ("compact", Some(g)))
+    }.get
   }
 
   /** What one [[maintainManifested]] pass did — every field idempotent
@@ -3810,10 +3447,7 @@ object TableManifest {
                          statsCol: Option[String] = None)
       : MaintenanceReport = {
     val deltasFolded = compactDeltas(spark, tableDir).isDefined
-    val snap = resolveHead(spark, tableDir).map(_.snap).getOrElse(
-      throw new IllegalArgumentException(
-        s"TableManifest: no manifest at $tableDir — not a manifested " +
-          "table (publish() first)"))
+    val snap = headOf(spark, tableDir).snap
     val tombstonesFolded =
       if (snap.tombstoneGens.isEmpty) false
       else {
