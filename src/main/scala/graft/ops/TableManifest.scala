@@ -48,8 +48,9 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * and FAILS LOUDLY on a regressed id (rebuilt checkpoint), see
   * [[rewriteBatch]]. [[publish]] and [[rewrite]] CARRY the watermarks
   * forward, so a compaction between batches cannot reset idempotence
-  * and let a replay double-append. Head resolution is O(commits since
-  * the last checkpoint), flat in table age ([[resolveHead]]).
+  * and let a replay double-append. Head resolution probes up from the
+  * seq a hint names, O(commits since the hint), flat in table age
+  * ([[resolveHead]]).
   *
   * A reader resolves the newest manifest once and reads that version's
   * generation set: it sees the old table or the new table, never a mix,
@@ -77,7 +78,6 @@ object TableManifest {
 
   private val ManifestPrefix = "_graft_manifest-"
   private val GenPrefix = "_gen-"
-  private val CheckpointPrefix = "_graft_checkpoint-"
   private val HintFile = "_graft_last_checkpoint"
 
   /** The RETENTION BARRIER: no commit may land below seq M, the max
@@ -87,11 +87,11 @@ object TableManifest {
     * retention — see the barrier protocol on [[commitSnapshot]]. */
   private val BarrierDir = "_graft_barrier"
 
-  /** Write a state checkpoint every this-many commits (the seam that
+  /** Refresh the head hint every this-many commits (the seam that
     * makes head resolution O(window) instead of O(table age) — see
     * [[resolveHead]]). A protocol constant, not a knob: readers and
-    * writers need no agreement on it (checkpoints are derived caches;
-    * any interval would be correct), it only sets the probe bound. */
+    * writers need no agreement on it (the hint is a cache; any interval
+    * would be correct), it only sets the probe bound. */
   private[graft] val CheckpointInterval = 10L
 
   /** The writer identity [[append]]/[[rewriteBatch]] record their batch
@@ -195,17 +195,19 @@ object TableManifest {
     * watermarks (Delta's txnAppId/txnVersion model).
     *
     * `buckets` is Some iff the version was committed by
-    * [[upsertBucketed]] (or a delta verb keeping its layout) with every
-    * generation bucket-tagged — the layout-consistency check that stops
-    * a later upsert from hashing the same keys into a DIFFERENT bucket
-    * count (which would strand stale rows in buckets the merge no
-    * longer reads). Its `keys` are the columns the tags were hashed
-    * under — the half of the declaration the merge rule cannot carry
-    * once a fold clears it: every bucket-locality decision
-    * (bucket-granular pruning, bucket-bounded folds and point reads,
-    * delta reuse of an existing layout) is sound only when the
-    * decision's keys EQUAL the layout's, and a mismatch refuses or
-    * re-buckets loudly. Any other commit clears it (an [[append]]
+    * [[upsertBucketed]] (or a delta verb keeping its layout). INVARIANT:
+    * `Some(L)` means every data generation is tagged under `L`, and the
+    * field is the only witness of that — tags alone prove nothing, since
+    * a commit under another count drops the field and keeps the tags.
+    * It is the layout-consistency check that stops a later upsert from
+    * hashing the same keys into a DIFFERENT bucket count (which would
+    * strand stale rows in buckets the merge no longer reads). Its `keys`
+    * are the columns the tags were hashed under — the half of the
+    * declaration the merge rule cannot carry once a fold clears it:
+    * every bucket-locality decision (bucket-granular pruning,
+    * bucket-bounded folds and point reads, delta reuse of an existing
+    * layout) is sound only when the decision's keys EQUAL the layout's,
+    * and a mismatch refuses or re-buckets loudly. Any other commit clears it (an [[append]]
     * mixes in an unbucketed generation; a [[rewrite]] collapses to
     * one), and the next bucketed upsert re-buckets the whole table
     * once.
@@ -492,103 +494,66 @@ object TableManifest {
       s"""$parts$meta}"""
   }
 
-  private def checkpointPath(tableDir: String, seq: Long): Path =
-    new Path(tableDir, f"$CheckpointPrefix$seq%06d.json")
-
   /** A resolved head: its seq, its snapshot, and the number of
     * filesystem metadata ops the resolution cost — the test seam for
     * the O(window) contract (flat in table age, bounded by
-    * [[CheckpointInterval]] + a constant on the checkpointed path). */
+    * [[CheckpointInterval]] + a constant on the hinted path). */
   private[graft] case class HeadInfo(seq: Long, snap: Snapshot, ops: Int)
+
+  /** The seq the `_graft_last_checkpoint` hint names, or None when there
+    * is none. The stat comes first because an open of a missing file is
+    * still an open, and a table younger than its first hint would pay
+    * one on every resolution; a hint deleted between the stat and the
+    * open reads as no hint. */
+  private def readHint(spark: SparkSession,
+                       fs: org.apache.hadoop.fs.FileSystem,
+                       tableDir: String): Option[Long] = {
+    val hint = new Path(tableDir, HintFile)
+    if (!fs.exists(hint)) None
+    else try """"seq"\s*:\s*(\d+)""".r.findFirstMatchIn(readSmall(spark, hint))
+      .map(_.group(1).toLong)
+    catch { case _: java.io.FileNotFoundException => None }
+  }
 
   /** Resolve the newest committed version WITHOUT listing the manifest
     * log. The log is permanent (one JSON per commit — [[vacuum]]'s ABA
     * argument), so a listing-based head lookup is O(table age) on every
-    * commit and read of a long-lived streaming table. Instead:
-    * the `_graft_last_checkpoint` HINT names the newest checkpoint seq
-    * C; the checkpoint file carries the full snapshot at C; and because
-    * commit seqs are DENSE (every commit claims head+1, truncation only
-    * removes a prefix), the head is found by probing C+1, C+2, … until
-    * the first missing manifest — O(commits since the last checkpoint)
-    * ≤ [[CheckpointInterval]] + in-flight, with writers LIVE. One
-    * parse of the last present manifest yields the snapshot.
+    * commit and read of a long-lived streaming table. Instead, one rule:
+    * [[probeHeadFrom]] the seq the `_graft_last_checkpoint` hint names
+    * (refreshed every [[CheckpointInterval]] commits), or seq 1 when
+    * there is no hint (seqs are dense from [[publish]]'s 1), then parse
+    * the one head manifest — O(commits since the hint) ≤
+    * [[CheckpointInterval]] + in-flight, with writers LIVE. A hinted
+    * resolution opens two files: the hint and the head.
     *
-    * The hint is a CACHE, not a correctness input: missing, torn,
-    * stale, or pointing below a truncation cut, resolution falls back
-    * to the full listing (new tables, pre-checkpoint tables, cold
-    * recovery). A concurrent commit landing right after the probe is
-    * ordinary CAS staleness — the committer's rebase handles it the
-    * same as a listing-based race. */
+    * The hint is a CACHE, not a correctness input: a stale hint, or one
+    * a concurrent [[truncateLog]] cuts under, either probes to the true
+    * head or loses its start manifest. Resolution falls back to the
+    * full listing, whose max seq is always the true head, when the
+    * start manifest is gone, and — without a hint — when the table was
+    * ever truncated (a barrier exists, so seq 1 may be a phantom:
+    * [[commitSnapshot]]) or the probe reaches an interval seq, whose
+    * winner writes the hint (so the log was edited under it). A
+    * concurrent commit landing right after the probe is ordinary CAS
+    * staleness — the committer's rebase handles it the same as a
+    * listing-based race. */
   private[graft] def resolveHead(spark: SparkSession,
                                  tableDir: String): Option[HeadInfo] = {
     val fs = fsOf(spark, tableDir)
-    val root = new Path(tableDir)
-    var ops = 0
-    val hinted: Option[HeadInfo] =
-      try {
-        ops += 1
-        val hintSeq =
-          if (!fs.exists(new Path(root, HintFile))) None
-          else {
-            ops += 1
-            """"seq"\s*:\s*(\d+)""".r
-              .findFirstMatchIn(readSmall(spark, new Path(root, HintFile)))
-              .map(_.group(1).toLong)
-          }
-        hintSeq.flatMap { c =>
-          val cp = checkpointPath(tableDir, c)
-          ops += 1
-          parseSnapshotIfPresent(spark, cp).map { cpSnap =>
-            var seq = c
-            var snap = cpSnap
-            var probing = true
-            while (probing) {
-              ops += 1
-              if (fs.exists(manifestPath(tableDir, seq + 1))) seq += 1
-              else probing = false
-            }
-            if (seq != c) {
-              ops += 1
-              // the probed head is immutable once present; a parse miss
-              // here means a truncation raced us — fall back
-              snap = parseSnapshotIfPresent(spark,
-                manifestPath(tableDir, seq)).getOrElse(
-                  throw new java.io.FileNotFoundException(
-                    s"head $seq truncated mid-resolve"))
-            }
-            // Truncation guard (an r11 review finding, hardened by an
-            // r12 one): a concurrent truncateLog deleting manifests
-            // ABOVE this hint's checkpoint makes the upward probe stop
-            // at the truncation gap and report a BELOW-CUT seq as
-            // head. truncateLog deletes the below-cut hint BEFORE any
-            // manifest, so re-verifying the hint AFTER the probe
-            // closes the window — and the re-verify compares the
-            // SEQ, not mere existence: a checkpoint winner re-creates
-            // the hint every interval, and an existence check would
-            // pass on the fresh hint while the probe's window is being
-            // reaped (seqs are monotonic, so a re-created hint can
-            // never carry the old seq). Changed or gone → fall back to
-            // the full listing, whose max seq is always the true head.
-            ops += 1
-            val hintNow =
-              try """"seq"\s*:\s*(\d+)""".r
-                .findFirstMatchIn(readSmall(spark, new Path(root, HintFile)))
-                .map(_.group(1).toLong)
-              catch { case _: java.io.FileNotFoundException => None }
-            if (!hintNow.contains(c))
-              throw new java.io.FileNotFoundException(
-                s"hint moved or deleted mid-resolve (truncation or a " +
-                  s"newer checkpoint) at $tableDir")
-            HeadInfo(seq, snap, ops)
-          }
-        }
-      } catch { case scala.util.control.NonFatal(_) => None }
-    hinted.orElse {
-      ops += 1
-      manifestFiles(spark, tableDir).lastOption.map { p =>
-        HeadInfo(manifestSeq(p.getName), parseSnapshot(spark, p), ops + 1)
+    val hint = readHint(spark, fs, tableDir)
+    val start = hint.orElse(
+      if (fs.exists(new Path(tableDir, BarrierDir))) None else Some(1L))
+    // finding the start cost two calls either way (the hint's stat and
+    // open, or its stat and the barrier's); a failed probe's calls are
+    // not counted
+    start.flatMap(probeHeadFrom(fs, tableDir, _))
+      .filter { case (seq, _) => hint.isDefined || seq < CheckpointInterval }
+      .flatMap { case (seq, probes) =>
+        parseSnapshotIfPresent(spark, manifestPath(tableDir, seq))
+          .map(HeadInfo(seq, _, 2 + probes + 1))
       }
-    }
+      .orElse(manifestFiles(spark, tableDir).lastOption.map(p =>
+        HeadInfo(manifestSeq(p.getName), parseSnapshot(spark, p), 2 + 3)))
   }
 
   /** The resolved head of a manifested table, failing loudly when the
@@ -600,17 +565,18 @@ object TableManifest {
         s"TableManifest: no manifest at $tableDir — not a manifested " +
           "table (publish() first)"))
 
-  /** The head now, probed up from `known`, a head seen earlier at
+  /** The head now, probed up from `known`, a seq committed earlier at
     * `tableDir`, through `fs` alone: `exists` on `known + 1`, `known +
     * 2`, … until the first missing manifest, then on `known` once more.
-    * No hint, no checkpoint, no parse — an idle table costs exactly two
-    * calls. Sound by the same rules [[resolveHead]]'s probe uses: commit
-    * seqs are dense and truncation removes only a prefix, so `known`
-    * still present AFTER the first miss means every seq from `known` to
-    * the last one found was present at that miss, which makes it the
-    * head at that instant. Returns the head and the calls it cost, or
-    * None when `known` is gone (truncated) — the caller then resolves
-    * the head from scratch. */
+    * No parse — an idle table costs exactly two calls. The one rule
+    * that establishes a head, for [[resolveHead]], [[commitLoop]] and
+    * the changefeed source. Sound because commit seqs are dense and
+    * [[truncateLog]] deletes manifests only as an ascending prefix:
+    * `known` still present AFTER the first miss means every seq from
+    * `known` to the last one found was present at that miss, which
+    * makes it the head at that instant. Returns the head and the calls
+    * it cost, or None when `known` is gone (truncated) — the caller
+    * then resolves the head another way. */
   private[graft] def probeHeadFrom(fs: org.apache.hadoop.fs.FileSystem,
                                    tableDir: String,
                                    known: Long): Option[(Long, Int)] = {
@@ -628,33 +594,22 @@ object TableManifest {
     resolveHead(spark, tableDir).map(_.ops).getOrElse(0)
 
   /** After WINNING the commit at `seq`: every [[CheckpointInterval]]-th
-    * version, publish the full snapshot as an immutable checkpoint file
-    * (same fail-if-exists primitive — only the seq winner ever writes
-    * it, so the CAS is idempotence, not contention) and refresh the
-    * hint. The hint write is best-effort and atomic-replace (it is a
-    * cache; a torn or stale hint only costs the fallback listing). */
-  private def maybeCheckpoint(spark: SparkSession, tableDir: String,
-                              seq: Long, snapshot: Snapshot): Unit =
-    if (seq % CheckpointInterval == 0) {
-      // the WHOLE write is best-effort: checkpoints are derived caches
-      // of already-committed state, and this runs AFTER the caller's
-      // commit won — an IO failure here must never surface as a failed
-      // commit (the caller would retry a commit that landed and
-      // double-publish). A skipped checkpoint only costs resolution
-      // probes until the next interval winner writes one.
-      try {
-        publishImmutable(spark, tableDir, checkpointPath(tableDir, seq),
-          renderSnapshot(snapshot))
-        writeAtomicReplace(spark, tableDir, HintFile, s"""{"seq":$seq}""")
-      } catch { case scala.util.control.NonFatal(_) => () }
-    }
+    * version, point the hint at it. Best-effort: the hint is a cache,
+    * and this runs AFTER the caller's commit won — an IO failure here
+    * must never surface as a failed commit (the caller would retry a
+    * commit that landed and double-publish). A skipped hint only costs
+    * probes until the next interval winner refreshes it. */
+  private def maybeRefreshHint(spark: SparkSession, tableDir: String,
+                               seq: Long): Unit =
+    if (seq % CheckpointInterval == 0)
+      try writeAtomicReplace(spark, tableDir, HintFile, s"""{"seq":$seq}""")
+      catch { case scala.util.control.NonFatal(_) => () }
 
   /** Atomic-REPLACE publication of one small mutable control file (the
-    * checkpoint hint, the retention barrier) — last-writer-wins, never
-    * torn: java.nio ATOMIC_MOVE on local paths (reaping the checksum
-    * sidecar the ChecksumFileSystem cannot see moved — an r11 review
-    * finding: one '.<tmp>.crc' orphan per write otherwise), OVERWRITE
-    * FileContext rename on HDFS. */
+    * head hint) — last-writer-wins, never torn: java.nio ATOMIC_MOVE on
+    * local paths (reaping the checksum sidecar the ChecksumFileSystem
+    * cannot see moved — an r11 review finding: one '.<tmp>.crc' orphan
+    * per write otherwise), OVERWRITE FileContext rename on HDFS. */
   private def writeAtomicReplace(spark: SparkSession, tableDir: String,
                                  name: String, body: String): Unit = {
     val fs = fsOf(spark, tableDir)
@@ -680,15 +635,11 @@ object TableManifest {
     }
   }
 
-  private def newestSnapshot(spark: SparkSession,
-                             tableDir: String): Option[(Long, Snapshot)] =
-    resolveHead(spark, tableDir).map(h => (h.seq, h.snap))
-
   /** The generations the newest manifest points at, if the table has
     * been published (one element until the first [[append]]). */
   def currentGenerations(spark: SparkSession,
                          tableDir: String): Seq[String] =
-    newestSnapshot(spark, tableDir).map(_._2.generations).getOrElse(Seq.empty)
+    resolveHead(spark, tableDir).map(_.snap.generations).getOrElse(Seq.empty)
 
   /** The single generation the newest manifest points at — the
     * pre-append API, kept for single-generation tables ([[publish]] /
@@ -710,7 +661,7 @@ object TableManifest {
     * watermark contract on [[rewriteBatch]]). */
   def lastBatchId(spark: SparkSession, tableDir: String,
                   writerId: String = DefaultWriter): Option[Long] =
-    newestSnapshot(spark, tableDir).flatMap(_._2.watermark(writerId))
+    resolveHead(spark, tableDir).flatMap(_.snap.watermark(writerId))
 
   /** The guaranteed-readable version window, ascending: the contiguous
     * HEAD suffix of the permanent manifest log whose data is still fully
@@ -1287,8 +1238,8 @@ object TableManifest {
     // bucket-locality holds only when the tags are hashed under the
     // live merge rule's own keys — a layout bucketed under other keys
     // surviving a fold must read whole
-    if (!snap.buckets.exists(b => snap.merge.exists(_.keys == b.keys)) ||
-        !snap.dataGens.forall(g => bucketOf(g).isDefined)) return None
+    if (!snap.buckets.exists(b => snap.merge.exists(_.keys == b.keys)))
+      return None
     val surviving = snap.dataGens.filter { g =>
       val gm = snap.meta(g)
       gm.files.exists(mayMatch(gm, _, statsCol, lo, hi))
@@ -1306,8 +1257,8 @@ object TableManifest {
     * writers racing for the same seq would both "succeed" and the first
     * commit's batches would vanish (this file's own concurrency spec
     * caught exactly that). Returns false when `dst` already exists (the
-    * CAS failure). Shared by the manifest commit and the checkpoint
-    * writer so both publications go through the same certified seam. */
+    * CAS failure). Shared by the manifest commit and the retention
+    * barrier so both publications go through the same certified seam. */
   private def publishImmutable(spark: SparkSession, tableDir: String,
                                dst: Path, body: String): Boolean = {
     val fs = fsOf(spark, tableDir)
@@ -1406,7 +1357,8 @@ object TableManifest {
     * construction: the seq was free), and reported as an ordinary CAS
     * loss, which makes the caller rebase onto the true head. A crash
     * inside the undo window leaves a phantom below-barrier manifest —
-    * unreachable as head (the listing takes the max seq) and reaped by
+    * unreachable as head ([[resolveHead]] probes up from a hint at or
+    * above the cut, or lists and takes the max seq) and reaped by
     * [[recover]]. */
   private[graft] def commitSnapshot(spark: SparkSession, tableDir: String,
                                     seq: Long, snapshot: Snapshot): Boolean = {
@@ -1457,8 +1409,8 @@ object TableManifest {
     *   4. a [[Commit]] publishes its snapshot, with the writer's
     *      watermark merged in, as version `head.seq + 1` through the CAS
     *      ([[commitSnapshot]]; a below-barrier win is undone and reads
-    *      as a loss) and a winner writes its checkpoint duty
-    *      ([[maybeCheckpoint]]);
+    *      as a loss) and a winner at an interval seq refreshes the head
+    *      hint ([[maybeRefreshHint]]);
     *   5. a win vacuums with keepGens = the head's generations ∪ the new
     *      ones — skipped when the generation set is unchanged
     *      (watermark and mapping commits supersede nothing); a loss
@@ -1470,12 +1422,13 @@ object TableManifest {
     *
     * A failure in the replay gate, the alignment or `next` is rethrown,
     * after reaping `staged`, when the head has not moved since the
-    * attempt resolved it — a refusal or a deterministic bug, which a
-    * retry would only bury under a "writer storm"; when the head moved,
-    * the failure is a plausibly-stale read and the attempt is retried. After `maxRetries + 1` attempts every
-    * staged generation is reaped and one writer-storm error is raised,
-    * chaining the last staging failure. Returns None exactly on a
-    * covered replay. */
+    * attempt resolved it ([[probeHeadFrom]] the attempt's head) — a
+    * refusal or a deterministic bug, which a retry would only bury under
+    * a "writer storm"; when the head moved, the failure is a
+    * plausibly-stale read and the attempt is retried. After
+    * `maxRetries + 1` attempts every staged generation is reaped and
+    * one writer-storm error is raised, chaining the last staging
+    * failure. Returns None exactly on a covered replay. */
   private[graft] def commitLoop[R](spark: SparkSession, verb: String,
                                    tableDir: String, maxRetries: Int,
                                    batch: Option[(String, Long)] = None,
@@ -1506,7 +1459,8 @@ object TableManifest {
           Some(next(head, gens))
         } catch {
           case scala.util.control.NonFatal(e) =>
-            if (resolveHead(spark, tableDir).map(_.seq).contains(head.seq)) {
+            if (probeHeadFrom(fsOf(spark, tableDir), tableDir, head.seq)
+                .exists(_._1 == head.seq)) {
               reap(gens)
               throw e
             }
@@ -1520,7 +1474,7 @@ object TableManifest {
           val committed =
             snap.copy(writers = mergeWriters(snap.writers, batch.toMap))
           if (commitSnapshot(spark, tableDir, head.seq + 1, committed)) {
-            maybeCheckpoint(spark, tableDir, head.seq + 1, committed)
+            maybeRefreshHint(spark, tableDir, head.seq + 1)
             if (committed.generations != head.snap.generations)
               vacuum(spark, tableDir, head.seq + 1,
                 keepGens = head.snap.generations.toSet ++ committed.generations,
@@ -1637,7 +1591,7 @@ object TableManifest {
     * nothing committed); a batch id BELOW the watermark fails loudly —
     * see the per-writer watermark contract on [[rewriteBatch]]. Head
     * resolution and the winner's vacuum probe direct seq paths from the
-    * checkpoint hint ([[resolveHead]]) — per-commit metadata cost is
+    * head hint ([[resolveHead]]) — per-commit metadata cost is
     * O(window), flat in table age, with writers live.
     *
     * Concurrency: rebase — appends commute, so a lost race re-commits
@@ -1954,10 +1908,12 @@ object TableManifest {
         "seq and resurrect them. Fold deletes first (rewrite() / " +
         "optimizeManifested), then upsert.")
     requireNoMapping(snap, tableDir, "upsertBucketed")
-    // migrate (one whole-table re-bucket) when any generation is
-    // untagged
-    val migrate = snap.generations.exists(g => bucketOf(g).isEmpty)
-    if (!migrate) snap.buckets.foreach(b => require(b.n == numBuckets,
+    // migrate (one whole-table re-bucket) when the manifest records no
+    // layout: only `buckets` vouches that every generation's tag was
+    // hashed under a known count and keys — tags alone outlive a commit
+    // under another count (upsertDelta drops the layout, not the tags)
+    val migrate = snap.buckets.isEmpty
+    snap.buckets.foreach(b => require(b.n == numBuckets,
       s"upsertBucketed: table at $tableDir is bucketed ${b.n}-way; " +
         s"refusing a $numBuckets-way upsert (stale rows would strand " +
         "in unread buckets). Re-bucket explicitly via rewrite() " +
@@ -1971,7 +1927,7 @@ object TableManifest {
     // pass found the post-fold shape: compactDeltas clears the merge
     // rule but keeps the layout, so the merge-rule equality check
     // alone cannot catch this)
-    if (!migrate) snap.buckets.foreach(b => require(b.keys == keyCols,
+    snap.buckets.foreach(b => require(b.keys == keyCols,
       s"upsertBucketed: table at $tableDir is bucketed by keys " +
         s"(${b.keys.mkString(",")}); refusing an upsert keyed " +
         s"(${keyCols.mkString(",")}) — stale rows would strand in " +
@@ -2098,11 +2054,9 @@ object TableManifest {
         // or bucket-locality consumers (prunedMergeBuckets, bounded
         // folds, point reads) would prune under a false assumption
         val layout = BucketLayout(numBuckets, keyCols)
-        val pure = snap.buckets.contains(layout) &&
-          snap.dataGens.forall(g => bucketOf(g).isDefined)
         val gens = snap.generations ++ movedGens
         Commit(snap.copy(generations = gens,
-          buckets = if (pure) Some(layout) else None,
+          buckets = snap.buckets.filter(_ == layout),
           meta = snap.meta ++ moved, merge = Some(spec),
           delete = deleteFor(gens, snap.delete)), movedGens, movedGens)
       }
@@ -2165,8 +2119,7 @@ object TableManifest {
       // witness that the tags were hashed under THIS call's keys (a
       // mismatched layout boots — the copy-on-write pass re-buckets the
       // whole table under the new keys once)
-      if (!snap.buckets.contains(layout) ||
-          !snap.generations.forall(g => bucketOf(g).isDefined))
+      if (!snap.buckets.contains(layout))
         bucketedStep(spark, tableDir, head, batch, keyCols, tsCol, tieCol,
           numBuckets, batchId.isDefined, touched)
       else {
@@ -2205,11 +2158,11 @@ object TableManifest {
     * the folded generation names, or None when there is nothing to
     * fold (idempotent — safe on the OPTIMIZE cadence).
     *
-    * A table in the degenerate MIXED state (deltas alongside untagged
-    * generations — an append landed on a merge-on-read table) folds
-    * through one whole-table [[rewrite]] instead, collapsing to a
-    * single plain generation; the next bucketed upsert re-buckets
-    * once.
+    * A table with no layout under the merge rule's keys (deltas
+    * alongside untagged generations — an append landed on a
+    * merge-on-read table) or with live tombstones folds through one
+    * whole-table [[rewrite]] instead, collapsing to a single plain
+    * generation; the next bucketed upsert re-buckets once.
     *
     * Concurrency: re-derive — the fold derives from the head, which is
     * the CAS base; watermarks carry forward untouched, so folding
@@ -2228,9 +2181,12 @@ object TableManifest {
       // fold never reads while the fold clears the rule that hid it
       // (same family as the pruning hazard a review pass found); a
       // layout under other keys folds whole-table instead (the
-      // transform input is already merge-applied via readSnapshot)
+      // transform input is already merge-applied via readSnapshot), and
+      // so do live tombstones: a bounded fold would re-commit deleted
+      // rows above the tombstone's seq, where the whole fold applies
+      // the delete rule first
       else if (!snap.buckets.exists(_.keys == spec.keys) ||
-          !snap.generations.forall(g => bucketOf(g).isDefined))
+          snap.tombstoneGens.nonEmpty)
         rewriteStep(spark, tableDir, head, None)(df => df)(g => Some(Seq(g)))
       else {
         val n = snap.buckets.get.n
@@ -3277,14 +3233,13 @@ object TableManifest {
     require(keyCols.nonEmpty, "readKeyBuckets: no key columns")
     retryOnce {
       val snap = headOf(spark, tableDir).snap
-      // the bucket check runs over DATA generations — tombstones are
-      // key rows read separately by the resolver, whatever their tag
+      // routing selects DATA generations — tombstones are key rows read
+      // separately by the resolver, whatever their tag
       val gens = snap.buckets match {
         // bucket routing is exact only when the layout is hashed under
         // this lookup's key columns — a mismatch reads the full set,
         // the same conservative rule as every other pruning site
-        case Some(BucketLayout(n, ks)) if ks == keyCols &&
-            snap.dataGens.forall(g => bucketOf(g).isDefined) =>
+        case Some(BucketLayout(n, ks)) if ks == keyCols =>
           val touched = touchedBuckets(keys, keyCols, n)
           snap.dataGens.filter(g => bucketOf(g).exists(touched))
         case _ => snap.dataGens // not purely bucketed: read everything
@@ -3498,8 +3453,11 @@ object TableManifest {
     * manifests are untouched, the log walkers
     * ([[versions]]/[[readVersion]]) treat a manifest deleted between
     * their listing and their open as the end of the retained window,
-    * and a hint-guided [[resolveHead]] racing the cut falls back to
-    * the listing (the hint is deleted first). A reader STALLED below
+    * and [[resolveHead]] racing the cut is sound by [[probeHeadFrom]]'s
+    * rule, because manifests are deleted as an ascending prefix: its
+    * start manifest still present after the probe's first miss means
+    * the probed head was the head at that instant, and a start manifest
+    * gone sends it to the listing. A reader STALLED below
     * the cut can still lose its generation set mid-read — the same
     * documented stalled-reader bound every pointer read carries.
     *
@@ -3531,30 +3489,11 @@ object TableManifest {
     // the old replace-file form let a lower write land after a higher
     // cut's verification, making freed seqs claimable again).
     raiseBarrier(spark, tableDir, cutSeq)
-    // ORDER MATTERS (an r11 review finding): drop the below-cut HINT
-    // and checkpoints BEFORE any manifest, so a hint-guided resolveHead
-    // racing this truncation can never probe into the gap and report a
-    // below-cut seq as head — its post-probe hint re-verify sees the
-    // hint gone and falls back to the listing, which only ever sees
-    // the kept suffix shrink toward the head.
-    val hint = new Path(root, HintFile)
-    if (fs.exists(hint) &&
-        """"seq"\s*:\s*(\d+)""".r
-          .findFirstMatchIn(readSmall(spark, hint))
-          .exists(_.group(1).toLong < cutSeq))
-      fs.delete(hint, false)
-    // checkpoints below the cut are caches of dropped state — reap them
-    // with the manifests they summarize (resolveHead falls back to the
-    // listing on the missing checkpoint; the next interval winner
-    // rewrites the hint)
-    fs.listStatus(root).foreach { e =>
-      val n = e.getPath.getName
-      if (e.isFile && n.startsWith(CheckpointPrefix) &&
-          n.endsWith(".json") &&
-          n.stripPrefix(CheckpointPrefix).stripSuffix(".json").toLong
-            < cutSeq)
-        fs.delete(e.getPath, false)
-    }
+    // drop a below-cut hint BEFORE any manifest: its start manifest is
+    // about to go, so resolutions list (the barrier now exists) until
+    // the next interval winner rewrites the hint above the cut
+    if (readHint(spark, fs, tableDir).exists(_ < cutSeq))
+      fs.delete(new Path(root, HintFile), false)
     drop.foreach { m =>
       // already gone = another truncation raced this one (a contract
       // violation the walk tolerates rather than crashes on)

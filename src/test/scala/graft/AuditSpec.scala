@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.Audit
 import graft.sources.TableCatalog
 
-class AuditSpec extends AnyFunSuite {
+class AuditSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -167,8 +167,7 @@ class AuditSpec extends AnyFunSuite {
   }
 
   test("partitioned write: reader prunes non-matching partitions at plan time") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_part").toString
+    val dir = tmpDir("graft_part")
     val df = Seq(
       ("2024-01-01", 1L, 10.0), ("2024-01-01", 2L, 20.0),
       ("2024-01-02", 3L, 30.0), ("2024-01-03", 4L, 40.0)

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.scalatest.funsuite.AnyFunSuite
@@ -14,12 +12,11 @@ import graft.ops.{CommitCertification, CommitPrimitive}
   * deliberately-broken check-then-act emulation is REJECTED by the same
   * harness (so "passes CommitCertification" is a real claim, not a
   * vacuous one). */
-class CommitPrimitiveSpec extends AnyFunSuite {
+class CommitPrimitiveSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
 
   private def scratch(prefix: String): (FileSystem, Configuration, String) = {
-    val dir = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), prefix).toString
+    val dir = tmpDir(prefix)
     val conf = spark.sessionState.newHadoopConf()
     (new Path(dir).getFileSystem(conf), conf, dir)
   }

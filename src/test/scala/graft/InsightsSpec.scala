@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.Insights
 
-class InsightsSpec extends AnyFunSuite {
+class InsightsSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -220,8 +220,7 @@ class InsightsSpec extends AnyFunSuite {
       ev(1, 1, "05"), ev(2, 2, "06"), ev(3, 3, "07"), // ISO week Jan 5-11
       ev(4, 1, "12"), ev(5, 4, "13") //  week Jan 12-18
     ).toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    val dir = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "cohort").toString
+    val dir = tmpDir("cohort")
     events.write.parquet(s"$dir/events.parquet")
     val out = graft.ops.Insights.q81CohortRetention(spark, dir)
       .select("week_offset", "n_active", "cohort_size", "retention_pct")

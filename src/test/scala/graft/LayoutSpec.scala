@@ -1,13 +1,11 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.Layout
 
-class LayoutSpec extends AnyFunSuite {
+class LayoutSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
 
   test("zorderKey2 interleaves bits (known values)") {
@@ -25,8 +23,7 @@ class LayoutSpec extends AnyFunSuite {
       .load(spark, "/root/testdata/sf0.01", "events")
       .select(col("user_id"),
         (hour(col("ts")) * 60 + minute(col("ts"))).cast("long").as("minute"))
-    val base = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "zorder").toString
+    val base = tmpDir("zorder")
 
     // user_id fits 8 bits, minute-of-day 11: MSB alignment is what makes
     // the narrow column cluster at all (see zorderKey2 doc)
@@ -57,8 +54,7 @@ class LayoutSpec extends AnyFunSuite {
 
   test("compact folds small files to the byte-target count, content intact") {
     import spark.implicits._
-    val base = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "compact").toString
+    val base = tmpDir("compact")
     val path = s"$base/t"
     val df = (1L to 10000L).map(i => (i, s"row $i")).toDF("id", "s")
     df.repartition(64).write.parquet(path)
@@ -76,8 +72,7 @@ class LayoutSpec extends AnyFunSuite {
 
   test("recoverSwap restores a target lost between swap renames") {
     import spark.implicits._
-    val base = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "swap").toString
+    val base = tmpDir("swap")
     val target = s"$base/t"
     Seq((1L, "history")).toDF("id", "v").write.parquet(target)
     val fs = new org.apache.hadoop.fs.Path(target)
@@ -179,8 +174,7 @@ class LayoutSpec extends AnyFunSuite {
   test("compactPartitioned: merges each partition's files per the plan " +
       "rule, preserves content exactly, stays hive-readable") {
     import spark.implicits._
-    val base = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "cmpex").toString
+    val base = tmpDir("cmpex")
     val tbl = s"$base/tbl"
     val df = (0 until 300)
       .map(i => (i.toLong, s"row_$i", if (i % 3 == 0) "x" else "y"))
@@ -229,8 +223,7 @@ class LayoutSpec extends AnyFunSuite {
   test("compactPartitioned: multi-level hive layout compacts per LEAF " +
       "dir, content intact, _SUCCESS preserved, crash-safety kept") {
     import spark.implicits._
-    val base = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "cmpml").toString
+    val base = tmpDir("cmpml")
     val tbl = s"$base/tbl"
     val df = (0 until 400)
       .map(i => (i.toLong, s"row_$i",
@@ -271,8 +264,7 @@ class LayoutSpec extends AnyFunSuite {
   test("compactPartitioned: refuses loose data files the rewrite would " +
       "drop (partition dir, root) and mixed dir/file layouts") {
     import spark.implicits._
-    val base = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "cmpguard").toString
+    val base = tmpDir("cmpguard")
     def freshTable(name: String): String = {
       val tbl = s"$base/$name"
       (0 until 50).map(i => (i.toLong, if (i % 2 == 0) "x" else "y"))
@@ -322,8 +314,7 @@ class LayoutSpec extends AnyFunSuite {
   test("compactPartitioned: independent group rewrites submit " +
       "CONCURRENTLY on the bounded pool") {
     import spark.implicits._
-    val base = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "cmppar").toString
+    val base = tmpDir("cmppar")
     val tbl = s"$base/tbl"
     (0 until 2000)
       .map(i => (i.toLong, s"payload_$i" * 8, s"p${i % 4}"))
@@ -355,8 +346,7 @@ class LayoutSpec extends AnyFunSuite {
     assume(Runtime.getRuntime.availableProcessors >= 8,
       "needs >=8 cores for a meaningful concurrency comparison")
     import spark.implicits._
-    val base = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "cmpwall").toString
+    val base = tmpDir("cmpwall")
     def freshTable(name: String): String = {
       val tbl = s"$base/$name"
       (0 until 4800)
@@ -394,8 +384,7 @@ class LayoutSpec extends AnyFunSuite {
       .filter(col("event_id") < 8000)
       .select(col("event_id"), col("ts"), col("user_id"),
         col("event_type"), col("value"))
-    val base = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "reclus").toString
+    val base = tmpDir("reclus")
     val tbl = s"$base/t"
     events.repartition(16).write.mode("overwrite").parquet(tbl)
 
@@ -444,8 +433,7 @@ class LayoutSpec extends AnyFunSuite {
       .filter(col("event_id") < 4000)
       .select(col("event_id"), col("user_id"),
         (col("event_id") % 3).cast("string").as("k"))
-    val base = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "fstats").toString
+    val base = tmpDir("fstats")
     val tbl = s"$base/t"
     events.withColumn("k", concat(lit("g"), col("k")))
       .repartition(4).write.partitionBy("k").mode("overwrite").parquet(tbl)
@@ -480,8 +468,7 @@ class LayoutSpec extends AnyFunSuite {
       "unclustered partition, rewrites it in place, leaves the " +
       "clustered one untouched") {
     import spark.implicits._
-    val base = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "worstp").toString
+    val base = tmpDir("worstp")
     val tbl = s"$base/t"
     val rows = (0 until 4096)
       .map(i => (i.toLong % 256L, (i.toLong * 2654435761L) % 256L,
@@ -552,8 +539,7 @@ class LayoutSpec extends AnyFunSuite {
       "(in-flight probe); pooled walk beats serial with injected " +
       "per-footer latency; multi-column rides ONE walk") {
     import spark.implicits._
-    val base = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "fpar").toString
+    val base = tmpDir("fpar")
     val tbl = s"$base/t"
     (0 until 4096).map(i => (i.toLong, i.toLong % 64L, s"g${i % 4}"))
       .toDF("id", "v", "k")
@@ -604,8 +590,7 @@ class LayoutSpec extends AnyFunSuite {
   test("reclusterZOrdered: wide long domains fail the width auto-fit " +
       "loudly with the rank-bucket remedy, table untouched") {
     import spark.implicits._
-    val base = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "wide").toString
+    val base = tmpDir("wide")
     val tbl = s"$base/t"
     // epoch-ms timestamps need ~41 bits — past the 31-bit interleave
     Seq((1700000000000L, 5L), (1700000001000L, 9L)).toDF("ts_ms", "b")
@@ -621,8 +606,7 @@ class LayoutSpec extends AnyFunSuite {
       "stale rewrite debris instead of compacting it as a partition — " +
       "while a partition VALUE merely containing '._' is data, kept") {
     import spark.implicits._
-    val base = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "cmpdebris").toString
+    val base = tmpDir("cmpdebris")
     val tbl = s"$base/tbl"
     (0 until 200).map(i => (i.toLong,
         Seq("x", "y", "v1._beta", "v1._beta")(i % 4)))
@@ -662,8 +646,7 @@ class LayoutSpec extends AnyFunSuite {
       "planner's EXACT rule (files_after == plan n_groups), preserving " +
       "content and the clustered layout — no shuffle") {
     import spark.implicits._
-    val base = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "cmpord").toString
+    val base = tmpDir("cmpord")
     val tbl = s"$base/t"
     // range-clustered 8 files: part-0 holds the lowest ids, part-7 the
     // highest — consecutive merges must keep ranges contiguous
@@ -710,8 +693,7 @@ class LayoutSpec extends AnyFunSuite {
       "clustered on keyA but SHREDDED on keyB that the single-key " +
       "audit misses") {
     import spark.implicits._
-    val base = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "twocol").toString
+    val base = tmpDir("twocol")
     val tbl = s"$base/t"
     val rows = (0 until 4096)
       .map(i => (i.toLong % 256L, (i.toLong * 2654435761L) % 256L,
@@ -761,8 +743,7 @@ class LayoutSpec extends AnyFunSuite {
       "/ skip per partition; content survives; healthy partition's " +
       "files untouched") {
     import spark.implicits._
-    val base = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "opt").toString
+    val base = tmpDir("opt")
     val tbl = s"$base/t"
     val rows = (0 until 6144)
       .map(i => (i.toLong % 256L, (i.toLong * 2654435761L) % 256L,
@@ -822,8 +803,7 @@ class LayoutSpec extends AnyFunSuite {
       .map(i => (i.toLong % 1024L, (i.toLong * 2654435761L) % 1024L,
         s"pay_$i"))
       .toDF("a", "b", "payload")
-    val base = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "prune").toString
+    val base = tmpDir("prune")
     Layout.writeZOrdered(df, s"$base/z", col("a"), col("b"),
       files = 64, bits = 10, aBits = 10, bBits = 10)
     df.repartition(64).write.mode("overwrite").parquet(s"$base/naive")

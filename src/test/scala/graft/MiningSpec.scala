@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.{Dedup, Mining, Multimodal}
 
-class MiningSpec extends AnyFunSuite {
+class MiningSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -409,8 +409,7 @@ class MiningSpec extends AnyFunSuite {
   }
 
   test("rewritePartitions replaces touched partitions, preserves the rest") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_rewrite").toString
+    val dir = tmpDir("graft_rewrite")
     val base = Seq(("d1", 1L), ("d1", 2L), ("d2", 3L), ("d3", 4L))
       .toDF("day", "id")
     graft.sources.TableCatalog

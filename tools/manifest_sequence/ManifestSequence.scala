@@ -7,7 +7,7 @@ import graft.ops.TableManifest
 /** One fixed sequence of every manifest verb on a fresh table under
   * args(0): the wire-form witness. Run it against two builds and diff
   * their normalized manifests (see manifest_sequence.sh). 19 commits, so
-  * one checkpoint and its hint are written too. */
+  * the head hint is written too (at seq 10). */
 object ManifestSequence {
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder().master("local[2]")

@@ -1,10 +1,12 @@
 #!/bin/bash
 # manifest_sequence.sh CLASSES OUT — run ManifestSequence (every manifest
 # verb once, 19 commits) against the engine classes in CLASSES on a fresh
-# table under OUT, and write the table's manifests, checkpoint and hint to
+# table under OUT, and write the table's manifests and head hint to
 # OUT/manifests.txt with generation and file uuids normalized, plus the
-# surviving entries of the table directory to OUT/listing.txt. Two builds
-# write the same wire form iff both files diff clean:
+# surviving entries of the table directory to OUT/listing.txt. A
+# _graft_checkpoint-* file, which older builds wrote, is included when
+# present, so a diff against such a build shows it. Two builds write the
+# same wire form iff both files diff clean:
 #   tools/manifest_sequence/manifest_sequence.sh parent/.bench_build/classes /tmp/a
 #   tools/manifest_sequence/manifest_sequence.sh .bench_build/classes /tmp/b
 #   diff /tmp/a/manifests.txt /tmp/b/manifests.txt
