@@ -937,7 +937,7 @@ object Audit {
           col("n_chars").cast("string")))
     // materialize BEFORE the rewrite: a lazy frame would re-read the
     // compacted files and vacuously match
-    val before = manifest(spark.read.parquet(fixture))
+    val before = manifest(TableCatalog.readParquet(spark, fixture))
       .select(col("part"), col("n_rows").as("rows_before"),
         col("checksum").as("sum_before"))
       .localCheckpoint(true)
@@ -945,7 +945,7 @@ object Audit {
       targetBytes = 512L * 1024)
       .select(substring_index(col("part_dir"), "=", -1).as("part"),
         col("files_before"), col("files_after"))
-    manifest(spark.read.parquet(fixture))
+    manifest(TableCatalog.readParquet(spark, fixture))
       .join(before, "part")
       .join(summary, "part")
       .select(col("part"), col("n_rows"),
@@ -992,7 +992,7 @@ object Audit {
           col("event_type")))
     def maxDepth(): Long =
       Layout.clusteringDepth(
-        spark.read.parquet(fixture)
+        TableCatalog.readParquet(spark, fixture)
           .groupBy(input_file_name().as("f"))
           .agg(min(col("user_id")).as("lo"), max(col("user_id")).as("hi"))
           .withColumn("part", lit("t")),
@@ -1000,7 +1000,7 @@ object Audit {
         .select(col("max_depth")).head.getLong(0)
     // materialize BEFORE the rewrite (q233's discipline: a lazy frame
     // would re-read the re-clustered files and vacuously match)
-    val before = manifest(spark.read.parquet(fixture))
+    val before = manifest(TableCatalog.readParquet(spark, fixture))
       .select(col("part"), col("n_rows").as("rows_before"),
         col("checksum").as("sum_before"))
       .localCheckpoint(true)
@@ -1009,7 +1009,7 @@ object Audit {
       (hour(col("ts")) * 60 + minute(col("ts"))).cast("long"),
       files = 16)
     val depthAfter = maxDepth()
-    manifest(spark.read.parquet(fixture))
+    manifest(TableCatalog.readParquet(spark, fixture))
       .join(before, "part")
       .select(col("part"), col("n_rows"),
         col("checksum").cast("string").as("checksum"),
@@ -1071,7 +1071,7 @@ object Audit {
       rows.toDF("part", depthAs)
     }
     // materialize BEFORE the rewrite (q233's discipline)
-    val before = manifest(spark.read.parquet(fixture))
+    val before = manifest(TableCatalog.readParquet(spark, fixture))
       .select(col("part"), col("n_rows").as("rows_before"),
         col("checksum").as("sum_before"))
       .localCheckpoint(true)
@@ -1093,7 +1093,7 @@ object Audit {
     val after = decodedDepths(
       Layout.footerClusteringDepth(spark, fixture, "user_id"),
       "depth_after")
-    manifest(spark.read.parquet(fixture))
+    manifest(TableCatalog.readParquet(spark, fixture))
       .join(before, "part").join(beforeDepth, "part").join(after, "part")
       .select(col("part"), col("n_rows"),
         col("checksum").cast("string").as("checksum"),
@@ -1161,7 +1161,7 @@ object Audit {
         .select(col("part_dir"), col("max_depth")).collect()
         .map(r => decode(r.getString(0)) -> r.getLong(1)).toMap
     // materialize BEFORE the rewrite (q233's discipline)
-    val before = manifest(spark.read.parquet(fixture))
+    val before = manifest(TableCatalog.readParquet(spark, fixture))
       .select(col("part"), col("n_rows").as("rows_before"),
         col("checksum").as("sum_before"))
       .localCheckpoint(true)
@@ -1186,7 +1186,7 @@ object Audit {
       }.toSeq
     import spark.implicits._
     val actDf = acts.toDF("part", "action", "action_ok")
-    manifest(spark.read.parquet(fixture))
+    manifest(TableCatalog.readParquet(spark, fixture))
       .join(before, "part").join(actDf, "part")
       .select(col("part"), col("n_rows"),
         col("checksum").cast("string").as("checksum"),

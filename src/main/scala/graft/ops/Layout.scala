@@ -5,6 +5,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.sources.TableCatalog
+
 /** Data-layout operators: multi-dimensional clustering for scan pruning.
   *
   * At 100 TB the cheapest query is the one that never reads the file:
@@ -90,7 +92,7 @@ object Layout {
     require(bytes > 0, s"compact: no parquet data found under $path")
     val files = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
     val tmp = new Path(p.getParent, p.getName + "._compacting")
-    spark.read.parquet(path)
+    TableCatalog.readParquet(spark, path)
       .repartition(files)
       .write.mode("overwrite").parquet(tmp.toString)
     swapInto(spark, tmp.toString, path)
@@ -138,7 +140,7 @@ object Layout {
     fs.delete(tmp, true)
     groups.zipWithIndex.foreach { case (paths, i) =>
       val gDir = new Path(tmp, s"_group_$i")
-      spark.read.parquet(paths.map(_.toString): _*)
+      TableCatalog.readParquet(spark, paths.map(_.toString): _*)
         .coalesce(1)
         .write.mode("overwrite").parquet(gDir.toString)
       val written = fs.listStatus(gDir)
@@ -198,7 +200,7 @@ object Layout {
     require(stray.isEmpty,
       s"reclusterZOrdered: $path holds non-parquet data files " +
         s"(${stray.head.getPath.getName}) the rewrite would drop — refusing")
-    val df = spark.read.parquet(path)
+    val df = TableCatalog.readParquet(spark, path)
     val (aw, bw) =
       if (aBits > 0 && bBits > 0) (aBits, bBits)
       else {
@@ -310,7 +312,26 @@ object Layout {
                               columns: Seq[String]): DataFrame =
     parquetColumnStatsImpl(spark, path, columns)
 
-  /** [[parquetColumnStats]] core. Footers are independent byte reads, so
+  /** [[parquetColumnStats]] core: [[parquetFooterStats]] as a frame. */
+  private[graft] def parquetColumnStatsImpl(
+      spark: SparkSession, path: String, columns: Seq[String],
+      maxConcurrent: Int = 16,
+      probe: Option[java.util.concurrent.atomic.AtomicInteger] = None,
+      readDelayMs: Long = 0L): DataFrame = {
+    import spark.implicits._
+    parquetFooterStats(spark, path, columns, maxConcurrent, probe,
+      readDelayMs).toDF("part_dir", "file", "row_group", "rows", "column",
+      "lo", "hi", "file_bytes")
+  }
+
+  /** One footer statistic: a (partition dir, file, row group, column)
+    * with its row count, numeric min/max and the file's byte size. */
+  private[graft] final case class FooterStat(
+      partDir: String, file: String, rowGroup: Int, rows: Long,
+      column: String, lo: Double, hi: Double, fileBytes: Long)
+
+  /** The footer walk behind [[parquetColumnStats]], as driver-side rows
+    * (no Spark job). Footers are independent byte reads, so
     * they fan out on a bounded driver pool (`maxConcurrent` threads —
     * the [[compactPartitionedImpl]] discipline): at a 100 TB table
     * (~1M files) a serial ms-per-footer driver loop is tens of minutes
@@ -320,12 +341,14 @@ object Layout {
     * through the indexed future list). `probe`/`readDelayMs` are the
     * concurrency contract's test seam: the probe accumulates the max
     * reads observed in flight, the injected delay makes the overlap
-    * deterministic to observe. */
-  private[graft] def parquetColumnStatsImpl(
+    * deterministic to observe. Each footer is read with Spark's
+    * `ParquetFooterReader`, about a tenth of the cost of opening the
+    * file through `ParquetFileReader.open`. */
+  private[graft] def parquetFooterStats(
       spark: SparkSession, path: String, columns: Seq[String],
       maxConcurrent: Int = 16,
       probe: Option[java.util.concurrent.atomic.AtomicInteger] = None,
-      readDelayMs: Long = 0L): DataFrame = {
+      readDelayMs: Long = 0L): Seq[FooterStat] = {
     import scala.jdk.CollectionConverters._
     require(columns.nonEmpty, "parquetColumnStats: no columns requested")
     require(maxConcurrent >= 1,
@@ -359,31 +382,32 @@ object Layout {
     }
     val inFlight = new java.util.concurrent.atomic.AtomicInteger(0)
     def readFooter(rel: String, f: org.apache.hadoop.fs.FileStatus)
-        : Seq[(String, String, Int, Long, String, Double, Double, Long)] = {
+        : Seq[FooterStat] = {
       val cur = inFlight.incrementAndGet()
       probe.foreach(_.accumulateAndGet(cur, (a: Int, b: Int) => math.max(a, b)))
       try {
         if (readDelayMs > 0) Thread.sleep(readDelayMs)
-        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf))
-        try {
-          reader.getFooter.getBlocks.asScala.toSeq.zipWithIndex.flatMap {
-            case (b, i) =>
-              columns.map { column =>
-                val cc = b.getColumns.asScala
-                  .find(_.getPath.toDotString == column)
-                  .getOrElse(throw new IllegalArgumentException(
-                    s"parquetColumnStats: column $column not in ${f.getPath}"))
-                val st = cc.getStatistics
-                require(st != null && st.hasNonNullValue,
-                  s"parquetColumnStats: no $column statistics in ${f.getPath} " +
-                    s"row group $i — written without stats?")
-                (rel, f.getPath.getName, i, b.getRowCount, column,
-                  num(column, st.genericGetMin), num(column, st.genericGetMax),
-                  f.getLen)
-              }
-          }
-        } finally reader.close()
+        val footer = org.apache.spark.sql.execution.datasources.parquet
+          .ParquetFooterReader.readFooter(
+            org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf),
+            org.apache.parquet.format.converter.ParquetMetadataConverter
+              .NO_FILTER)
+        footer.getBlocks.asScala.toSeq.zipWithIndex.flatMap {
+          case (b, i) =>
+            columns.map { column =>
+              val cc = b.getColumns.asScala
+                .find(_.getPath.toDotString == column)
+                .getOrElse(throw new IllegalArgumentException(
+                  s"parquetColumnStats: column $column not in ${f.getPath}"))
+              val st = cc.getStatistics
+              require(st != null && st.hasNonNullValue,
+                s"parquetColumnStats: no $column statistics in ${f.getPath} " +
+                  s"row group $i — written without stats?")
+              FooterStat(rel, f.getPath.getName, i, b.getRowCount, column,
+                num(column, st.genericGetMin), num(column, st.genericGetMax),
+                f.getLen)
+            }
+        }
       } finally inFlight.decrementAndGet()
     }
     val files = walk(p, "")
@@ -391,19 +415,15 @@ object Layout {
       math.min(maxConcurrent, math.max(1, files.size)))
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    val rows =
-      try {
-        val futures = files.map { case (rel, f) =>
-          scala.concurrent.Future(readFooter(rel, f))
-        }
-        // footer reads are pure (no Spark jobs, no filesystem mutation),
-        // so a failure just propagates — nothing to cancel or settle
-        futures.flatMap(f => scala.concurrent.Await.result(f,
-          scala.concurrent.duration.Duration.Inf))
-      } finally pool.shutdown()
-    import spark.implicits._
-    rows.toDF("part_dir", "file", "row_group", "rows", "column",
-      "lo", "hi", "file_bytes")
+    try {
+      val futures = files.map { case (rel, f) =>
+        scala.concurrent.Future(readFooter(rel, f))
+      }
+      // footer reads are pure (no Spark jobs, no filesystem mutation),
+      // so a failure just propagates — nothing to cancel or settle
+      futures.flatMap(f => scala.concurrent.Await.result(f,
+        scala.concurrent.duration.Duration.Inf))
+    } finally pool.shutdown()
   }
 
   /** Repair crashed swaps ANYWHERE under a tree: every `x._pre`
@@ -756,7 +776,7 @@ object Layout {
           math.max(a, b)))
         try {
           val gDir = new Path(tmp, s"${t.rel}/_group_${t.idx}")
-          spark.read.parquet(t.files.map(_.toString): _*)
+          TableCatalog.readParquet(spark, t.files.map(_.toString): _*)
             .coalesce(1)
             .write.mode("overwrite").parquet(gDir.toString)
           val written = fs.listStatus(gDir)

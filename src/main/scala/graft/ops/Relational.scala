@@ -265,7 +265,7 @@ object Relational {
   def q17CopyTable(spark: SparkSession, dir: String): DataFrame = {
     val dst = s"$scratch/q17_copy"
     t(spark, dir, "supplier").write.mode(SaveMode.Overwrite).parquet(dst)
-    spark.read.parquet(dst).orderBy("s_suppkey")
+    TableCatalog.readParquet(spark, dst).orderBy("s_suppkey")
   }
 
   // ---------------------------------------------------------------- q18
@@ -294,7 +294,7 @@ object Relational {
     val parts = math.min(8L, math.max(1L, rows / 10000L)).toInt
     val dst = s"$scratch/q19_repart"
     src.repartition(parts).write.mode(SaveMode.Overwrite).parquet(dst)
-    spark.read.parquet(dst)
+    TableCatalog.readParquet(spark, dst)
       .agg(count(lit(1)).as("rows_written"),
         countDistinct(col("o_orderkey")).as("distinct_keys"),
         dsum(col("o_totalprice")).as("total_price"))

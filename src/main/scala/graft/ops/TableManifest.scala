@@ -1026,9 +1026,10 @@ object TableManifest {
     * files) for names+sizes, the read schema `schemaJson` of the frame
     * just written ([[writtenSchemaJson]] — zero IO), plus — when
     * `statsCol` is declared — the per-FILE (min,max) from the parquet
-    * footers ([[Layout]]'s pooled walk, metadata reads, never a data
-    * scan). Numeric/date/timestamp columns only (parquet stats surface
-    * them as numbers: DATE = epoch days, TIMESTAMP = micros); a
+    * footers ([[Layout]]'s pooled walk, metadata reads on the driver,
+    * no Spark job and never a data scan). Numeric/date/timestamp
+    * columns only (parquet stats surface them as numbers: DATE = epoch
+    * days, TIMESTAMP = micros); a
     * non-numeric column fails loudly, as does a file with no non-null
     * value — the same contract as the layout tier's range audits. */
   private def collectGenMeta(spark: SparkSession, tableDir: String,
@@ -1043,13 +1044,16 @@ object TableManifest {
           files.map(f => FileMeta(f.getPath.getName, f.getLen, None, None)),
           schemaJson)
       case Some(c) =>
-        import org.apache.spark.sql.functions.{max, min}
-        val ranges = Layout.parquetColumnStatsImpl(
-            spark, s"$tableDir/$gen", Seq(c))
-          .groupBy("file")
-          .agg(min("lo").as("lo"), max("hi").as("hi"))
-          .collect() // one row per data file of ONE generation
-          .map(r => r.getString(0) -> ((r.getDouble(1), r.getDouble(2))))
+        // per-file (min, max) over the row groups, folded on the driver
+        // under Spark's double order (NaN above every number), so a NaN
+        // max is dropped below as a non-finite bound
+        val order = Ordering.Double.TotalOrdering
+        val ranges = Layout.parquetFooterStats(spark, s"$tableDir/$gen",
+            Seq(c))
+          .groupMapReduce(_.file)(s => (s.lo, s.hi)) {
+            case ((lo1, hi1), (lo2, hi2)) =>
+              (order.min(lo1, lo2), order.max(hi1, hi2))
+          }
           // a non-finite bound (±Infinity in a double column) would
           // render as an INVALID JSON token and brick every subsequent
           // manifest parse — record no range instead (the file is then
@@ -3510,7 +3514,8 @@ object TableManifest {
   /** Reconcile state after a crash: apply the retention rule (keep the
     * two newest manifests and the generations they reference) AND drop
     * future-seq orphans — generations and commit tmps a crashed commit
-    * left behind with no manifest. MUST run with no writer active (an
+    * left behind with no manifest — and the `_graft_checkpoint-*` files
+    * tables written by older versions still hold (nothing reads them). MUST run with no writer active (an
     * in-flight commit's uncommitted generation is indistinguishable
     * from a crashed one); readers are unaffected (the newest manifest
     * never changes here). */
@@ -3605,6 +3610,12 @@ object TableManifest {
       else if (e.isFile &&
           n.startsWith(".._manifest-") && n.endsWith(".tmp.crc"))
         fs.delete(e.getPath, false) // stranded checksum sidecars
+      else if (e.isFile && (
+          n.startsWith("_graft_checkpoint-") && n.endsWith(".json") ||
+          n.startsWith("._graft_checkpoint-") && n.endsWith(".json.crc")))
+        // checkpoint files (and sidecars) of tables written before
+        // commits stopped writing them: nothing reads them any more
+        fs.delete(e.getPath, false)
     }
   }
 }

@@ -14,10 +14,18 @@ import org.apache.spark.sql.types.LongType
   * matching the reference's inferred-schema stance
   * (/root/reference/utils/db_utils.py:76-80).
   *
-  * Scale note: `load` is a plain `spark.read.parquet`, so Catalyst predicate
-  * pushdown / column pruning / partition pruning all apply downstream. On a
-  * real cluster the directory is an object-store prefix; nothing here assumes
-  * local FS.
+  * Where the footer is read: every engine parquet read goes through
+  * [[readParquet]], Spark's parquet source with ONE change — the one
+  * footer a non-merging read takes its schema from is read on the driver
+  * ([[org.apache.spark.sql.graft.DriverFooterParquet]]), not in a
+  * one-task Spark job. A load therefore plans with no job at all; Spark
+  * still lists the files, raises the missing-path error, discovers
+  * partitions and plans the scan. No schema is cached or passed by hand.
+  *
+  * Scale note: `load` is a plain parquet directory read, so Catalyst
+  * predicate pushdown / column pruning / partition pruning all apply
+  * downstream. On a real cluster the directory is an object-store prefix;
+  * nothing here assumes local FS.
   */
 /** Where a table collection lives: Spark data-source format + location +
   * connection options. The parquet directory is the sandbox default;
@@ -57,14 +65,26 @@ object TableCatalog {
   val requiredConfigs: Map[String, String] =
     Map("spark.sql.legacy.parquet.nanosAsLong" -> "true")
 
-  /** Lazy scan of one table; schema from parquet footer.
+  /** Fully-qualified name of the engine's parquet source, for callers
+    * that need a `DataFrameReader` (options) rather than [[readParquet]]. */
+  val ParquetSource: String =
+    classOf[org.apache.spark.sql.graft.DriverFooterParquet].getName
+
+  /** `spark.read.parquet(paths: _*)` with the schema footer read on the
+    * driver: the same listing, errors, partition discovery and scan, and
+    * no Spark job to infer the schema (see the object doc). */
+  def readParquet(spark: SparkSession, paths: String*): DataFrame =
+    spark.read.format(ParquetSource).load(paths: _*)
+
+  /** Lazy scan of one table; schema from its parquet footer, read on
+    * the driver by [[readParquet]] — planning a load runs no Spark job.
     *
     * `events.ts` arrives as epoch-nanos long (see [[requiredConfigs]]) and
     * is normalized to TIMESTAMP_NTZ here. Integer `DIV` — not `/`, which
     * widens to double and loses precision above 2^53 — truncates nanos to
     * micros exactly like DuckDB's ns→µs cast, keeping the oracle aligned. */
   def load(spark: SparkSession, dir: String, table: String): DataFrame = {
-    val df = spark.read.parquet(path(dir, table))
+    val df = readParquet(spark, path(dir, table))
     if (table == "events" && df.schema("ts").dataType == LongType)
       df.withColumn("ts",
         expr("cast(timestamp_micros(ts div 1000) as timestamp_ntz)"))
@@ -74,12 +94,13 @@ object TableCatalog {
   /** Schema-evolution read: merge parquet footers across files written at
     * different schema versions — columns added later read as null for
     * older files. Spark leaves `mergeSchema` off by default because the
-    * footer merge costs a listing pass over every file; an evolving
-    * staging directory (the normal state of a long-lived ingest path)
-    * needs it explicitly. */
+    * footer merge reads every file's footer; an evolving staging
+    * directory (the normal state of a long-lived ingest path) needs it
+    * explicitly. With `mergeSchema` on, [[readParquet]]'s source defers
+    * to Spark's parallel footer merge (one job, one footer per file). */
   def loadEvolved(spark: SparkSession, dirPath: String): DataFrame =
-    spark.read.option("mergeSchema", "true")
-      .parquet(normalizeScheme(dirPath))
+    spark.read.format(ParquetSource).option("mergeSchema", "true")
+      .load(normalizeScheme(dirPath))
 
   /** Register every corpus table as a temp view so `spark.sql` works
     * (analogue of the reference's pushdown-SQL entry point,
@@ -92,9 +113,11 @@ object TableCatalog {
 
   /** Existence probe via schema read — mirrors the reference's
     * probe-by-schema (/root/reference/services/s3_service.py:79-94) without
-    * scanning data. */
+    * scanning data: one listing and one footer read on the driver, no
+    * Spark job. A missing path or a directory with no parquet file fails
+    * the read (Spark's `AnalysisException`), so the probe is false. */
   def exists(spark: SparkSession, dir: String, table: String): Boolean =
-    try { spark.read.parquet(path(dir, table)).schema; true }
+    try { readParquet(spark, path(dir, table)).schema; true }
     catch { case _: Exception => false }
 
   /** Overwrite-write (reference parquet stage,

@@ -1053,7 +1053,7 @@ object Streams {
         // or the "first batch" fallback below would rebuild from nothing
         graft.ops.Layout.recoverSwap(spark, snapshotDir)
         val existing =
-          try spark.read.parquet(snapshotDir)
+          try graft.sources.TableCatalog.readParquet(spark, snapshotDir)
           catch { case _: org.apache.spark.sql.AnalysisException =>
             spark.createDataFrame(
               spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],

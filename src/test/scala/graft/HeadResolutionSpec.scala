@@ -65,4 +65,33 @@ class HeadResolutionSpec extends AnyFunSuite with TempDirs {
     assert(opened == Seq("_graft_manifest-000005.json"),
       s"resolution opened $opened")
   }
+
+  test("recover reaps checkpoint files left by older writers and leaves " +
+      "the hint, the read and the history as they were") {
+    val t = table("headreap", 12)
+    val conf = spark.sessionState.newHadoopConf()
+    val fs = new Path(t).getFileSystem(conf)
+    val checkpoint = new Path(t, "_graft_checkpoint-000010.json")
+    val sidecar = new Path(t, "._graft_checkpoint-000010.json.crc")
+    org.apache.hadoop.fs.FileUtil.copy(fs,
+      new Path(t, "_graft_manifest-000010.json"), fs, checkpoint, false,
+      true, conf)
+    val out = fs.create(sidecar)
+    try out.write(Array[Byte](1, 2, 3)) finally out.close()
+    val hint = new Path(t, "_graft_last_checkpoint")
+    def bytes(p: Path): Seq[Byte] = {
+      val in = fs.open(p)
+      try in.readAllBytes().toSeq finally in.close()
+    }
+    def state() = (
+      TableManifest.read(spark, t).collect().map(_.toString).sorted.toSeq,
+      TableManifest.history(spark, t).collect().map(_.toString).toSeq)
+    val hintBefore = bytes(hint)
+    val before = state()
+    TableManifest.recover(spark, t)
+    assert(!fs.exists(checkpoint) && !fs.exists(sidecar))
+    assert(bytes(hint) == hintBefore)
+    assert(state() == before)
+    assert(before._1.size == 12)
+  }
 }
