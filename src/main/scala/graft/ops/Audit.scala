@@ -1943,15 +1943,16 @@ object Audit {
 
   // --------------------------------------------------------------- q254
   /** q254 entry: manifest-to-manifest CDC RELAY
-    * ([[graft.ops.TableManifest.relayOnce]]) — manifested tables as
-    * stream INPUTS, closing the loop with the manifested sinks: each
-    * poll delivers exactly the source versions committed since the
-    * cursor, and the cursor lives in the DESTINATION's per-writer
-    * watermark (batch id = source head version), so the relay needs no
-    * external checkpoint — a restart with zero state resumes exactly
-    * where the destination manifest says. Three event slices land on
-    * the source across two polls (the second poll covers TWO source
-    * versions in one destination commit); `relay_exact` asserts the
+    * ([[graft.ops.TableManifest.relayChanges]] over an append-only
+    * source) — manifested tables as stream INPUTS, closing the loop
+    * with the manifested sinks: each poll delivers exactly the source
+    * versions committed since the cursor, one destination commit per
+    * source version, and the cursor lives in the DESTINATION's
+    * per-writer watermark (batch id = source version), so the relay
+    * needs no external checkpoint — a restart with zero state resumes
+    * exactly where the destination manifest says. Three event slices
+    * land on the source across two polls (the second poll covers TWO
+    * source versions); `relay_exact` asserts the
     * idempotence and cursor claims (an at-head re-poll commits
     * nothing; the destination watermark equals the source head) and
     * `resync_loud` that a maintenance rewrite on the source surfaces
@@ -1973,19 +1974,19 @@ object Audit {
     TableManifest.publish(spark, src, ev.limit(0).coalesce(1))
     TableManifest.publish(spark, dst, TableManifest.read(spark, src))
     TableManifest.append(spark, src, slice(0, 2000), Some(0L))
-    TableManifest.relayOnce(spark, src, dst)
+    TableManifest.relayChanges(spark, src, dst)
     TableManifest.append(spark, src, slice(2000, 4000), Some(1L))
     TableManifest.append(spark, src, slice(4000, 6000), Some(2L))
-    val c1 = TableManifest.relayOnce(spark, src, dst)
+    val c1 = TableManifest.relayChanges(spark, src, dst)
     val vDst = TableManifest.versions(spark, dst).last
-    val c2 = TableManifest.relayOnce(spark, src, dst) // at-head re-poll
+    val c2 = TableManifest.relayChanges(spark, src, dst) // at-head re-poll
     val relayExact = c1 == c2 &&
       TableManifest.versions(spark, dst).last == vDst &&
       TableManifest.lastBatchId(spark, dst, "relay")
         .contains(TableManifest.versions(spark, src).last)
     TableManifest.rewrite(spark, src)(df => df)
     val resyncLoud =
-      try { TableManifest.relayOnce(spark, src, dst); false }
+      try { TableManifest.relayChanges(spark, src, dst); false }
       catch { case e: IllegalStateException =>
         e.getMessage.toLowerCase.contains("resync") }
     partitionChecksums(TableManifest.read(spark, dst), col("event_type"),
@@ -2144,7 +2145,7 @@ object Audit {
   /** q257 entry: the OP-CODED CDC changefeed relay
     * ([[graft.ops.TableManifest.relayChanges]] /
     * [[graft.ops.TableManifest.tailChangeBatches]]) — the r12 verdict's
-    * top item: the appends-only relay (q254) throws on the engine's own
+    * top item: the appends-only tail throws on the engine's own
     * newest table shapes; the changefeed instead CLASSIFIES each source
     * version (plain commit → insert, delta or merge-live commit →
     * upsert post-image, tombstone commit → delete) and mirrors it with
@@ -3222,8 +3223,8 @@ object Audit {
     // q254: manifest CDC relay — the destination must hold exactly the
     // relayed slices (a double-delivery fails counts AND checksums, a
     // dropped version fails counts); relay_exact/resync_loud are the
-    // engine's cursor and loudness claims, driven against a REAL
-    // streaming clock with a restart in TableManifestSpec
+    // engine's cursor and loudness claims; a restart through a REAL
+    // stream is driven in GraftManifestSourceSpec
     "q254_manifest_relay" ->
       """SELECT event_type, COUNT(*) AS n_rows,
         |       CAST(SUM(CAST(CAST(concat('0x', substr(md5(concat_ws(chr(1),

@@ -114,11 +114,17 @@ object TableCatalog {
   /** Existence probe via schema read — mirrors the reference's
     * probe-by-schema (/root/reference/services/s3_service.py:79-94) without
     * scanning data: one listing and one footer read on the driver, no
-    * Spark job. A missing path or a directory with no parquet file fails
-    * the read (Spark's `AnalysisException`), so the probe is false. */
+    * Spark job. A missing path answers false from one `exists` call,
+    * before Spark's read would log and throw; a directory with no
+    * parquet file fails the read (Spark's `AnalysisException`), so the
+    * probe is false there too. */
   def exists(spark: SparkSession, dir: String, table: String): Boolean =
-    try { readParquet(spark, path(dir, table)).schema; true }
-    catch { case _: Exception => false }
+    try {
+      val p = path(dir, table)
+      val hp = new org.apache.hadoop.fs.Path(p)
+      hp.getFileSystem(spark.sessionState.newHadoopConf()).exists(hp) &&
+        { readParquet(spark, p).schema; true }
+    } catch { case _: Exception => false }
 
   /** Overwrite-write (reference parquet stage,
     * /root/reference/services/s3_service.py:26-54) with scheme
@@ -281,6 +287,15 @@ object TableCatalog {
         s"TableCatalog: '$name' is not a registered manifested table " +
           s"in this session (registered: ${tables.keySet()})"))
     graft.ops.TableManifest.read(spark, dir).createOrReplaceTempView(name)
+  }
+
+  /** Drop a [[registerManifested]] name and its view from this
+    * session, so later [[sqlManifested]] calls stop re-resolving it —
+    * for a caller about to delete the table directory. */
+  private[graft] def unregisterManifested(spark: SparkSession,
+                                          name: String): Unit = {
+    sessionTables(spark).remove(name)
+    spark.catalog.dropTempView(name)
   }
 
   /** Run SQL with every manifested view registered IN THIS SESSION

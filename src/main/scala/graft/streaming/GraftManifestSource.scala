@@ -10,18 +10,16 @@ import org.apache.spark.sql.types.StructType
 import graft.ops.TableManifest
 
 /** `readStream.format("graft-manifest").load(tableDir)` — manifested
-  * tables as FIRST-CLASS Structured Streaming sources, closing the r12
-  * verdict's last gap: [[graft.ops.TableManifest.relayStream]] schedules
-  * polls off a rate ticker with the cursor living in the destination
-  * watermark, which works but composes with nothing — engine
-  * checkpoints, `StreamingQueryProgress` metrics, `trigger
-  * AvailableNow`, joins/aggregations over the stream all want a REAL
-  * source whose offsets the engine owns. Here the offset IS the
-  * manifest version: `latest = resolveHead().seq`, and a micro-batch
-  * `(start, end]` is the generation-set diff between two RETAINED
-  * versions ([[graft.ops.TableManifest.appendsBetween]]) — O(new data)
-  * per trigger, replay-stable after a restart because the diff is
-  * pinned at `end`, not at the live head.
+  * tables as FIRST-CLASS Structured Streaming sources, whose offsets
+  * the engine owns: engine checkpoints, `StreamingQueryProgress`
+  * metrics, `trigger AvailableNow`, and joins/aggregations over the
+  * stream all compose with it. The offset IS the manifest version:
+  * `latest = resolveHead().seq`, and a micro-batch `(start, end]` is
+  * the rows the versions in that range appended, read off the same
+  * change walk the op-coded changefeed reads
+  * ([[graft.ops.TableManifest.appendsBetween]]) — O(new data) per
+  * trigger, replay-stable after a restart because the walk is pinned
+  * at `end`, not at the live head.
   *
   * Exactly-once: the engine persists `(start, end]` in ITS checkpoint
   * and re-offers the same range after a crash; `appendsBetween`
@@ -32,11 +30,11 @@ import graft.ops.TableManifest
   * exactly-once with NO source-side state beyond the manifest log.
   *
   * LOUD, never lossy: a maintenance rewrite / compaction / CoW upsert
-  * on the source, row deletes, merge-on-read deltas, or a truncation
-  * that ate the checkpointed version all surface as a STREAM ERROR
-  * from the next micro-batch (the [[graft.ops.TableManifest.tailAppends]]
-  * contracts) — an appends-only stream must never silently drop or
-  * double-deliver.
+  * / partition drop on the source, row deletes, merge-on-read deltas,
+  * a column mapping, or a truncation that ate the checkpointed version
+  * all surface as a STREAM ERROR from the next micro-batch (the
+  * [[graft.ops.TableManifest.tailAppends]] contracts) — an
+  * appends-only stream must never silently drop or double-deliver.
   *
   * CHANGEFEED MODE (`.option("changefeed", "true")`): for sources
   * that MUTATE — merge-on-read upserts, row deletes — the micro-batch

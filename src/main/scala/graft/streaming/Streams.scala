@@ -1027,50 +1027,6 @@ object Streams {
       graft.ops.TrainingData.nbPredictColumn(model,
         wordTokens(col(textCol))).as("pred"))
 
-  /** Streaming CDC upsert materialization: maintain a parquet snapshot
-    * holding the LATEST row per key as change events stream in — the
-    * foreachBatch pattern for "Delta-style" upserts on plain parquet.
-    * Each micro-batch merges into the snapshot via
-    * [[graft.ops.Temporal.latestSnapshot]] (total-order winner per key,
-    * so late/duplicate deliveries resolve deterministically) and swaps
-    * the result in with [[graft.ops.Layout.swapInto]] (crash-safe double
-    * rename; a failed batch is re-run from the stream checkpoint against
-    * the intact previous snapshot — the merge is idempotent, so
-    * at-least-once batch execution still yields exactly the latest rows).
-    * At scale, partition the snapshot by a key bucket and rewrite only
-    * touched partitions; the merge-and-swap contract is unchanged. */
-  def upsertSnapshotSink(updates: DataFrame, keyCols: Seq[String],
-                         tsCol: String, tieCol: String, snapshotDir: String,
-                         checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    updates.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val spark = batch.sparkSession
-        // a swap that crashed between its renames leaves the snapshot dir
-        // missing with the data parked at ._pre — repair BEFORE reading,
-        // or the "first batch" fallback below would rebuild from nothing
-        graft.ops.Layout.recoverSwap(spark, snapshotDir)
-        val existing =
-          try graft.sources.TableCatalog.readParquet(spark, snapshotDir)
-          catch { case _: org.apache.spark.sql.AnalysisException =>
-            spark.createDataFrame(
-              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-              batch.schema)
-          }
-        val merged = graft.ops.Temporal.latestSnapshot(
-          existing.unionByName(batch.toDF()), keyCols, tsCol, tieCol)
-        // sibling path via Path (string concat breaks on a trailing slash,
-        // nesting tmp INSIDE the target it is about to replace)
-        val snapPath = new org.apache.hadoop.fs.Path(snapshotDir)
-        val tmp = new org.apache.hadoop.fs.Path(snapPath.getParent,
-          snapPath.getName + "._merging").toString
-        merged.write.mode("overwrite").parquet(tmp)
-        graft.ops.Layout.swapInto(spark, tmp, snapshotDir)
-      }
-      .start()
-
   /** Stream-static enrichment: join an event stream against a static
     * (batch) dimension table. Stream-static equijoins are stateless in
     * Structured Streaming — each micro-batch joins against the dim as-of

@@ -6,12 +6,17 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import org.apache.hadoop.fs.{FSDataInputStream, FileStatus, FilterFileSystem, FutureDataInputStreamBuilder, LocatedFileStatus, Path, RawLocalFileSystem, RemoteIterator}
 
 /** The local filesystem under its own scheme (`countfs:///abs/path`),
-  * recording the path of every listing and every open — so a spec can
-  * read a table written through `file:` and assert which directories
-  * the read listed and which files it opened. Register it in a
-  * session's Hadoop conf with [[CountingFileSystem.register]]. */
+  * recording the path of every listing, every open and every status
+  * call (`exists` is one) — so a spec can read a table written through
+  * `file:` and assert which directories the read listed and which files
+  * it opened. Register it in a session's Hadoop conf with
+  * [[CountingFileSystem.register]]. */
 class CountingFileSystem extends FilterFileSystem(new CountingFileSystem.Raw) {
-  import CountingFileSystem.{listed, opened}
+  import CountingFileSystem.{listed, opened, statted}
+
+  override def getFileStatus(f: Path): FileStatus = {
+    statted.add(f.toString); super.getFileStatus(f)
+  }
 
   override def listStatus(f: Path): Array[FileStatus] = {
     listed.add(f.toString); super.listStatus(f)
@@ -40,8 +45,9 @@ object CountingFileSystem {
 
   val listed = new ConcurrentLinkedQueue[String]()
   val opened = new ConcurrentLinkedQueue[String]()
+  val statted = new ConcurrentLinkedQueue[String]()
 
-  def reset(): Unit = { listed.clear(); opened.clear() }
+  def reset(): Unit = { listed.clear(); opened.clear(); statted.clear() }
 
   /** `dir` (an absolute local path) under the counting scheme. */
   def path(dir: String): String = s"$Scheme://$dir"

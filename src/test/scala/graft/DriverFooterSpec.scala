@@ -158,6 +158,17 @@ class DriverFooterSpec extends AnyFunSuite with TempDirs {
       assert(!TableCatalog.exists(spark, root, t), t))
   }
 
+  test("exists on a missing table answers from one status call, with no " +
+      "listing and no open") {
+    CountingFileSystem.register(spark)
+    val root = CountingFileSystem.path(tmpDir("dfexists"))
+    CountingFileSystem.reset()
+    assert(!TableCatalog.exists(spark, root, "missing"))
+    assert(CountingFileSystem.listed.isEmpty, CountingFileSystem.listed)
+    assert(CountingFileSystem.opened.isEmpty, CountingFileSystem.opened)
+    assert(CountingFileSystem.statted.size == 1, CountingFileSystem.statted)
+  }
+
   test("a second full_etl runs 14 Spark jobs") {
     val reg = Jobs.builtinRegistry(tmpDir("dfetl"))
     val cfg = Jobs.JobConfig("df", "full_etl", "full_etl", "2026-01-01",

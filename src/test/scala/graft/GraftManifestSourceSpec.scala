@@ -86,6 +86,34 @@ class GraftManifestSourceSpec extends AnyFunSuite with TempDirs {
       rootChain(e).mkString(" | "))
   }
 
+  test("the appends source over a column-mapped table surfaces a stream " +
+      "ERROR, not rows under stale physical names") {
+    val tbl = tmpDir("msrcmap") + "/t"
+    val ckpt = tmpDir("msrcmapckpt")
+    TableManifest.publish(spark, tbl, rows(0 until 0, "seed"))
+    TableManifest.append(spark, tbl, rows(0 until 5, "a"))
+    def run(): Unit = {
+      val q = spark.readStream.format("graft-manifest").load(tbl)
+        .writeStream
+        .option("checkpointLocation", ckpt)
+        .foreachBatch { (_: DataFrame, _: Long) => () }
+        .start()
+      try { q.processAllAvailable(); q.stop() }
+      catch { case e: Throwable => q.stop(); throw e }
+    }
+    run()
+    TableManifest.enableColumnMapping(spark, tbl)
+    TableManifest.renameColumn(spark, tbl, "tag", "label")
+    TableManifest.append(spark, tbl,
+      rows(5 until 8, "b").withColumnRenamed("tag", "label"))
+    val e = intercept[Exception] { run() }
+    def rootChain(t: Throwable): Seq[String] =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+        .map(x => Option(x.getMessage).getOrElse("")).toSeq
+    assert(rootChain(e).exists(_.contains("COLUMN MAPPING")),
+      rootChain(e).mkString(" | "))
+  }
+
   test("changefeed mode streams merge-on-read upserts and row deletes " +
       "as op-coded rows, exactly-once across a checkpoint restart; " +
       "rewrites still surface as a stream error") {

@@ -4,6 +4,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.ops.TableManifest
 import graft.streaming.Streams
 
 class StreamingSpec extends AnyFunSuite with TempDirs {
@@ -110,8 +111,13 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[Streams.Event]
     val dir = tmpDir("upsert")
-    val q = Streams.upsertSnapshotSink(input.toDF(), Seq("user_id"), "ts",
-      "event_id", s"$dir/snapshot", s"$dir/ckpt")
+    val snapshot = s"$dir/snapshot"
+    TableManifest.publish(spark, snapshot, Seq.empty[Streams.Event].toDF())
+    val q = input.toDF().writeStream
+      .option("checkpointLocation", s"$dir/ckpt")
+      .foreachBatch(TableManifest.upsertSink(snapshot, Seq("user_id"), "ts",
+        "event_id"))
+      .start()
     try {
       input.addData(
         Streams.Event(1L, ts(0), 10L, "state_a", 1.0),
@@ -122,10 +128,10 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
         Streams.Event(3L, ts(5), 10L, "state_b", 3.0),
         Streams.Event(2L, ts(1), 20L, "state_x", 2.0))
       q.processAllAvailable()
-      val snap = spark.read.parquet(s"$dir/snapshot")
+      val snap = TableManifest.read(spark, snapshot)
         .select("user_id", "event_type").as[(Long, String)].collect().toMap
       assert(snap == Map(10L -> "state_b", 20L -> "state_x"), snap.toString)
-      assert(spark.read.parquet(s"$dir/snapshot").count() == 2,
+      assert(TableManifest.read(spark, snapshot).count() == 2,
         "duplicate delivery must not duplicate snapshot rows")
     } finally q.stop()
   }

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -13,12 +11,18 @@ import graft.ops.TableManifest
   * bucket-granular pruning under a live merge rule, metadata-only
   * partition drops, transform partitioning, type widening under column
   * mapping, and the SQL DML command surface. */
-class TableManifestChangefeedSpec extends AnyFunSuite {
+class TableManifestChangefeedSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
 
-  private def tmpTable(prefix: String): String =
-    Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), prefix).toString + "/t"
+  private def tmpTable(prefix: String): String = tmpDir(prefix) + "/t"
+
+  // the shared session's manifested-table registry outlives the suite,
+  // and sqlManifested re-reads every registered table: drop this suite's
+  // names before its table directories go
+  override protected def afterAll(): Unit =
+    try Seq("dml_t", "dmlv_t").foreach(graft.sources.TableCatalog
+      .unregisterManifested(spark, _))
+    finally super.afterAll()
 
   private def rows(ids: Range, ts: Long, tag: String): DataFrame = {
     import spark.implicits._

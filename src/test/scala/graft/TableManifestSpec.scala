@@ -1,18 +1,22 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.TableManifest
 
-class TableManifestSpec extends AnyFunSuite {
+class TableManifestSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
 
-  private def tmpTable(prefix: String): String =
-    Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), prefix).toString + "/t"
+  private def tmpTable(prefix: String): String = tmpDir(prefix) + "/t"
+
+  // the shared session's manifested-table registry outlives the suite,
+  // and sqlManifested re-reads every registered table: drop this suite's
+  // names before its table directories go
+  override protected def afterAll(): Unit =
+    try Seq("manif_sql_t", "manif_scoped_t").foreach(graft.sources.TableCatalog
+      .unregisterManifested(spark, _))
+    finally super.afterAll()
 
   test("publish/read round-trips; rewrite advances the pointer and " +
       "retains exactly the previous generation; direct reads of the " +
@@ -303,8 +307,7 @@ class TableManifestSpec extends AnyFunSuite {
   test("streamingSink is exactly-once under a REAL foreachBatch replay: " +
       "re-offering the last batch after a torn checkpoint commits nothing") {
     import spark.implicits._
-    val base = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "manifsink").toString
+    val base = tmpDir("manifsink")
     val in = s"$base/in"; val tbl = s"$base/t"; val ckpt = s"$base/ckpt"
     new java.io.File(in).mkdirs()
     def writeInput(name: String, from: Int, n: Int): Unit =
@@ -380,8 +383,7 @@ class TableManifestSpec extends AnyFunSuite {
       "manifest, exactly-once under a REAL torn-checkpoint replay, with " +
       "the superseded snapshot still time-travel-readable") {
     import spark.implicits._
-    val base = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "manifup").toString
+    val base = tmpDir("manifup")
     val in = s"$base/in"; val tbl = s"$base/t"; val ckpt = s"$base/ckpt"
     new java.io.File(in).mkdirs()
     def writeInput(name: String, rows: Seq[(Long, Long, String)]): Unit =
@@ -831,51 +833,29 @@ class TableManifestSpec extends AnyFunSuite {
     // boot: seed the destination with the source's current content,
     // then relay covers everything after
     TableManifest.publish(spark, dst, TableManifest.read(spark, src))
-    assert(TableManifest.relayOnce(spark, src, dst) ==
+    assert(TableManifest.relayChanges(spark, src, dst) ==
       TableManifest.versions(spark, src).last)
     assert(TableManifest.read(spark, dst).count() == 10)
     TableManifest.append(spark, src, rows(10 until 20), Some(0L))
-    TableManifest.relayOnce(spark, src, dst)
+    TableManifest.relayChanges(spark, src, dst)
     assert(TableManifest.read(spark, dst).count() == 20)
     // idempotent: a re-poll (crash-restart with no state) is a no-op
     val vDst = TableManifest.versions(spark, dst).last
-    TableManifest.relayOnce(spark, src, dst)
+    TableManifest.relayChanges(spark, src, dst)
     assert(TableManifest.versions(spark, dst).last == vDst,
       "an at-head relay poll must commit nothing")
     // one poll covers MULTIPLE source versions
     TableManifest.append(spark, src, rows(20 until 30), Some(1L))
     TableManifest.append(spark, src, rows(30 until 40), Some(2L))
-    TableManifest.relayOnce(spark, src, dst)
+    TableManifest.relayChanges(spark, src, dst)
     assert(TableManifest.read(spark, dst).count() == 40)
     assert(TableManifest.lastBatchId(spark, dst, "relay")
       .contains(TableManifest.versions(spark, src).last),
       "the cursor must ride the destination watermark")
-    // REAL streaming clock, with a RESTART between appends: the second
-    // query shares nothing with the first but the destination manifest
-    def awaitCount(n: Long): Unit = {
-      val deadline = System.nanoTime + 30L * 1000 * 1000 * 1000
-      while (TableManifest.read(spark, dst).count() != n &&
-          System.nanoTime < deadline) Thread.sleep(200)
-      assert(TableManifest.read(spark, dst).count() == n,
-        s"relay stream did not converge to $n rows")
-    }
-    val q1 = TableManifest.relayStream(spark, src, dst, intervalMs = 200L)
-    try {
-      TableManifest.append(spark, src, rows(40 until 50), Some(3L))
-      awaitCount(50)
-    } finally q1.stop()
-    val q2 = TableManifest.relayStream(spark, src, dst, intervalMs = 200L)
-    try {
-      TableManifest.append(spark, src, rows(50 until 60), Some(4L))
-      awaitCount(60)
-    } finally q2.stop()
-    assert(TableManifest.read(spark, dst)
-      .select("id").distinct().count() == 60,
-      "restart or replay double-delivered rows")
     // maintenance on the source surfaces the loud resync error
     TableManifest.rewrite(spark, src)(df => df)
     val resync = intercept[IllegalStateException] {
-      TableManifest.relayOnce(spark, src, dst)
+      TableManifest.relayChanges(spark, src, dst)
     }
     assert(resync.getMessage.toLowerCase.contains("resync"),
       resync.getMessage)
@@ -1072,8 +1052,7 @@ class TableManifestSpec extends AnyFunSuite {
       "generations (every base carried by name), the replay skips " +
       "outright, and reads stay merged across batches") {
     import spark.implicits._
-    val base = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "manifdsink").toString
+    val base = tmpDir("manifdsink")
     val in = s"$base/in"; val tbl = s"$base/t"; val ckpt = s"$base/ckpt"
     new java.io.File(in).mkdirs()
     def writeInput(name: String, rows: Seq[(Long, Long, String)]): Unit =
@@ -1121,8 +1100,7 @@ class TableManifestSpec extends AnyFunSuite {
   test("upsertSinkBucketed is exactly-once under a REAL torn-checkpoint " +
       "replay, and each micro-batch rewrites only its touched buckets") {
     import spark.implicits._
-    val base = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "manifbsink").toString
+    val base = tmpDir("manifbsink")
     val in = s"$base/in"; val tbl = s"$base/t"; val ckpt = s"$base/ckpt"
     new java.io.File(in).mkdirs()
     def writeInput(name: String, rows: Seq[(Long, Long, String)]): Unit =
@@ -1412,6 +1390,41 @@ class TableManifestSpec extends AnyFunSuite {
       truncated.getMessage)
   }
 
+  test("tailAppends refuses what the changefeed refuses: a column-mapped " +
+      "table, and a window that drops a partition it appended") {
+    import spark.implicits._
+    val tbl = tmpTable("maniftailmap")
+    def batch(tag: String, from: Int, n: Int) =
+      (from until from + n).map(i => (i.toLong, tag)).toDF("id", "tag")
+    TableManifest.publish(spark, tbl, batch("seed", 0, 10))
+    TableManifest.append(spark, tbl, batch("a", 100, 5))
+    val v = TableManifest.versions(spark, tbl).last
+    TableManifest.enableColumnMapping(spark, tbl)
+    TableManifest.renameColumn(spark, tbl, "tag", "label")
+    TableManifest.append(spark, tbl,
+      batch("b", 200, 5).withColumnRenamed("tag", "label"))
+    // the tail reads physical files: after the rename they still name
+    // the column `tag`, so delivering them would hand out stale names
+    val mapped = intercept[IllegalStateException] {
+      TableManifest.tailAppends(spark, tbl, v)
+    }
+    assert(mapped.getMessage.contains("COLUMN MAPPING"), mapped.getMessage)
+    // a partition appended and dropped inside one window: the endpoints
+    // alone show no removed generation, the walk sees the drop
+    val part = tmpTable("maniftailpart")
+    TableManifest.publish(spark, part,
+      Seq((0L, "seed")).toDF("id", "etype").limit(0))
+    val v0 = TableManifest.versions(spark, part).last
+    TableManifest.appendPartitioned(spark, part,
+      Seq((1L, "click"), (2L, "click")).toDF("id", "etype"), "etype")
+    assert(TableManifest.dropPartitions(spark, part, "etype",
+      Seq("click")).exists(_.nonEmpty))
+    val dropped = intercept[IllegalStateException] {
+      TableManifest.tailAppends(spark, part, v0)
+    }
+    assert(dropped.getMessage.contains("REWRITTEN"), dropped.getMessage)
+  }
+
   test("history() renders the retained commit log from metadata alone; " +
       "read(mergeSchema=true) unions an evolving append's schema with " +
       "NULL backfill for pre-evolution generations") {
@@ -1487,8 +1500,7 @@ class TableManifestSpec extends AnyFunSuite {
       "REBUILT checkpoint (ids restart at 0) fails LOUDLY instead of " +
       "silently skipping; a fresh writerId is the recovery") {
     import spark.implicits._
-    val base = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "manifmw").toString
+    val base = tmpDir("manifmw")
     val tbl = s"$base/t"
     val schema = "id BIGINT, src STRING"
     new java.io.File(s"$base/inA").mkdirs()
